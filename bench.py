@@ -267,12 +267,43 @@ HEADLINE = [
 #: per row (dataframe_to_kafka.py:102,138) → 2 rows/s
 REFERENCE_PRODUCER_ROWS_PER_SEC = 2.0
 
-GOLDEN_CSV = "/root/reference/merged_sensor_data_grouped.csv"
-GOLDEN_SCHEMA = (
-    "event_ts_min timestamp, ts_min_bignt long, room string, "
-    "timestamp double, co2 double, light double, temp double, "
-    "humidity double, pir double"
+#: the KETI-scale golden replay: per-(room, minute) readings of 51 rooms
+#: from 2013-08-23 00:00 UTC, generated in-process from a fixed seed
+REPLAY_ROWS = 34_890
+REPLAY_ROOMS = 51
+REPLAY_SEED = 20130823
+REPLAY_START_EPOCH = 1377216000
+REPLAY_DDL = (
+    "room string, timestamp double, co2 double, light double, "
+    "temp double, humidity double, pir double"
 )
+
+
+def replay_frame(spark):
+    """The golden replay's shape (rows, rooms, one reading per room and
+    minute, five metrics) with seeded values, so the throughput headline
+    needs no input file."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(REPLAY_SEED)
+    k = np.arange(REPLAY_ROWS)
+    pdf = pd.DataFrame(
+        {
+            "room": (400 + k % REPLAY_ROOMS).astype(str),
+            "timestamp": (
+                REPLAY_START_EPOCH
+                + 60 * (k // REPLAY_ROOMS)
+                + rng.uniform(0, 60, REPLAY_ROWS)
+            ),
+            "co2": rng.normal(450.0, 80.0, REPLAY_ROWS),
+            "light": rng.uniform(0.0, 300.0, REPLAY_ROWS),
+            "temp": rng.normal(23.0, 2.0, REPLAY_ROWS),
+            "humidity": rng.normal(50.0, 5.0, REPLAY_ROWS),
+            "pir": rng.poisson(3.0, REPLAY_ROWS).astype(float),
+        }
+    )
+    return spark.createDataFrame(pdf, REPLAY_DDL)
 
 
 def wire_replay(spark) -> dict:
@@ -293,30 +324,18 @@ def wire_replay(spark) -> dict:
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.functions import (
         codecs,
     )
-    from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.sources import (
-        readers,
-    )
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.sources.es_wire_sink import (
         EsBulkWireDataSource,
     )
 
-    if not os.path.exists(GOLDEN_CSV):
-        return {}
     spark.dataSource.register(EsBulkWireDataSource)
-    cols = ["room", "timestamp", "co2", "light", "temp", "humidity", "pir"]
-    src = readers.read_delimited(
-        spark, GOLDEN_CSV, schema=GOLDEN_SCHEMA
-    ).select(*cols)
+    src = replay_frame(spark)
     n_rows = src.count()  # warms the scan; the timed run re-reads
     out = tempfile.mkdtemp(prefix="wire_replay_")
     try:
         t0 = time.perf_counter()
         wire = codecs.encode_for_kafka(src, key_col="room", wire_format="json")
-        ddl = (
-            "room string, timestamp double, co2 double, light double, "
-            "temp double, humidity double, pir double"
-        )
-        decoded = codecs.decode_kafka_value(wire, ddl, wire_format="json")
+        decoded = codecs.decode_kafka_value(wire, REPLAY_DDL, wire_format="json")
         rolled = decoded.groupBy(
             "room",
             F.date_trunc(

@@ -28,6 +28,7 @@ failed job never leaves half a payload looking publishable.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import re
@@ -48,6 +49,15 @@ class _Staged(WriterCommitMessage):
 
 
 _PATTERN = re.compile(r"\{([^{}]+)\}")
+
+
+def _json_value(v):
+    """Dates and timestamps as ISO-8601, the form Elasticsearch's dynamic
+    date detection (`strict_date_optional_time`) maps as `date`; str()
+    would write `2013-08-23 23:04:00`, which ES maps as text."""
+    if isinstance(v, datetime.date):
+        return v.isoformat()
+    return str(v)
 
 
 def _resolve_index(pattern: str, row: dict) -> str:
@@ -98,7 +108,7 @@ class EsBulkWireWriter(DataSourceWriter):
                     action["_id"] = str(doc[self.mapping_id])
                 f.write(json.dumps({"index": action}, sort_keys=True))
                 f.write("\n")
-                f.write(json.dumps(doc, sort_keys=True, default=str))
+                f.write(json.dumps(doc, sort_keys=True, default=_json_value))
                 f.write("\n")
         return _Staged(tmp_path=tmp)
 

@@ -4,7 +4,9 @@ ES/Kibana monitoring role; here the engine records its own progress).
 
 ProgressRecorder is a StreamingQueryListener that captures each
 micro-batch's QueryProgressEvent: rows in, processing rate, batch
-duration, and stateful-operator state sizes. Metrics accumulate
+duration, stateful-operator state sizes, and the ``durationMs`` phases
+that split the trigger into offset lookup, write-ahead log, planning,
+the batch's own jobs and the offset commit. Metrics accumulate
 driver-side (they are tiny — one row per micro-batch) and convert to a
 DataFrame for the same analytics/dashboard operators every other table
 gets; at production scale, write that frame through any engine sink
@@ -18,9 +20,19 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+#: ``durationMs`` keys, recorded as ``<key>_ms`` columns in this order
+PHASES = (
+    "addBatch",
+    "queryPlanning",
+    "latestOffset",
+    "walCommit",
+    "commitOffsets",
+    "triggerExecution",
+)
 PROGRESS_SCHEMA = (
     "query_name string, batch_id long, num_input_rows long, "
-    "process_rate double, duration_ms long, state_rows long"
+    "process_rate double, duration_ms long, state_rows long, "
+    + ", ".join(f"{ph}_ms long" for ph in PHASES)
 )
 
 
@@ -40,6 +52,7 @@ class ProgressRecorder(StreamingQueryListener):
         state_rows = sum(
             int(s.get("numRowsTotal", 0)) for s in p.get("stateOperators", [])
         )
+        phases = p.get("durationMs", {})
         self.records.append(
             (
                 p.get("name"),
@@ -48,6 +61,8 @@ class ProgressRecorder(StreamingQueryListener):
                 float(p.get("processedRowsPerSecond", 0.0) or 0.0),
                 int(p.get("batchDuration", 0)),
                 state_rows,
+                # a phase the trigger skipped (no new data) is absent: null
+                *(phases.get(ph) for ph in PHASES),
             )
         )
 

@@ -29,7 +29,10 @@ def spark():
         shuffle_partitions=4,
         extra_conf={
             # bucketed-table tests saveAsTable into a throwaway warehouse
-            "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="test_warehouse_")
+            "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="test_warehouse_"),
+            # a caller's own worker PYTHONPATH, which get_spark() must keep
+            # beside its start-up hook (test_worker_site)
+            "spark.executorEnv.PYTHONPATH": tempfile.mkdtemp(prefix="test_worker_path_"),
         },
     )
     yield s

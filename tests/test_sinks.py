@@ -65,8 +65,10 @@ def test_kafka_stream_writer_builds(spark, tmp_dir):
 def test_es_bulk_wire_writer_payload_and_routing(spark, tmp_dir):
     """The es_bulk_wire DataSource writer must emit a valid _bulk
     payload: alternating action/doc NDJSON lines, S9 dynamic index
-    routing from the {room} pattern, S8 keyed _id from mapping_id, and
-    tmp files published only on commit (none left behind)."""
+    routing from the {room} pattern, S8 keyed _id from mapping_id,
+    timestamps and dates as ISO-8601 (what ES date detection maps as
+    `date`), and tmp files published only on commit (none left behind)."""
+    import datetime
     import glob
     import json
 
@@ -76,8 +78,14 @@ def test_es_bulk_wire_writer_payload_and_routing(spark, tmp_dir):
 
     spark.dataSource.register(EsBulkWireDataSource)
     df = spark.createDataFrame(
-        [("413", 612.0), ("656", 480.5), ("413", 620.0)],
-        "room string, co2 double",
+        [
+            ("413", 612.0, "2013-08-23 23:04:00"),
+            ("656", 480.5, "2013-08-23 23:05:30.25"),
+            ("413", 620.0, "2013-08-24 00:00:00"),
+        ],
+        "room string, co2 double, ts string",
+    ).selectExpr(
+        "room", "co2", "CAST(ts AS TIMESTAMP) AS window_start", "CAST(ts AS DATE) AS day"
     ).coalesce(2)
     out = f"{tmp_dir}/bulk"
     (
@@ -102,6 +110,13 @@ def test_es_bulk_wire_writer_payload_and_routing(spark, tmp_dir):
         assert a["index"]["_id"] == d["room"]
     assert {d["room"] for d in docs} == {"413", "656"}
     assert sum(1 for d in docs if d["room"] == "413") == 2
+    want = {r.co2: (r.window_start, r.day) for r in df.collect()}
+    for d in docs:
+        assert d["window_start"][10] == "T", d
+        assert (
+            datetime.datetime.fromisoformat(d["window_start"]),
+            datetime.date.fromisoformat(d["day"]),
+        ) == want[d["co2"]]
 
 
 def test_es_bulk_wire_overwrite_replaces_prior_payload(spark, tmp_dir):

@@ -560,10 +560,12 @@ def test_dedup_ingest_sink_flags_cross_batch_near_dup(spark, tmp_dir):
 
 def test_progress_recorder_captures_micro_batch_metrics(spark, tmp_dir):
     """The listener must record per-micro-batch rows/duration/state
-    metrics and expose them as an aggregable DataFrame."""
+    metrics and the durationMs phases, and expose them as an aggregable
+    DataFrame."""
     import time
 
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.streaming.monitor import (
+        PHASES,
         ProgressRecorder,
     )
 
@@ -593,6 +595,16 @@ def test_progress_recorder_captures_micro_batch_metrics(spark, tmp_dir):
     got = rows[name]
     assert got[2] == 2          # num_input_rows
     assert got[5] >= 2          # stateful agg kept >= 2 window-state rows
+    # the trigger's durationMs phases, each an int, none longer than the
+    # trigger itself
+    phases = dict(zip(PHASES, got[6:]))
+    assert all(isinstance(v, int) and v >= 0 for v in phases.values()), phases
+    assert max(phases.values()) == phases["triggerExecution"]
+    frame = rec.frame(spark)
+    assert frame.columns[6:] == [f"{ph}_ms" for ph in PHASES]
+    assert frame.where(f"query_name = '{name}' AND num_input_rows > 0").first()[
+        "addBatch_ms"
+    ] == phases["addBatch"]
     summary = {
         r.query_name: r for r in rec.summary(spark).collect() if r.query_name == name
     }
