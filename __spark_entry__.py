@@ -26,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.fsutil import materialize, source_stats
 from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.functions import (
     codecs,
     text as textf,
@@ -766,7 +767,7 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
     Keyed by the source fingerprint (r12 verdict nit on the sibling
     _QSIG_CACHE): a regenerated embeddings.parquet mid-process must
     not serve a stale vector."""
-    key = f"{sf_dir}:{_source_fingerprint(f'{sf_dir}/embeddings.parquet')}"
+    key = f"{sf_dir}:{source_stats([f'{sf_dir}/embeddings.parquet'])}"
     if key not in _QVEC_CACHE:
         emb = _t(spark, sf_dir, "embeddings")
         _QVEC_CACHE[key] = list(
@@ -788,21 +789,24 @@ def q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is MEASURED (tools/ann_recall.py; grid in PLANS.md): 0.91 at
     2.7% scan on clustered embeddings (multiprobe=2), floor-pinned in
     tests/test_similarity.py."""
-    import tempfile
-
-    emb = _t(spark, sf_dir, "embeddings")
     qvec = _query_vec(spark, sf_dir)
     planes = similarity.make_planes(dim=len(qvec), n_planes=6, seed=42)
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    index_path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_lsh_index_{sf_tag}"
-    )
-    fp = _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-    if not _artifact_ready(index_path, fp):
-        similarity.build_lsh_index(emb, planes, index_path)
-        _mark_artifact(index_path, fp)
     return similarity.lsh_topk_from_index(
-        spark, index_path, qvec, planes, k=10, multiprobe=2
+        spark, _lsh_index(spark, sf_dir, planes), qvec, planes, k=10,
+        multiprobe=2,
+    )
+
+
+def _lsh_index(spark: SparkSession, sf_dir: str, planes) -> str:
+    """The persisted bucket-partitioned LSH index over the embeddings,
+    shared by q_lsh_ann_topk and q_lsh_bulk_topk; every bucket is a sign
+    pattern against THESE planes, so they are part of its key."""
+    return materialize(
+        "lsh_index", sf_dir, [f"{sf_dir}/embeddings.parquet"],
+        {"planes": planes},
+        lambda p: similarity.build_lsh_index(
+            _t(spark, sf_dir, "embeddings"), planes, p
+        ),
     )
 
 
@@ -926,7 +930,7 @@ def q_multi_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled), exact global top-k over the tiny candidate set. The
     4-vector query matrix is a driver-side fetch, like _query_vec."""
     emb = _t(spark, sf_dir, "embeddings")
-    key = f"{sf_dir}:{_source_fingerprint(f'{sf_dir}/embeddings.parquet')}"
+    key = f"{sf_dir}:{source_stats([f'{sf_dir}/embeddings.parquet'])}"
     if key not in _QMAT_CACHE:
         qrows = (
             emb.filter(F.col("vec_id") < 4)
@@ -1047,27 +1051,17 @@ def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     PLANS.md): 1.00 from nprobe=1 on clustered embeddings, 0.83 at
     nprobe=8 on the near-random sf corpus; floor-pinned in
     tests/test_similarity.py."""
-    import tempfile
-
     emb = _t(spark, sf_dir, "embeddings")
     qvec = _query_vec(spark, sf_dir)
     cents = similarity.train_ivf_centroids(emb, n_centroids=16, seed=42)
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    index_path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ivf_index_{sf_tag}"
-    )
-    import hashlib
-
     # cell assignments are argmins against THESE centroids — the sample
     # behind them can shift with partition layout, so they are part of
-    # the artifact identity (see q_pq_ann_topk)
-    fp = (
-        _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-        + ":" + hashlib.md5(cents.tobytes()).hexdigest()
+    # the artifact key (see q_pq_ann_topk)
+    index_path = materialize(
+        "ivf_index", sf_dir, [f"{sf_dir}/embeddings.parquet"],
+        {"cents": cents},
+        lambda p: similarity.build_ivf_index(emb, cents, p),
     )
-    if not _artifact_ready(index_path, fp):
-        similarity.build_ivf_index(emb, cents, index_path)
-        _mark_artifact(index_path, fp)
     return similarity.ivf_topk_from_index(
         spark, index_path, qvec, cents, k=10, nprobe=3
     )
@@ -1100,27 +1094,16 @@ def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     float vectors — ADC shortlist of 100 over the code table, exact
     cosine re-rank only on the broadcast shortlist. Recall@10 vs the
     exact oracle is MEASURED (tests/test_similarity.py; PLANS.md)."""
-    import tempfile
-
     emb = _t(spark, sf_dir, "embeddings")
     qvec = _query_vec(spark, sf_dir)
     cb = similarity.train_pq_codebooks(emb, m=8, k=16, seed=42)
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    index_path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_pq_index_{sf_tag}"
-    )
-    import hashlib
-
     # the cached codes are argmin assignments AGAINST these codebooks —
     # a stale index with fresh codebooks would rank garbage, so the
-    # codebook bytes are part of the artifact identity
-    fp = (
-        _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-        + ":" + hashlib.md5(cb.tobytes()).hexdigest()
+    # codebook bytes are part of the artifact key
+    index_path = materialize(
+        "pq_index", sf_dir, [f"{sf_dir}/embeddings.parquet"], {"cb": cb},
+        lambda p: similarity.build_pq_index(emb, cb, p),
     )
-    if not _artifact_ready(index_path, fp):
-        similarity.build_pq_index(emb, cb, index_path)
-        _mark_artifact(index_path, fp)
     return similarity.pq_topk_from_index(
         spark, index_path, emb, qvec, cb, k=10, shortlist=100
     )
@@ -1133,28 +1116,17 @@ def q_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions of 8-byte codes, ADC shortlists, exact cosine re-ranks.
     Multiplicative savings — the 100 TB index recipe. Recall pinned in
     tests/test_similarity.py (≥0.9 clustered at nprobe=2)."""
-    import tempfile
-
     emb = _t(spark, sf_dir, "embeddings")
     qvec = _query_vec(spark, sf_dir)
     cents = similarity.train_ivf_centroids(emb, n_centroids=16, seed=42)
     cb = similarity.train_pq_codebooks(emb, m=8, k=16, seed=42)
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    index_path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ivfpq_index_{sf_tag}"
-    )
-    import hashlib
-
     # cells + codes are assignments against THESE centroids/codebooks;
-    # both belong to the artifact identity (see q_pq_ann_topk)
-    fp = (
-        _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-        + ":" + hashlib.md5(cents.tobytes()).hexdigest()
-        + ":" + hashlib.md5(cb.tobytes()).hexdigest()
+    # both belong to the artifact key (see q_pq_ann_topk)
+    index_path = materialize(
+        "ivfpq_index", sf_dir, [f"{sf_dir}/embeddings.parquet"],
+        {"cents": cents, "cb": cb},
+        lambda p: similarity.build_ivfpq_index(emb, cents, cb, p),
     )
-    if not _artifact_ready(index_path, fp):
-        similarity.build_ivfpq_index(emb, cents, cb, index_path)
-        _mark_artifact(index_path, fp)
     return similarity.ivfpq_topk(
         spark, index_path, emb, qvec, cents, cb, k=10, nprobe=4,
         shortlist=100,
@@ -1317,62 +1289,15 @@ def q_variant_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _materialized_path(sf_dir: str, tag: str) -> str:
-    """Stable temp path for a per-sf_dir materialized artifact (index,
-    format-converted copy); `_SUCCESS` marks a completed write."""
-    import tempfile
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"spark_graft_{tag}_{sf_tag}")
-
-
-def _source_fingerprint(*paths: str) -> str:
-    """Digest of source files' (path, size, mtime) — cheap staleness key
-    for cached artifacts. The driver regenerates /root/testdata between
-    rounds; an artifact built from the old corpus must NOT be served
-    against the new one (the oracle reads the live parquet)."""
-    import hashlib
-
-    h = hashlib.sha256()
-    for p in sorted(paths):
-        if os.path.isdir(p):
-            walk = sorted(
-                os.path.join(r, fn)
-                for r, _, fs in os.walk(p)
-                for fn in fs
-            )
-        else:
-            walk = [p]
-        for fp in walk:
-            st = os.stat(fp)
-            h.update(f"{fp}|{st.st_size}|{st.st_mtime_ns}".encode())
-    return h.hexdigest()
-
-
-def _artifact_ready(path: str, fingerprint: str) -> bool:
-    fp_file = os.path.join(path, "_FINGERPRINT")
-    if not (os.path.exists(os.path.join(path, "_SUCCESS"))
-            and os.path.exists(fp_file)):
-        return False
-    with open(fp_file) as f:
-        return f.read() == fingerprint
-
-
-def _mark_artifact(path: str, fingerprint: str) -> None:
-    with open(os.path.join(path, "_FINGERPRINT"), "w") as f:
-        f.write(fingerprint)
-
-
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Source-format breadth (§2.1 S4 family): customer → ORC (the other
     mainstream columnar format; splittable, predicate-pushdown-capable)
     → read back → aggregate. The oracle runs on the original parquet, so
     a hash match proves the ORC write/read path is lossless."""
-    path = _materialized_path(sf_dir, "orc_customer")
-    fp = _source_fingerprint(f"{sf_dir}/customer.parquet")
-    if not _artifact_ready(path, fp):
-        _t(spark, sf_dir, "customer").write.mode("overwrite").orc(path)
-        _mark_artifact(path, fp)
+    path = materialize(
+        "orc_customer", sf_dir, [f"{sf_dir}/customer.parquet"], {},
+        lambda p: _t(spark, sf_dir, "customer").write.mode("overwrite").orc(p),
+    )
     c = spark.read.orc(path)
     return c.groupBy("c_mktsegment").agg(
         F.count("*").alias("n"),
@@ -1549,9 +1474,10 @@ def q_sensor_tree_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         SensorTreeDataSource,
     )
 
-    path = _materialized_path(sf_dir, "sensor_tree")
-    fp = _source_fingerprint(f"{sf_dir}/events.parquet")
-    if not _artifact_ready(path, fp):
+    def build(path: str) -> None:
+        import glob
+        import shutil
+
         ev = _t(spark, sf_dir, "events").select(
             F.col("event_type").alias("room"),
             _epoch_sec(F.col("ts")).alias("epoch"),
@@ -1573,13 +1499,13 @@ def q_sensor_tree_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             staging = os.path.join(rdir, "__csv_staging")
             part.coalesce(1).write.mode("overwrite").text(staging)
-            import glob as _glob
-            import shutil as _shutil
-
-            src = _glob.glob(os.path.join(staging, "part-*"))[0]
+            src = glob.glob(os.path.join(staging, "part-*"))[0]
             os.replace(src, os.path.join(rdir, "value.csv"))
-            _shutil.rmtree(staging)
-        _mark_artifact(path, fp)
+            shutil.rmtree(staging)
+
+    path = materialize(
+        "sensor_tree", sf_dir, [f"{sf_dir}/events.parquet"], {}, build
+    )
     spark.dataSource.register(SensorTreeDataSource)
     tree = (
         spark.read.format("sensor_tree")
@@ -1603,13 +1529,12 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire): orders → .json lines → read back with an EXPLICIT schema (never
     inferSchema: one pass, stable types) → aggregate. Doubles survive the
     text roundtrip exactly (Spark emits shortest-repr decimals)."""
-    path = _materialized_path(sf_dir, "jsonl_orders")
-    fp = _source_fingerprint(f"{sf_dir}/orders.parquet")
-    if not _artifact_ready(path, fp):
-        _t(spark, sf_dir, "orders").select(
+    path = materialize(
+        "jsonl_orders", sf_dir, [f"{sf_dir}/orders.parquet"], {},
+        lambda p: _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
-        ).write.mode("overwrite").json(path)
-        _mark_artifact(path, fp)
+        ).write.mode("overwrite").json(p),
+    )
     schema = (
         "o_orderkey BIGINT, o_orderstatus STRING, "
         "o_orderpriority STRING, o_totalprice DOUBLE"
@@ -1629,13 +1554,12 @@ def q_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted in tests/test_plans.py). This is the 100 TB layout move:
     time/dim-partitioned landing tables make every downstream
     status/date-scoped query touch a fraction of the files."""
-    path = _materialized_path(sf_dir, "part_orders")
-    fp = _source_fingerprint(f"{sf_dir}/orders.parquet")
-    if not _artifact_ready(path, fp):
-        sinks.write_partitioned_parquet(
-            _t(spark, sf_dir, "orders"), path, ["o_orderstatus"]
-        )
-        _mark_artifact(path, fp)
+    path = materialize(
+        "part_orders", sf_dir, [f"{sf_dir}/orders.parquet"], {},
+        lambda p: sinks.write_partitioned_parquet(
+            _t(spark, sf_dir, "orders"), p, ["o_orderstatus"]
+        ),
+    )
     o = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
     return o.groupBy("o_orderpriority").agg(
         F.count("*").alias("n"),
@@ -1651,13 +1575,11 @@ def q_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the newest day. The oracle is a plain full-table GROUP BY, so a
     hash match proves history ∪ tail is exactly the full rollup."""
     ev = _t(spark, sf_dir, "events")
-    path = _materialized_path(sf_dir, "cagg_minute")
-    agg = rollup.ensure_materialized(
-        spark,
-        ev,
-        path,
-        source_fingerprint=_source_fingerprint(f"{sf_dir}/events.parquet"),
+    path = materialize(
+        "cagg_minute", sf_dir, [f"{sf_dir}/events.parquet"], {},
+        lambda p: rollup.ensure_materialized(spark, ev, p),
     )
+    agg = rollup.ensure_materialized(spark, ev, path)
     return agg.select(
         "minute",
         "event_type",
@@ -2086,9 +2008,9 @@ def _sentinel_rows(kind: str, sentinel_ts) -> list[dict]:
 
 def _staged_events_dir(
     spark: SparkSession, sf_dir: str, kind: str = "plain", table: str = "events"
-) -> tuple[str, object, str]:
+) -> tuple[str, object]:
     """Shared file-stream staging (r9, VERDICT r8 #4): returns
-    (stage_dir, batch_schema, ts_type) for a symlink dir over
+    (stage_dir, batch_schema) for a symlink dir over
     `{sf_dir}/{table}.parquet`, with an in-band far-future watermark
     sentinel appended for kind 'wm1' (single __wm__ row) or 'wm2'
     (click+purchase pair). Two costs disappear vs per-query staging:
@@ -2109,13 +2031,7 @@ def _staged_events_dir(
 
     src = f"{sf_dir}/{table}.parquet"
     st = os.stat(src)
-    # key includes the session confs that shape the cached batch_schema
-    # / ts_type (nanosAsLong flips ts between bigint and timestamp): a
-    # caller reading under one conf must never be served a schema
-    # cached under another (r9 advice — latent until two callers share
-    # a (table, kind) across conf settings)
-    nanos_conf = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    key = (sf_dir, table, kind, int(st.st_mtime), st.st_size, nanos_conf)
+    key = (sf_dir, table, kind, int(st.st_mtime), st.st_size)
     hit = _STAGE_CACHE.get(key)
     if hit is not None and os.path.isdir(hit[0]):
         return hit
@@ -2124,28 +2040,17 @@ def _staged_events_dir(
     data_mtime = _stage_stream_files(stage, src, table)
     batch = spark.read.parquet(src)
     batch_schema = batch.schema
-    ts_type = (
-        batch_schema["ts"].dataType.simpleString()
-        if "ts" in batch_schema.fieldNames()
-        else ""
-    )
     if kind != "plain":
-        max_ts = batch.agg(F.max("ts")).collect()[0][0]
-        if ts_type == "bigint":  # raw nanos
-            sentinel_ts = int(max_ts) + 10 * 3600 * 10**9
-            pa_ts = pa.int64()
-        else:
-            import datetime as _dt
+        import datetime as _dt
 
-            sentinel_ts = max_ts + _dt.timedelta(hours=10)
-            pa_ts = pa.timestamp("us")
-        rows = _sentinel_rows(kind, sentinel_ts)
+        max_ts = batch.agg(F.max("ts")).collect()[0][0]
+        rows = _sentinel_rows(kind, max_ts + _dt.timedelta(hours=10))
         tbl = pa.table(
             {
                 "event_id": pa.array(
                     [r["event_id"] for r in rows], pa.int64()
                 ),
-                "ts": pa.array([r["ts"] for r in rows], pa_ts),
+                "ts": pa.array([r["ts"] for r in rows], pa.timestamp("us")),
                 "user_id": pa.array(
                     [r["user_id"] for r in rows], pa.int64()
                 ),
@@ -2161,7 +2066,7 @@ def _staged_events_dir(
         # mtime strictly after the staged data so the file source
         # (oldest-first) can never batch the sentinel ahead of it
         os.utime(sent_path, (data_mtime + 3600, data_mtime + 3600))
-    entry = (stage, batch_schema, ts_type)
+    entry = (stage, batch_schema)
     _STAGE_CACHE[key] = entry
     return entry
 
@@ -2208,9 +2113,7 @@ def _run_event_stream_query(
             active.stop()
     spark.catalog.dropTempView(name)
 
-    # session-independence: same confs read_table sets (raw ts is
-    # TIMESTAMP(NANOS) parquet → read as long, convert to micros below)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # session-independence: the same UTC pin read_table sets
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     # stateful streaming allocates one state-store partition per shuffle
@@ -2223,14 +2126,11 @@ def _run_event_stream_query(
         # bounded replay: 1.3s vs 1.8s at 32). Size this ≈ micro-batch
         # volume / healthy-partition size in production, not per-core.
         spark.conf.set("spark.sql.shuffle.partitions", "8")
-        stage, batch_schema, ts_type = _staged_events_dir(spark, sf_dir)
+        stage, batch_schema = _staged_events_dir(spark, sf_dir)
         stream = readers.file_stream(spark, stage, batch_schema)
-        # normalize ts to TIMESTAMP (LTZ, session=UTC) whatever the file
-        # stores: bigint nanos (legacy conf path) or native TIMESTAMP_NTZ
-        if ts_type == "bigint":
-            stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        else:
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        # normalize ts (TIMESTAMP_NTZ in the file) to TIMESTAMP (LTZ,
+        # session=UTC)
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
         q = streaming.run_to_memory(build(stream), name, output_mode=output_mode)
         q.stop()
         # memory sink holds the rows; the staging dir stays cached
@@ -7308,7 +7208,7 @@ def q_streaming_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "8")
-        stage, batch_schema, _ = _staged_events_dir(
+        stage, batch_schema = _staged_events_dir(
             spark, sf_dir, table="documents"
         )
         stream = readers.file_stream(spark, stage, batch_schema)
@@ -8132,23 +8032,17 @@ def q_streaming_windowed_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
         if active.name == name:
             active.stop()
     spark.catalog.dropTempView(name)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         # shared staging (pyarrow sentinel, mtime-stamped after the
         # data so oldest-first ordering can never batch it ahead)
-        stage, batch_schema, ts_type = _staged_events_dir(
+        stage, batch_schema = _staged_events_dir(
             spark, sf_dir, kind="wm1"
         )
         stream = readers.file_stream(spark, stage, batch_schema)
-        if ts_type == "bigint":
-            stream = stream.withColumn(
-                "ts", F.expr("timestamp_micros(ts div 1000)")
-            )
-        else:
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
         counts = (
             stream.withWatermark("ts", "2 hours")
             .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -9177,10 +9071,7 @@ def _trained_ivf_index(spark: SparkSession, sf_dir: str):
     IVF index over the trained k=16 integer-Lloyd centroids — the shared
     serving artifact of q_mmr_from_index and q_streaming_ann_serving,
     built once per corpus fingerprint (centroids are part of the
-    artifact identity)."""
-    import hashlib
-    import tempfile
-
+    artifact key)."""
     emb = _t(spark, sf_dir, "embeddings")
     cents, cn = similarity.train_semdedup_centroids(
         emb,
@@ -9188,17 +9079,11 @@ def _trained_ivf_index(spark: SparkSession, sf_dir: str):
         sample=_SEMDEDUP_TRAIN_SAMPLE,
         iters=_SEMDEDUP_TRAIN_ITERS,
     )
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    index_path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ivf_trained_index_{sf_tag}"
+    index_path = materialize(
+        "ivf_trained_index", sf_dir, [f"{sf_dir}/embeddings.parquet"],
+        {"cents": cents, "cn": cn},
+        lambda p: similarity.build_ivf_index(emb, cents, p, cnorms_sq=cn),
     )
-    fp = (
-        _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-        + ":" + hashlib.md5(cents.tobytes()).hexdigest()
-    )
-    if not _artifact_ready(index_path, fp):
-        similarity.build_ivf_index(emb, cents, index_path, cnorms_sq=cn)
-        _mark_artifact(index_path, fp)
     return index_path, cents, cn
 
 
@@ -9392,9 +9277,6 @@ def q_streaming_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     its later member ingests), and incremental min-label merging
     converges to the same min-id components whatever the batch order
     (pinned in tests/test_dedup.py + tests/test_streaming.py)."""
-    import shutil
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq_mod
 
@@ -9409,15 +9291,8 @@ def q_streaming_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged 3-slice source, pyarrow-written (the _staged_events_dir
     # lesson: a 3-file coalesce(1) Spark write pays seconds of
     # committer overhead; pyarrow writes in milliseconds), cached per
-    # corpus fingerprint
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    stage = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_semstream_src_{sf_tag}"
-    )
-    fp = _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-    if not _artifact_ready(stage, fp):
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage)
+    # corpus
+    def slices(stage: str) -> None:
         pdf = pq_mod.read_table(
             f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
         ).to_pandas()
@@ -9427,53 +9302,27 @@ def q_streaming_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pa.Table.from_pandas(sl, preserve_index=False),
                 os.path.join(stage, f"slice_{part}.parquet"),
             )
-        _mark_artifact(stage, fp)
+
+    stage = materialize(
+        "semstream_src", sf_dir, [f"{sf_dir}/embeddings.parquet"], {}, slices
+    )
     # the ingest state is a PERSISTED INDEX (that is the sink's whole
     # point) — like the LSH/IVF index queries, build once per corpus
-    # fingerprint and serve the view from state on later calls; the
-    # centroids are part of the artifact identity
-    import hashlib
-
-    work = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_semstream_state_{sf_tag}"
+    # and serve the view from state on later calls; the centroids are
+    # part of the artifact key
+    work = materialize(
+        "semstream_state", sf_dir, [], {"src": stage, "cents": cents, "cn": cn},
+        lambda w: streaming.drain_to_sink(
+            spark, stage, "vec_id long, embedding array<float>",
+            streaming.semantic_dedup_ingest_sink(
+                os.path.join(w, "index"), cents, cnorms_sq=cn, threshold=0.4
+            ),
+            os.path.join(w, "ckpt"),
+        ),
     )
-    index = os.path.join(work, "index")
-    state_fp = fp + ":" + hashlib.md5(cents.tobytes()).hexdigest()
-    if not _artifact_ready(work, state_fp):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
-        stream = readers.file_stream(
-            spark,
-            stage,
-            "vec_id long, embedding array<float>",
-            max_files_per_trigger=1,
-        )
-        sink = streaming.semantic_dedup_ingest_sink(
-            index, cents, cnorms_sq=cn, threshold=0.4
-        )
-        # batch-sized per-batch work wants batch-sized shuffles: the
-        # incremental-CC rounds inside each micro-batch pay
-        # per-partition task floors at 32 (the q_streaming_* convention)
-        prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = (
-                stream.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
-        # _artifact_ready wants the Spark-written _SUCCESS convention;
-        # the state root is sink-managed, so stamp it explicitly
-        open(os.path.join(work, "_SUCCESS"), "w").close()
-        _mark_artifact(work, state_fp)
-    return streaming.semantic_dedup_state_view(spark, index).orderBy(
-        "component"
-    )
+    return streaming.semantic_dedup_state_view(
+        spark, os.path.join(work, "index")
+    ).orderBy("component")
 
 
 def q_seasonal_naive_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10105,7 +9954,6 @@ def q_streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         if active.name == name:
             active.stop()
     spark.catalog.dropTempView(name)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -10113,7 +9961,7 @@ def q_streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # shared staging: symlinks + the two-sided pyarrow sentinel
         # (click + purchase under impossible user ids), mtime-stamped
         # strictly after the data so oldest-first never reorders it
-        stage, batch_schema, ts_type = _staged_events_dir(
+        stage, batch_schema = _staged_events_dir(
             spark, sf_dir, kind="wm2"
         )
         # ONE availableNow batch for data + sentinel (r16 probe, guide
@@ -10126,12 +9974,7 @@ def q_streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # that DOES split batches. One stateful micro-batch fewer per
         # run; oracle hash unchanged.
         stream = readers.file_stream(spark, stage, batch_schema)
-        if ts_type == "bigint":
-            stream = stream.withColumn(
-                "ts", F.expr("timestamp_micros(ts div 1000)")
-            )
-        else:
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
         purchases = stream.filter(
             F.col("event_type") == "purchase"
         ).select(
@@ -10172,37 +10015,15 @@ def q_streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_MERGES = 12
 
 
-def _bpe_trained(spark: SparkSession, sf_dir: str):
-    """(merge_table_df, final_state_df): the 12-merge BPE training run
-    ONCE per corpus fingerprint and persisted — the production shape (a
-    pipeline trains its tokenizer once; the merge table, the counting
-    dictionary, the encoding dictionary, and the packer all read the
-    same trained state). Before this cache each BPE-family query paid
-    the full 12-argmax training chain independently (~2s each at
-    sf0.1, 4 queries). The artifact is (word, enc, freq) + the ranked
-    merge list; staleness is keyed on the documents parquet fingerprint
-    PLUS the merge depth PLUS a digest of the tokenizer module source
-    (r14 advice: keyed on the corpus alone, a change to _BPE_MERGES or
-    the training code silently served a stale artifact to every
-    BPE-family query until testdata regenerated)."""
-    import hashlib
-    import inspect
+def _bpe_root(spark: SparkSession, sf_dir: str) -> str:
+    """Path of the persisted BPE training run: the ranked merge list
+    (`merges/`) and the final (word, enc, freq) state (`state/`). Its
+    key covers the documents parquet, the merge depth, and the training
+    code with the tokenizer module (r14 advice: keyed on the corpus
+    alone, a change to _BPE_MERGES or the training code silently served
+    a stale artifact to every BPE-family query)."""
 
-    root = _materialized_path(sf_dir, "bpetrained")
-    fp = "|".join(
-        (
-            _source_fingerprint(f"{sf_dir}/documents.parquet"),
-            f"merges={_BPE_MERGES}",
-            hashlib.sha256(
-                inspect.getsource(tokenizer).encode()
-            ).hexdigest()[:16],
-        )
-    )
-    if not _artifact_ready(root, fp):
-        import shutil
-
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root)
+    def build(root: str) -> None:
         docs = _t(spark, sf_dir, "documents")
         vocab = tokenizer.word_vocab(docs)
         merges, final = tokenizer.train_bpe_merges(vocab, _BPE_MERGES)
@@ -10211,8 +10032,22 @@ def _bpe_trained(spark: SparkSession, sf_dir: str):
             "rank long, pair_a string, pair_b string, pair_count long",
         ).coalesce(1).write.mode("overwrite").parquet(f"{root}/merges")
         final.write.mode("overwrite").parquet(f"{root}/state")
-        open(os.path.join(root, "_SUCCESS"), "w").close()
-        _mark_artifact(root, fp)
+
+    return materialize(
+        "bpetrained", sf_dir, [f"{sf_dir}/documents.parquet"],
+        {"merges": _BPE_MERGES}, build,
+    )
+
+
+def _bpe_trained(spark: SparkSession, sf_dir: str):
+    """(merge_table_df, final_state_df): the 12-merge BPE training run
+    ONCE per corpus and persisted (`_bpe_root`) — the production shape
+    (a pipeline trains its tokenizer once; the merge table, the
+    counting dictionary, the encoding dictionary, and the packer all
+    read the same trained state). Before this cache each BPE-family
+    query paid the full 12-argmax training chain independently (~2s
+    each at sf0.1, 4 queries)."""
+    root = _bpe_root(spark, sf_dir)
     return (
         spark.read.parquet(f"{root}/merges"),
         spark.read.parquet(f"{root}/state"),
@@ -10435,21 +10270,12 @@ def q_streaming_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL replay: the DuckDB twin replays training (shared Lloyd chain,
     k=16), full-corpus assignment, per-query probe ranking, and the
     pruned top-k — one hash pins stream ≡ batch ≡ oracle."""
-    import shutil
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq_mod
 
     index_path, cents, cn = _trained_ivf_index(spark, sf_dir)
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    stage = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_annserve_src_{sf_tag}"
-    )
-    fp = _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-    if not _artifact_ready(stage, fp):
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage)
+
+    def query_slices(stage: str) -> None:
         pdf = pq_mod.read_table(
             f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
         ).to_pandas()
@@ -10465,49 +10291,27 @@ def q_streaming_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pa.Table.from_pandas(sl, preserve_index=False),
                 os.path.join(stage, f"slice_{part}.parquet"),
             )
-        open(os.path.join(stage, "_SUCCESS"), "w").close()
-        _mark_artifact(stage, fp)
-    import hashlib
 
-    work = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_annserve_out_{sf_tag}"
+    stage = materialize(
+        "annserve_src", sf_dir, [f"{sf_dir}/embeddings.parquet"],
+        {"n": _ANN_SERVE_QUERIES}, query_slices,
     )
-    out = os.path.join(work, "results")
-    state_fp = fp + ":" + hashlib.md5(cents.tobytes()).hexdigest()
-    if not _artifact_ready(work, state_fp):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
-        stream = readers.file_stream(
-            spark,
-            stage,
-            "query_id long, qvec array<float>",
-            max_files_per_trigger=1,
-        )
-        sink = streaming.ann_serving_sink(
-            index_path, cents, out, cnorms_sq=cn, k=10,
-            nprobe=_ANN_SERVE_NPROBE,
-        )
-        prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            # serving batches are pages of requests: batch-sized
-            # shuffles, not corpus-sized (the q_streaming_* convention)
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = (
-                stream.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
-        # _artifact_ready wants the Spark-written _SUCCESS convention;
-        # the results root is sink-managed, so stamp it explicitly
-        open(os.path.join(work, "_SUCCESS"), "w").close()
-        _mark_artifact(work, state_fp)
+    # the served answers depend on the index they probed: its path
+    # carries its key
+    work = materialize(
+        "annserve_out", sf_dir, [],
+        {"src": stage, "index": index_path, "nprobe": _ANN_SERVE_NPROBE},
+        lambda w: streaming.drain_to_sink(
+            spark, stage, "query_id long, qvec array<float>",
+            streaming.ann_serving_sink(
+                index_path, cents, os.path.join(w, "results"),
+                cnorms_sq=cn, k=10, nprobe=_ANN_SERVE_NPROBE,
+            ),
+            os.path.join(w, "ckpt"),
+        ),
+    )
     return (
-        spark.read.parquet(out)
+        spark.read.parquet(os.path.join(work, "results"))
         .select("query_id", "vec_id", "cos_sim")
         .orderBy("query_id", F.desc("cos_sim"), "vec_id")
     )
@@ -11723,18 +11527,9 @@ def q_lsh_bulk_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the lsh_bucket_verified machinery), every query's margins, the
     unrolled mask scores, the (score, tie_rank) ranking, the XOR probe
     set, and the pruned top-k."""
-    import tempfile
-
     emb = _t(spark, sf_dir, "embeddings")
     planes = similarity.make_planes(dim=64, n_planes=6, seed=42)
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    index_path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_lsh_index_{sf_tag}"
-    )
-    fp = _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-    if not _artifact_ready(index_path, fp):
-        similarity.build_lsh_index(emb, planes, index_path)
-        _mark_artifact(index_path, fp)
+    index_path = _lsh_index(spark, sf_dir, planes)
     queries = emb.filter(F.col("vec_id") < _LSH_BULK_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
@@ -11848,20 +11643,14 @@ def q_imi_bulk_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-half ranking, the combo sort, and the pruned top-k; the
     4096-cell regime where flat ranking measurably degrades is
     witnessed in SCALING.md via tools/ann_bulk_scaling.py."""
-    import tempfile
-
     emb = _t(spark, sf_dir, "embeddings")
     cb = similarity.make_imi_codebooks(
         dim=64, n_cells_per_half=_IMI_BULK_K, seed=_IMI_BULK_SEED
     )
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    index_path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_imi_bulk_index_{sf_tag}"
+    index_path = materialize(
+        "imi_bulk_index", sf_dir, [f"{sf_dir}/embeddings.parquet"],
+        {"cb": cb}, lambda p: similarity.build_imi_index(emb, cb, p),
     )
-    fp = _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-    if not _artifact_ready(index_path, fp):
-        similarity.build_imi_index(emb, cb, index_path)
-        _mark_artifact(index_path, fp)
     queries = emb.filter(F.col("vec_id") < _ANN_BULK_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
@@ -12495,18 +12284,8 @@ def q_mih_bulk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes every signature from the md5 hex digits (the shared
     sigs chain) and replays the pigeonhole candidate set, radius
     filter, and per-query ranking."""
-    import tempfile
-
     sigs = multimodal.image_dhash_chunks(_dhash_media(spark, sf_dir))
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    index_path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_mih_index_{sf_tag}"
-    )
-    fp = _source_fingerprint(f"{sf_dir}/documents.parquet") + ":mih2"
-    if not _artifact_ready(index_path, fp):
-        multimodal.build_mih_index(sigs, index_path, cb_bits=4)
-        open(os.path.join(index_path, "_SUCCESS"), "w").close()
-        _mark_artifact(index_path, fp)
+    index_path = _mih_index(spark, sf_dir)
     # materialize the query signatures once — the four chunk-table legs
     # would otherwise each re-author and re-hash the media fixture
     queries = sigs.select(
@@ -13327,36 +13106,36 @@ def q_image_dhash_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin recomputes every signature from the md5 hex digits
     (the shared sigs chain), takes media 0's row as the query, and
     replays the candidate pigeonhole, radius filter, and top-k."""
-    import hashlib
-    import tempfile
-
     sigs = multimodal.image_dhash_chunks(_dhash_media(spark, sf_dir))
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    index_path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_mih_index_{sf_tag}"
-    )
-    # cb_bits=4 at fixture scale (350 signatures): 16 partitions per
-    # table keeps the one-time build off the empty-dir commit floor;
-    # production corpora take the default 8 (256 partitions)
-    fp = _source_fingerprint(f"{sf_dir}/documents.parquet") + ":mih2"
-    if not _artifact_ready(index_path, fp):
-        multimodal.build_mih_index(sigs, index_path, cb_bits=4)
-        # the four table dirs carry their own _SUCCESS; the index ROOT
-        # needs the explicit stamp _artifact_ready looks for
-        open(os.path.join(index_path, "_SUCCESS"), "w").close()
-        _mark_artifact(index_path, fp)
-    # cache key includes the fixture fingerprint (r12 verdict nit): a
-    # process that regenerates documents.parquet mid-life must not be
-    # served a stale query signature
-    qsig_key = f"{sf_dir}:{fp}"
-    if qsig_key not in _QSIG_CACHE:
+    index_path = _mih_index(spark, sf_dir)
+    # keyed on the index path, which carries the fixture's source stats
+    # and code (r12 verdict nit): a process that regenerates
+    # documents.parquet mid-life must not be served a stale signature
+    if index_path not in _QSIG_CACHE:
         qrow = sigs.filter(F.col("media_id") == 0).head()
-        _QSIG_CACHE[qsig_key] = [
+        _QSIG_CACHE[index_path] = [
             qrow["c0"], qrow["c1"], qrow["c2"], qrow["c3"]
         ]
     return multimodal.mih_topk_from_index(
-        spark, index_path, _QSIG_CACHE[qsig_key], k=10, max_hamming=3,
+        spark, index_path, _QSIG_CACHE[index_path], k=10, max_hamming=3,
         cb_bits=4,
+    )
+
+
+def _mih_index(spark: SparkSession, sf_dir: str) -> str:
+    """The persisted multi-index-hashing index over the media fixture's
+    dHash signatures, shared by q_image_dhash_search and
+    q_mih_bulk_search. cb_bits=4 at fixture scale (350 signatures): 16
+    partitions per table keeps the one-time build off the empty-dir
+    commit floor; production corpora take the default 8 (256
+    partitions). The fixture is authored from documents.parquet by
+    `_dhash_media`, whose code the key covers through the build."""
+    return materialize(
+        "mih_index", sf_dir, [f"{sf_dir}/documents.parquet"], {"cb_bits": 4},
+        lambda p: multimodal.build_mih_index(
+            multimodal.image_dhash_chunks(_dhash_media(spark, sf_dir)), p,
+            cb_bits=4,
+        ),
     )
 
 
@@ -13396,57 +13175,29 @@ def q_streaming_dhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     _image_dhash_oracle_sql verbatim: one hash pins streamed ingest ≡
     batch dhash_near_dup_pairs ≡ the SQL replay; stream-vs-batch
     equality is separately pinned in tests/test_streaming.py."""
-    import shutil
-    import tempfile
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    stage = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_dhashstream_src_{sf_tag}"
-    )
-    fp = _source_fingerprint(f"{sf_dir}/documents.parquet") + ":dhs1"
-    if not _artifact_ready(stage, fp):
-        shutil.rmtree(stage, ignore_errors=True)
+    def slices(stage: str) -> None:
         media = _dhash_media(spark, sf_dir)
         for part in range(3):
             media.filter(F.col("media_id") % 3 == part).coalesce(
                 1
             ).write.mode("append").parquet(stage)
-        _mark_artifact(stage, fp)
-    work = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_dhashstream_state_{sf_tag}"
+
+    stage = materialize(
+        "dhashstream_src", sf_dir, [f"{sf_dir}/documents.parquet"], {}, slices
     )
-    pairs = os.path.join(work, "pairs")
-    if not _artifact_ready(work, fp):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
-        stream = readers.file_stream(
-            spark,
-            stage,
-            "media_id long, content binary",
-            max_files_per_trigger=1,
-        )
-        sink = streaming.dhash_ingest_sink(
-            os.path.join(work, "state"), pairs, cb_bits=4
-        )
-        prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = (
-                stream.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
-        # _artifact_ready wants the Spark-written _SUCCESS convention;
-        # the state root is sink-managed, so stamp it explicitly
-        open(os.path.join(work, "_SUCCESS"), "w").close()
-        _mark_artifact(work, fp)
+    work = materialize(
+        "dhashstream_state", sf_dir, [], {"src": stage},
+        lambda w: streaming.drain_to_sink(
+            spark, stage, "media_id long, content binary",
+            streaming.dhash_ingest_sink(
+                os.path.join(w, "state"), os.path.join(w, "pairs"), cb_bits=4
+            ),
+            os.path.join(w, "ckpt"),
+        ),
+    )
     return (
-        spark.read.parquet(pairs)
+        spark.read.parquet(os.path.join(work, "pairs"))
         .select("id_a", "id_b", "hamming")
         .orderBy("id_a", "id_b")
     )
@@ -13463,63 +13214,38 @@ def q_streaming_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the DuckDB twin — training chain + dictionary application +
     per-source aggregation — pins streamed metering ≡ batch ≡ SQL
     replay in one hash."""
-    import shutil
-    import tempfile
+    bpe = _bpe_root(spark, sf_dir)
+    # each artifact passes its upstream path, so a retrained dictionary
+    # reaches the partials (keyed on the documents alone, they served
+    # the old dictionary's totals after _BPE_MERGES changed)
+    dict_path = materialize(
+        "bpedict", sf_dir, [], {"bpe": bpe},
+        lambda p: tokenizer.token_dict(
+            spark.read.parquet(f"{bpe}/state")
+        ).write.mode("overwrite").parquet(p),
+    )
 
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    fp = _source_fingerprint(f"{sf_dir}/documents.parquet")
-    dict_path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_bpedict_{sf_tag}"
-    )
-    if not _artifact_ready(dict_path, fp):
-        _, final_state = _bpe_trained(spark, sf_dir)
-        tokenizer.token_dict(final_state).write.mode("overwrite").parquet(
-            dict_path
-        )
-        _mark_artifact(dict_path, fp)
-    stage = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_tokbudget_src_{sf_tag}"
-    )
-    if not _artifact_ready(stage, fp):
-        shutil.rmtree(stage, ignore_errors=True)
+    def slices(stage: str) -> None:
         docs = _t(spark, sf_dir, "documents")
         for part in range(3):
             docs.filter(F.col("doc_id") % 3 == part).select(
                 "doc_id", "text", "source"
             ).coalesce(1).write.mode("append").parquet(stage)
-        _mark_artifact(stage, fp)
-    work = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_tokbudget_out_{sf_tag}"
+
+    stage = materialize(
+        "tokbudget_src", sf_dir, [f"{sf_dir}/documents.parquet"], {}, slices
     )
-    out = os.path.join(work, "partials")
-    if not _artifact_ready(work, fp):
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
-        stream = readers.file_stream(
-            spark,
-            stage,
-            "doc_id long, text string, source string",
-            max_files_per_trigger=1,
-        )
-        sink = streaming.token_budget_sink(dict_path, out)
-        prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = (
-                stream.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
-        # _artifact_ready wants the Spark-written _SUCCESS convention;
-        # the partials root is sink-managed, so stamp it explicitly
-        open(os.path.join(work, "_SUCCESS"), "w").close()
-        _mark_artifact(work, fp)
-    return streaming.token_budget_view(spark, out).orderBy("source")
+    work = materialize(
+        "tokbudget_out", sf_dir, [], {"src": stage, "dict": dict_path},
+        lambda w: streaming.drain_to_sink(
+            spark, stage, "doc_id long, text string, source string",
+            streaming.token_budget_sink(dict_path, os.path.join(w, "partials")),
+            os.path.join(w, "ckpt"),
+        ),
+    )
+    return streaming.token_budget_view(
+        spark, os.path.join(work, "partials")
+    ).orderBy("source")
 
 
 def _streaming_token_budget_oracle_sql() -> str:

@@ -2,7 +2,9 @@
 that publish partition directories atomically (rollup refresh, batch
 compaction) and by the READERS of those stores, which must resolve a
 mid-swap crash's leftovers before Spark's partition discovery sees a
-`<dir>.old` / `<dir>.staging` as a bogus partition value.
+`<dir>.old` / `<dir>.staging` as a bogus partition value — and the
+artifact store (`materialize`) every cached index, format copy and
+memoized streaming run of the query catalog is built through.
 
 Local-FS commit protocol by design: on HDFS/S3 this role is played by
 a table format's transaction log (Delta/Iceberg) — the call sites are
@@ -11,8 +13,15 @@ the seams where that would plug in.
 
 from __future__ import annotations
 
+import hashlib
+import inspect
 import os
+import re
 import shutil
+import sys
+import tempfile
+
+import numpy as np
 
 
 def recover_dir_swap(ddir: str) -> None:
@@ -61,3 +70,124 @@ def recover_partition_swaps(root: str) -> None:
             base = name[: -len(".staging")]
         if base is not None:
             recover_dir_swap(os.path.join(root, base))
+
+
+#: id(code object) → (code object, digest): each build callable is
+#: walked once per process. Keyed on identity, not on code equality — a
+#: reloaded module's code can compare equal while calling new helpers.
+_CODE_DIGESTS: dict = {}
+_PACKAGE = __name__.rpartition(".")[0]
+_KEY = re.compile(r"[0-9a-f]{16}")
+
+
+def _code_digest(fn) -> str:
+    """Digest of the code that builds an artifact: the source of `fn`
+    and of every function of its own module it reaches through globals,
+    closures and nested code, plus the whole source file of every
+    package module those functions call into."""
+    hit = _CODE_DIGESTS.get(id(fn.__code__))
+    if hit is None:
+        parts: set[str] = set()
+        _walk_code(fn, parts, set())
+        hit = _CODE_DIGESTS[id(fn.__code__)] = (
+            fn.__code__,
+            hashlib.sha256("\n".join(sorted(parts)).encode()).hexdigest(),
+        )
+    return hit[1]
+
+
+def _walk_code(fn, parts: set, seen: set) -> None:
+    if id(fn.__code__) in seen:
+        return
+    seen.add(id(fn.__code__))
+    try:
+        parts.add(inspect.getsource(fn))
+    except (OSError, TypeError):
+        parts.add(fn.__code__.co_code.hex())
+    names: set[str] = set()
+    stack = [fn.__code__]
+    while stack:
+        code = stack.pop()
+        names.update(code.co_names)
+        stack.extend(c for c in code.co_consts if inspect.iscode(c))
+    refs = [fn.__globals__[n] for n in names if n in fn.__globals__]
+    refs += [c.cell_contents for c in fn.__closure__ or ()]
+    for ref in refs:
+        mod = ref.__name__ if inspect.ismodule(ref) else getattr(
+            ref, "__module__", None
+        )
+        if isinstance(mod, str) and mod.startswith(_PACKAGE + "."):
+            with open(sys.modules[mod].__file__, "rb") as f:
+                parts.add(mod + ":" + hashlib.sha256(f.read()).hexdigest())
+        elif inspect.isfunction(ref) and mod == fn.__module__:
+            _walk_code(ref, parts, seen)
+
+
+def source_stats(paths) -> str:
+    """(path, size, mtime) of every file under `paths` — a regenerated
+    corpus must never be served an artifact built from the old one."""
+    h = hashlib.sha256()
+    for p in sorted(paths):
+        walk = (
+            sorted(os.path.join(r, fn) for r, _, fs in os.walk(p) for fn in fs)
+            if os.path.isdir(p) else [p]
+        )
+        for fp in walk:
+            st = os.stat(fp)
+            h.update(f"{fp}|{st.st_size}|{st.st_mtime_ns}".encode())
+    return h.hexdigest()
+
+
+def _param_digest(params: dict) -> str:
+    h = hashlib.sha256()
+    for k in sorted(params):
+        v = params[k]
+        if isinstance(v, np.ndarray):
+            v = (v.dtype.str, v.shape, v.tobytes())
+        h.update(f"{k}={v!r};".encode())
+    return h.hexdigest()
+
+
+def materialize(tag: str, sf_dir: str, sources, params: dict, build) -> str:
+    """Path of the artifact `build(staging_dir)` writes, built at most
+    once per complete key: the stats of the `sources` files, `params`
+    (ndarrays by bytes, the rest by repr; a dependent artifact passes
+    its upstream path) and the build code (`_code_digest`).
+
+    The key is in the path, so an artifact is ready exactly when its
+    directory exists. `build` writes into a fresh sibling directory that
+    one `os.rename` publishes; a failed build leaves nothing behind, and
+    a builder that loses the publish race serves the winner's copy.
+    After a publish, artifacts of the same tag and sf under other keys
+    are removed."""
+    key = hashlib.sha256(
+        "|".join(
+            (source_stats(sources), _param_digest(params), _code_digest(build))
+        ).encode()
+    ).hexdigest()[:16]
+    root = tempfile.gettempdir()
+    prefix = f"spark_graft_{tag}_{os.path.basename(sf_dir.rstrip('/'))}_"
+    path = os.path.join(root, prefix + key)
+    if os.path.isdir(path):
+        return path
+    staging = tempfile.mkdtemp(
+        prefix=f"{prefix}{key}.", suffix=".staging", dir=root
+    )
+    try:
+        build(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    try:
+        os.rename(staging, path)
+    except OSError:
+        shutil.rmtree(staging, ignore_errors=True)
+        if not os.path.isdir(path):
+            raise
+        return path  # another builder published first
+    for name in os.listdir(root):
+        if name.startswith(prefix) and name != prefix + key and _KEY.fullmatch(
+            name[len(prefix):]
+        ):
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+    return path

@@ -125,7 +125,6 @@ def ensure_materialized(
     ts_col: str = "ts",
     keys: tuple[str, ...] = ("event_type",),
     value_col: str = "value",
-    source_fingerprint: str | None = None,
     partition_col: str | None = None,
 ) -> DataFrame:
     """Build-if-absent convenience used by the gated query.
@@ -134,35 +133,25 @@ def ensure_materialized(
     `_CAGG_META`) and reused on every serve — recomputing it from live
     data against a frozen history would silently drop any days that
     arrived in between (they'd be past the old history AND before the
-    new watermark). `source_fingerprint` (any caller-computed digest of
-    the raw source) invalidates the materialization when the underlying
-    data changes; rebuild then re-freezes both."""
+    new watermark). A changed raw source needs a new `path` (the
+    catalog's artifact store keys it on the source stats); rebuilding
+    there re-freezes both."""
     import datetime
     import json
 
     meta_path = os.path.join(path, "_CAGG_META")
-    watermark = None
     if os.path.exists(os.path.join(path, "_SUCCESS")) and os.path.exists(
         meta_path
     ):
         with open(meta_path) as f:
-            meta = json.load(f)
-        if (
-            source_fingerprint is None
-            or meta.get("fingerprint") == source_fingerprint
-        ):
-            watermark = datetime.datetime.fromisoformat(meta["watermark"])
-    if watermark is None:
+            watermark = datetime.datetime.fromisoformat(
+                json.load(f)["watermark"]
+            )
+    else:
         watermark = materialization_watermark(raw, ts_col)
         materialize_history(raw, path, watermark, ts_col, keys, value_col)
         with open(meta_path, "w") as f:
-            json.dump(
-                {
-                    "fingerprint": source_fingerprint,
-                    "watermark": watermark.isoformat(),
-                },
-                f,
-            )
+            json.dump({"watermark": watermark.isoformat()}, f)
     return continuous_aggregate(
         spark, raw, path, watermark, ts_col, keys, value_col, partition_col
     )

@@ -63,12 +63,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-#: Timestamp columns whose parquet encoding has varied across testdata
-#: generations: TIMESTAMP(NANOS) (read as long under nanosAsLong, converted
-#: below) or TIMESTAMP(MICROS)/NTZ (read natively; no conversion fires).
-NANOS_TS_COLS: dict[str, list[str]] = {"events": ["ts"]}
-
-
 #: lazy reader-handle cache: (session id, path, mtime, size) → DataFrame.
 #: This caches METADATA ONLY — the file listing + parquet footer schema
 #: that `spark.read.parquet` re-resolves through the JVM on every call
@@ -106,16 +100,13 @@ def _table_stat_key(path: str) -> tuple:
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Driver test-table loader (TESTDATA.md).
 
-    Session-independent and encoding-agnostic: older testdata generations
-    stored `events.ts` as TIMESTAMP(NANOS) (→ read as long under the
-    legacy conf, converted to micros below); current ones store
-    TIMESTAMP(MICROS) with isAdjustedToUTC=false (→ TIMESTAMP_NTZ, left
-    as-is — downstream epoch math routes through `.cast("timestamp")`,
-    see `_epoch_sec` in __spark_entry__). The session timezone is pinned
-    UTC so date_trunc semantics match the tz-naive DuckDB oracle on ANY
-    caller-supplied session, not just get_spark()'s.
+    Session-independent: timestamps are stored as TIMESTAMP(MICROS) with
+    isAdjustedToUTC=false (→ TIMESTAMP_NTZ, left as-is — downstream
+    epoch math routes through `.cast("timestamp")`, see `_epoch_sec` in
+    __spark_entry__). The session timezone is pinned UTC so date_trunc
+    semantics match the tz-naive DuckDB oracle on ANY caller-supplied
+    session, not just get_spark()'s.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
     key = (id(spark), path, _table_stat_key(path))
@@ -123,9 +114,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if hit is not None:
         return hit
     df = spark.read.parquet(path)
-    for c in NANOS_TS_COLS.get(name, []):
-        if c in df.columns and dict(df.dtypes)[c] == "bigint":
-            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     while len(_TABLE_CACHE) >= _TABLE_CACHE_MAX:  # bounded: FIFO evict
         _TABLE_CACHE.pop(next(iter(_TABLE_CACHE)))
     _TABLE_CACHE[key] = df

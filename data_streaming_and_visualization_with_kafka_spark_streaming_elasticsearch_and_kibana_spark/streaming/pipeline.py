@@ -827,6 +827,32 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
     return q
 
 
+
+def drain_to_sink(spark, src: str, schema: str, sink, checkpoint: str) -> None:
+    """Ingest every file landed under `src` through the foreachBatch
+    `sink`, one file per micro-batch, in one availableNow run. Shuffle
+    partitions are scoped to 8 for the run: per-batch work is
+    batch-sized, and a corpus-sized setting pays its per-partition task
+    floor on every batch. The caller's setting is restored afterwards;
+    the scope is session-global, so a concurrent caller on the same
+    session sees the scoped value meanwhile."""
+    from ..sources.readers import file_stream
+
+    stream = file_stream(spark, src, schema, max_files_per_trigger=1)
+    prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        q = (
+            stream.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        q.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
+
 def pq_ingest_sink(
     index_path: str,
     codebooks,

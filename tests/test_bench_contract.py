@@ -114,3 +114,18 @@ def test_bench_line_fits_driver_capture_buffer():
         separators=(",", ":"),
     )
     assert len(fallback) < 1950
+
+
+def test_entry_caches_go_through_the_artifact_store():
+    """Every cached artifact of the catalog is built by
+    `fsutil.materialize`, whose key is in the path and whose publish is
+    one rename. A hand-built temp path or a hand-written `_SUCCESS`
+    stamp in the entry module is a cache outside the store: keyed on
+    less than what built it, and readable while half-written."""
+    import re
+
+    with open(entrymod.__file__) as f:
+        src = f.read()
+    assert "tempfile.gettempdir(" not in src
+    stamps = re.findall(r"""open\([^)]*["']_SUCCESS["']""", src)
+    assert not stamps, stamps

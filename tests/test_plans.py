@@ -432,13 +432,8 @@ def test_mmr_from_index_probe_is_partition_pruned(spark):
     (cid isin(...) over that layout) must prune directories — a
     PartitionFilter on the scan, not a post-scan data filter. At
     100 TB this is the O(n·nprobe/k) vs O(n) difference."""
-    import os
-    import tempfile
-
     entrymod.q_mmr_from_index(spark, SF).collect()
-    index_path = os.path.join(
-        tempfile.gettempdir(), "spark_graft_ivf_trained_index_sf0.001"
-    )
+    index_path, _, _ = entrymod._trained_ivf_index(spark, SF)
     pruned = spark.read.parquet(index_path).filter(F.col("cid").isin([0, 1]))
     plan = explain.formatted_plan(pruned)
     part_section = plan.split("PartitionFilters")[1][:200]
@@ -453,12 +448,9 @@ def test_mih_probe_is_partition_pruned(spark):
     filter. At 10⁹ signatures this is the ~4/2^cb_bits read the index
     exists for."""
     import os
-    import tempfile
 
     entrymod.q_image_dhash_search(spark, SF).collect()
-    index_path = os.path.join(
-        tempfile.gettempdir(), "spark_graft_mih_index_sf0.001"
-    )
+    index_path = entrymod._mih_index(spark, SF)
     probed = spark.read.parquet(
         os.path.join(index_path, "table0")
     ).filter(F.col("cb") == 3)

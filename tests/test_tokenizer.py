@@ -259,6 +259,49 @@ def test_bpe_trained_artifact_invalidates_on_merge_depth_change(
     assert back.count() == entrymod._BPE_MERGES
 
 
+def test_streaming_token_budget_follows_a_retrained_dictionary(
+    spark, monkeypatch, tmp_path
+):
+    """The memoized token-budget stream (dictionary, staged source,
+    partials) used to be keyed on the documents parquet alone: after
+    _BPE_MERGES changed, `_bpe_trained` retrained but the stream kept
+    serving the old dictionary's totals. Each artifact now passes its
+    upstream path as a key param, so a deeper training reaches the
+    served totals. Artifacts go to a private temp root, so the deeper
+    build does not replace the shared ones other processes read."""
+    import tempfile
+
+    import __spark_entry__ as entrymod
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf_dir = "/root/testdata/sf0.001"
+
+    def stream_totals():
+        rows = entrymod.q_streaming_token_budget(spark, sf_dir).collect()
+        return {r["source"]: r["n_tokens"] for r in rows}
+
+    def batch_totals():
+        docs = entrymod._t(spark, sf_dir, "documents").select(
+            "doc_id", "source"
+        )
+        counts = entrymod.q_bpe_token_counts(spark, sf_dir)
+        rows = (
+            counts.join(docs, "doc_id")
+            .groupBy("source")
+            .agg(F.sum("n_tokens").alias("n"))
+            .collect()
+        )
+        return {r["source"]: r["n"] for r in rows}
+
+    shallow = stream_totals()  # warms every memoized artifact
+    assert shallow == batch_totals()
+
+    monkeypatch.setattr(entrymod, "_BPE_MERGES", entrymod._BPE_MERGES + 1)
+    deeper = stream_totals()
+    assert deeper == batch_totals()
+    assert deeper != shallow  # one merge more: fewer tokens somewhere
+
+
 def test_fertility_report_consistent_with_doc_counts(spark):
     """The per-language fertility audit is an exact re-aggregation of
     the same trained-dictionary token counts doc_token_counts budgets
