@@ -168,11 +168,21 @@ def materialize(tag: str, sf_dir: str, sources, params: dict, build) -> str:
     root = tempfile.gettempdir()
     prefix = f"spark_graft_{tag}_{os.path.basename(sf_dir.rstrip('/'))}_"
     path = os.path.join(root, prefix + key)
+    if publish(path, build):
+        drop_superseded(root, prefix, key)
+    return path
+
+
+def publish(path: str, build) -> bool:
+    """Build directory `path` unless it exists: `build(staging)` writes
+    into a fresh sibling directory that one `os.rename` publishes. A
+    failed build leaves nothing behind; a process that loses the publish
+    race discards its copy and keeps the winner's. True when this call
+    published `path`."""
     if os.path.isdir(path):
-        return path
-    staging = tempfile.mkdtemp(
-        prefix=f"{prefix}{key}.", suffix=".staging", dir=root
-    )
+        return False
+    root, name = os.path.split(path)
+    staging = tempfile.mkdtemp(prefix=f"{name}.", suffix=".staging", dir=root)
     try:
         build(staging)
     except BaseException:
@@ -184,10 +194,14 @@ def materialize(tag: str, sf_dir: str, sources, params: dict, build) -> str:
         shutil.rmtree(staging, ignore_errors=True)
         if not os.path.isdir(path):
             raise
-        return path  # another builder published first
+        return False  # another process published first
+    return True
+
+
+def drop_superseded(root: str, prefix: str, key: str) -> None:
+    """Remove `<root>/<prefix><key16>` directories under any other key."""
     for name in os.listdir(root):
         if name.startswith(prefix) and name != prefix + key and _KEY.fullmatch(
             name[len(prefix):]
         ):
             shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-    return path

@@ -108,6 +108,14 @@ def encode_for_kafka(
 
     key: chosen column string-encoded (dataframe_to_kafka.py:94-100), or
     a monotonic id when None (the reference's row-index key).
+
+    Layout contract: the default key, ``monotonically_increasing_id``,
+    encodes each row's partition index and its position in that
+    partition, so the same rows get different keys under another
+    partition layout (cores, shuffle partitions, AQE, scan split size),
+    and Kafka's key-hash partitioning then sends them to other topic
+    partitions. ``key_col`` is the layout-invariant choice: pass it
+    whenever a key must be stable across runs.
     """
     cols = value_cols or df.columns
     value = json_encode(cols) if wire_format == "json" else delimited_encode(cols, sep)

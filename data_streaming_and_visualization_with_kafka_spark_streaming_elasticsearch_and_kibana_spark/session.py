@@ -22,13 +22,32 @@ directory install, or when its version differs from what an archive
 ships. Either way it then runs any ``sitecustomize`` it shadows. On a
 cluster whose executors lack this directory, the entry names nothing
 and workers start as Spark starts them.
+
+For a ``local[...]`` master, Hadoop's local file systems come from
+``local_fs``: without libhadoop, stock Hadoop starts a ``chmod`` or
+``readlink`` child process for each offset-log, commit-log and
+state-store file of every micro-batch. The first session built from a
+checkout compiles ``_jvm/NoForkLocalFs.java`` with ``javac`` against
+Spark's ``hadoop-client-api`` jar (about 1.5 s) into a jar under
+``_jvm/build/`` (git-ignored; the temp directory when the package
+directory is read-only), keyed on the source, the Hadoop jar name and
+the JDK of ``javac`` (its path, stat and ``release`` file); later
+sessions and processes reuse it. The jar goes first on
+``spark.driver.extraClassPath`` (a caller's value is kept after it) and
+its classes are named in ``spark.hadoop.fs.file.impl`` and
+``spark.hadoop.fs.AbstractFileSystem.file.impl``. With no ``javac``, a
+failed compile or a non-local master the conf is left as it is, stock
+Hadoop runs, and a failure is logged once.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from .local_fs import local_fs_conf
 
 #: start-up hook that keeps Spark's archives off the workers' sys.path
 WORKER_SITE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker_site")
@@ -68,6 +87,10 @@ def get_spark(
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (WORKER_SITE, conf.get("spark.executorEnv.PYTHONPATH")) if p
     )
+    # a driver JVM that is already up keeps the class path it started with
+    gateway = SparkContext._gateway
+    running = gateway.jvm.System.getProperty("java.class.path") if gateway else None
+    conf = local_fs_conf(master, conf, running_classpath=running)
     for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()

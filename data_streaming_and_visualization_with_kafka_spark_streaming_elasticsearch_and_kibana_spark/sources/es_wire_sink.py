@@ -65,6 +65,25 @@ def _resolve_index(pattern: str, row: dict) -> str:
     return _PATTERN.sub(lambda m: str(row.get(m.group(1), "")), pattern)
 
 
+def _sweep_orphaned_tmp(path: str) -> None:
+    """Remove leftover .tmp files under `path` once a job or an epoch
+    resolves: a task attempt that died mid-write and was RETRIED leaves
+    its first attempt's .tmp unreported (commit never renames it, abort
+    never runs because the job succeeded) — without this sweep those
+    orphans accumulate forever, unseen even by overwrite's retire scan
+    (which matches only *.ndjson). Runs AFTER commit has renamed every
+    claimed .tmp (and after abort has removed its own), so everything
+    still matching *.ndjson.tmp is an orphan — under the
+    single-writer-per-path assumption (see `EsBulkWireWriter`; streaming
+    micro-batches are sequential). No directory means no task reached
+    `write()`, and abort must then surface the task's error."""
+    if not os.path.isdir(path):
+        return
+    for f in os.listdir(path):
+        if f.endswith(".ndjson.tmp"):
+            os.remove(os.path.join(path, f))
+
+
 class EsBulkWireWriter(DataSourceWriter):
     """Batch writer. SINGLE-WRITER-PER-PATH assumption: exactly one job
     writes a given payload directory at a time. The post-commit orphan
@@ -112,28 +131,11 @@ class EsBulkWireWriter(DataSourceWriter):
                 f.write("\n")
         return _Staged(tmp_path=tmp)
 
-    def _sweep_orphaned_tmp(self) -> None:
-        """Remove leftover .tmp files once the job resolves: a task
-        attempt that died mid-write and was RETRIED leaves its first
-        attempt's .tmp unreported (commit never renames it, abort never
-        runs because the job succeeded) — without this sweep those
-        orphans accumulate forever, unseen even by overwrite's retire
-        scan (which matches only *.ndjson). Runs AFTER commit has
-        renamed every claimed .tmp (and after abort has removed its
-        own), so everything still matching *.ndjson.tmp is an orphan —
-        under the single-writer-per-path assumption (see class
-        docstring)."""
-        if not os.path.isdir(self.path):
-            return
-        for f in os.listdir(self.path):
-            if f.endswith(".ndjson.tmp"):
-                os.remove(os.path.join(self.path, f))
-
     def commit(self, messages):
         for m in messages:
             if m is not None:
                 os.replace(m.tmp_path, m.tmp_path[: -len(".tmp")])
-        self._sweep_orphaned_tmp()
+        _sweep_orphaned_tmp(self.path)
         for old in self.retire:
             if os.path.exists(old):
                 os.remove(old)
@@ -142,7 +144,7 @@ class EsBulkWireWriter(DataSourceWriter):
         for m in messages:
             if m is not None and os.path.exists(m.tmp_path):
                 os.remove(m.tmp_path)
-        self._sweep_orphaned_tmp()
+        _sweep_orphaned_tmp(self.path)
 
 
 class EsBulkWireStreamWriter(DataSourceStreamWriter):
@@ -165,15 +167,6 @@ class EsBulkWireStreamWriter(DataSourceStreamWriter):
         w = EsBulkWireWriter(self.path, self.index, self.mapping_id, False)
         return w.write(iterator)
 
-    def _sweep_root_tmp(self) -> None:
-        """Orphaned .tmp files in the staging root (failed-then-retried
-        task attempts that never made a commit message) are safe to
-        delete once the epoch resolves — micro-batches are sequential,
-        so nothing else can be staging here."""
-        for f in os.listdir(self.path):
-            if f.endswith(".ndjson.tmp"):
-                os.remove(os.path.join(self.path, f))
-
     def commit(self, messages, batchId: int) -> None:
         edir = os.path.join(self.path, f"epoch={batchId}")
         if os.path.isdir(edir):  # at-least-once replay: rewrite, not add
@@ -187,13 +180,13 @@ class EsBulkWireStreamWriter(DataSourceStreamWriter):
                     edir, os.path.basename(m.tmp_path)[: -len(".tmp")]
                 )
                 os.replace(m.tmp_path, final)
-        self._sweep_root_tmp()
+        _sweep_orphaned_tmp(self.path)
 
     def abort(self, messages, batchId: int) -> None:
         for m in messages:
             if m is not None and os.path.exists(m.tmp_path):
                 os.remove(m.tmp_path)
-        self._sweep_root_tmp()
+        _sweep_orphaned_tmp(self.path)
 
 
 class EsBulkWireDataSource(DataSource):

@@ -152,6 +152,21 @@ def test_es_bulk_wire_overwrite_replaces_prior_payload(spark, tmp_dir):
     assert '"room-999"' in open(files[0]).read()
 
 
+def test_es_bulk_wire_abort_without_payload_dir_keeps_task_error(tmp_dir):
+    """When no task reached write() (a worker that failed to start),
+    the payload directory does not exist: abort must return quietly so
+    Spark reports the task's error, not a FileNotFoundError of its own."""
+    from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.sources.es_wire_sink import (
+        EsBulkWireStreamWriter,
+        EsBulkWireWriter,
+    )
+
+    missing = f"{tmp_dir}/never_written"
+    EsBulkWireStreamWriter(missing, "room-{room}", None).abort([None], 0)
+    EsBulkWireWriter(missing, "room-{room}", None, False).abort([None])
+    assert not os.path.exists(missing)
+
+
 def test_es_bulk_wire_stream_writer_per_epoch_payloads(spark, tmp_dir):
     """writeStream.format('es_bulk_wire'): each micro-batch publishes
     as an epoch=<id> directory of action/doc NDJSON pairs with keyed
