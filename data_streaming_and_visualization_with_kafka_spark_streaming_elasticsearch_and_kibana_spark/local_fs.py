@@ -9,7 +9,7 @@ same system calls in-process and wraps the stock local file systems
 around them (see its class comment).
 
 ``local_fs_conf`` compiles that source once per content key (source
-digest, Hadoop jar name, which ``javac``) into a jar published
+digest, Hadoop jar name, which ``javac``, the compile recipe) into a jar published
 atomically under ``_jvm/build/`` beside the source, or under the temp
 directory when the package directory is read-only, and returns the conf
 that puts it on the driver class path and names its classes for the two
@@ -80,10 +80,13 @@ def _javac_id(javac: str) -> str:
 
 
 def _jar_key(source: str, hjar: str, javac: str) -> str:
+    """Source digest, Hadoop jar name, javac identity and the recipe
+    (`_compile`'s code: javac flags, jar layout)."""
     with open(source, "rb") as f:
         digest = hashlib.sha256(f.read()).hexdigest()
     return hashlib.sha256("|".join(
-        (digest, os.path.basename(hjar), _javac_id(javac))
+        (digest, os.path.basename(hjar), _javac_id(javac),
+         fsutil._code_digest(_compile), JAR)
     ).encode()).hexdigest()[:16]
 
 

@@ -9,6 +9,7 @@ last two run a checkpointed, stateful query through `es_bulk_wire`.
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import shutil
@@ -85,9 +86,9 @@ def test_second_process_reuses_the_jar(tmp_path):
     script = (
         f"import sys; sys.path.insert(0, {ROOT!r})\n"
         f"from {local_fs.__name__.rpartition('.')[0]} import local_fs\n"
-        "def recompile(*a):\n"
+        "def recompile(*a, **k):\n"
         "    raise AssertionError('recompiled')\n"
-        "local_fs._compile = recompile\n"
+        "local_fs.subprocess.run = recompile\n"
         f"print(local_fs.build_jar(roots={roots!r}))\n"
     )
     out = subprocess.run([sys.executable, "-c", script], capture_output=True,
@@ -113,6 +114,29 @@ def test_source_edit_changes_key_and_drops_old_jar(tmp_path):
     new = local_fs.build_jar(str(src), roots)
     assert os.path.dirname(new) != os.path.dirname(old)
     assert os.listdir(roots[0]) == [os.path.basename(os.path.dirname(new))]
+
+
+@needs_javac
+def test_compile_recipe_edit_changes_key(tmp_path):
+    """Editing `_compile` (javac flags, jar layout) must not serve the
+    jar an older recipe built."""
+    text = open(local_fs.__file__).read()
+    assert '"--release", "17"' in text
+
+    def key_of(name, module_text):
+        path = tmp_path / f"{name}.py"
+        path.write_text(module_text)
+        spec = importlib.util.spec_from_file_location(
+            f"{local_fs.__name__}_{name}", path)
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)  # the package's relative imports resolve
+        return mod._jar_key(local_fs.SOURCE, local_fs._hadoop_jar(), shutil.which("javac"))
+
+    stock = key_of("copy", text)
+    assert stock == local_fs._jar_key(
+        local_fs.SOURCE, local_fs._hadoop_jar(), shutil.which("javac"))
+    assert key_of("flags", text.replace('"--release", "17"', '"--release", "21"')) != stock
+    assert key_of("layout", text.replace("sorted(files)", "files")) != stock
 
 
 @needs_javac

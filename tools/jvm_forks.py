@@ -1,12 +1,12 @@
 """Count the child processes a JVM starts while Python code runs.
 
-    python tools/jvm_forks.py [--drains 8] [--size full|smoke] [--seed 1]
+    python tools/jvm_forks.py
 
-The command runs the benchmark's ``sensor_replay`` drain (decode, a
-watermarked per-room minute rollup, the ``es_bulk_wire`` sink, with a
-checkpoint) once to warm up, then ``--drains`` more times under a Java
-Flight Recorder recording of ``jdk.ProcessStart`` events in the driver
-JVM, and prints the process starts by command, in total and per drain.
+The command runs the benchmark's full-size ``sensor_replay`` drain (seed
+1: decode, a watermarked per-room minute rollup, the ``es_bulk_wire``
+sink, with a checkpoint) once to warm up, then ``DRAINS`` (8) more times
+under a Java Flight Recorder recording of ``jdk.ProcessStart`` events in
+the driver JVM, and prints the process starts by command, in total and per drain.
 The last line of stdout is the same as JSON.
 
 ``process_starts(pid, fn)`` is the reusable part: it records while
@@ -17,7 +17,6 @@ process the JVM with ``pid`` started meanwhile. It needs ``jcmd`` and
 
 from __future__ import annotations
 
-import argparse
 import collections
 import json
 import os
@@ -28,6 +27,7 @@ import tempfile
 import uuid
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DRAINS, SIZE, SEED = 8, "full", 1
 
 #: a recording of process starts only, without stack traces
 _SETTINGS = """<?xml version="1.0" encoding="UTF-8"?>
@@ -79,12 +79,7 @@ def driver_pid(spark) -> int:
     return spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
 
 
-def main(argv: list[str]) -> int:
-    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    p.add_argument("--drains", type=int, default=8)
-    p.add_argument("--size", default="full", choices=("full", "smoke"))
-    p.add_argument("--seed", type=int, default=1)
-    args = p.parse_args(argv)
+def main() -> int:
     if not available():
         print("jvm_forks: jcmd and jfr are needed", file=sys.stderr)
         return 2
@@ -93,14 +88,14 @@ def main(argv: list[str]) -> int:
 
     work = tempfile.mkdtemp(prefix="jvm_forks_work_")
     try:
-        ctx = workloads.Context(work, args.seed, 0.0, args.size)
+        ctx = workloads.Context(work, SEED, 0.0, SIZE)
         ctx.start_session()
         state = workloads.replay_prepare(ctx)
         workloads.replay_warm(ctx, state)
         per_trigger = ctx.size["replay"]["per_trigger"]
 
         def drains():
-            for _ in range(args.drains):
+            for _ in range(DRAINS):
                 workloads.drain(ctx, state[1], per_trigger)
 
         _, commands = process_starts(driver_pid(ctx.spark), drains)
@@ -109,11 +104,11 @@ def main(argv: list[str]) -> int:
         shutil.rmtree(work, ignore_errors=True)
     counts = by_program(commands)
     for prog, n in sorted(counts.items(), key=lambda kv: -kv[1]):
-        print(f"{prog:>12}  {n:6d}  {n / args.drains:8.1f} per drain")
-    print(json.dumps({"drains": args.drains, "starts": len(commands),
-                      "per_drain": len(commands) / args.drains, "by_program": counts}))
+        print(f"{prog:>12}  {n:6d}  {n / DRAINS:8.1f} per drain")
+    print(json.dumps({"drains": DRAINS, "starts": len(commands),
+                      "per_drain": len(commands) / DRAINS, "by_program": counts}))
     return 0
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1:]))
+    sys.exit(main())
