@@ -2097,15 +2097,20 @@ def _stage_stream_files(stage: str, src: str, name: str) -> float:
 
 
 def _run_event_stream_query(
-    spark: SparkSession, sf_dir: str, name: str, build, output_mode: str = "complete"
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    build,
+    output_mode: str = "complete",
+    kind: str = "plain",
 ) -> DataFrame:
     """Drive a streaming query over the events table as a file stream.
 
     Fixed-name memory sink (prior incarnation stopped & dropped per
-    call) and a process-shared staging dir (_staged_events_dir), so
-    repeated runs in one process don't accumulate tables or temp dirs
-    and don't re-stage. `build` maps the typed stream → streaming
-    DataFrame.
+    call) and a process-shared staging dir (_staged_events_dir, with
+    the watermark sentinel `kind`), so repeated runs in one process
+    don't accumulate tables or temp dirs and don't re-stage. `build`
+    maps the typed stream → streaming DataFrame.
     """
     # stop any prior incarnation + drop its table before re-registering
     for active in spark.streams.active:
@@ -2126,7 +2131,7 @@ def _run_event_stream_query(
         # bounded replay: 1.3s vs 1.8s at 32). Size this ≈ micro-batch
         # volume / healthy-partition size in production, not per-core.
         spark.conf.set("spark.sql.shuffle.partitions", "8")
-        stage, batch_schema = _staged_events_dir(spark, sf_dir)
+        stage, batch_schema = _staged_events_dir(spark, sf_dir, kind=kind)
         stream = readers.file_stream(spark, stage, batch_schema)
         # normalize ts (TIMESTAMP_NTZ in the file) to TIMESTAMP (LTZ,
         # session=UTC)
@@ -8027,22 +8032,8 @@ def q_streaming_windowed_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     then equals the batch per-hour argmax the oracle runs. State:
     2 h watermark bounds both stores; rows are (window, type)-grain.
     Output: (ws, top_type, top_cnt), window-start-ordered."""
-    name = "stream_windowed_top1_mem"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-    spark.catalog.dropTempView(name)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # shared staging (pyarrow sentinel, mtime-stamped after the
-        # data so oldest-first ordering can never batch it ahead)
-        stage, batch_schema = _staged_events_dir(
-            spark, sf_dir, kind="wm1"
-        )
-        stream = readers.file_stream(spark, stage, batch_schema)
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+
+    def build(stream):
         counts = (
             stream.withWatermark("ts", "2 hours")
             .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -8056,16 +8047,15 @@ def q_streaming_windowed_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("top")
         )
-        out = top1.select(
+        return top1.select(
             F.col("window.start").cast("long").alias("ws"),
             F.col("top.et").alias("top_type"),
             (-F.col("top.nc")).cast("long").alias("top_cnt"),
         )
-        q = streaming.run_to_memory(out, name, output_mode="append")
-        q.stop()
-        return spark.table(name).orderBy("ws")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
+
+    return _run_event_stream_query(
+        spark, sf_dir, "stream_windowed_top1_mem", build, "append", kind="wm1"
+    ).orderBy("ws")
 
 
 def q_theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9948,33 +9938,17 @@ def q_streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle runs (click_id coalesced to −1 so the schema stays BIGINT).
     At 100 TB the same topology runs on Kafka with the watermark
     advanced by live traffic instead of a sentinel; state stays
-    bounded by the 2 h watermark × arrival rate."""
-    name = "stream_left_outer_mem"
-    for active in spark.streams.active:
-        if active.name == name:
-            active.stop()
-    spark.catalog.dropTempView(name)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        # shared staging: symlinks + the two-sided pyarrow sentinel
-        # (click + purchase under impossible user ids), mtime-stamped
-        # strictly after the data so oldest-first never reorders it
-        stage, batch_schema = _staged_events_dir(
-            spark, sf_dir, kind="wm2"
-        )
-        # ONE availableNow batch for data + sentinel (r16 probe, guide
-        # §2.1): maxFilesPerTrigger=1 forced a data batch, a sentinel
-        # batch, and the eviction batch — but the watermark only
-        # advances at END of batch, so same-batch rows are never "late"
-        # relative to each other and the join's output SET is
-        # batching-invariant (the docstring's replay argument). The
-        # file-later-than-data mtime ordering still guards any reader
-        # that DOES split batches. One stateful micro-batch fewer per
-        # run; oracle hash unchanged.
-        stream = readers.file_stream(spark, stage, batch_schema)
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    bounded by the 2 h watermark × arrival rate.
+
+    ONE availableNow batch carries data + sentinel (r16 probe, guide
+    §2.1): maxFilesPerTrigger=1 forced a data batch, a sentinel batch,
+    and the eviction batch — but the watermark only advances at END of
+    batch, so same-batch rows are never "late" relative to each other
+    and the join's output SET is batching-invariant (the replay argument
+    above). The sentinel files' mtime, stamped after the data's, still
+    guards any reader that DOES split batches."""
+
+    def build(stream):
         purchases = stream.filter(
             F.col("event_type") == "purchase"
         ).select(
@@ -9995,16 +9969,15 @@ def q_streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "left_outer",
         )
-        out = joined.select(
+        return joined.select(
             "purchase_id",
             F.coalesce("click_id", F.lit(-1)).alias("click_id"),
             F.col("p_user").alias("user_id"),
         )
-        q = streaming.run_to_memory(out, name, output_mode="append")
-        q.stop()
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
+
+    return _run_event_stream_query(
+        spark, sf_dir, "stream_left_outer_mem", build, "append", kind="wm2"
+    )
 
 
 #: BPE training depth for the gated queries: enough merges that

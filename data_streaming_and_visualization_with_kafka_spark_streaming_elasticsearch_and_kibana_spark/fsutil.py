@@ -1,10 +1,11 @@
-"""Stage-then-swap directory commits — shared by the streaming sinks
-that publish partition directories atomically (rollup refresh, batch
-compaction) and by the READERS of those stores, which must resolve a
-mid-swap crash's leftovers before Spark's partition discovery sees a
-`<dir>.old` / `<dir>.staging` as a bogus partition value — and the
-artifact store (`materialize`) every cached index, format copy and
-memoized streaming run of the query catalog is built through.
+"""Stage-then-swap directory commits — `replace_dir`, the one writer
+of a live directory the streaming sinks rewrite (sketch state, rollup
+day partitions, component tables, batch compaction), and the readers'
+`recover_partition_swaps`, which resolves a mid-swap crash's leftovers
+before Spark's partition discovery sees a `<dir>.old` / `<dir>.staging`
+as a bogus partition value — and the artifact store (`materialize`)
+every cached index, format copy and memoized streaming run of the
+query catalog is built through.
 
 Local-FS commit protocol by design: on HDFS/S3 this role is played by
 a table format's transaction log (Delta/Iceberg) — the call sites are
@@ -41,15 +42,20 @@ def recover_dir_swap(ddir: str) -> None:
         shutil.rmtree(staging)
 
 
-def commit_dir_swap(ddir: str) -> None:
-    """Commit `<ddir>.staging` as `<ddir>`: the old dir is renamed
-    ASIDE, not rmtree'd, before the swap — so no crash window ever
-    leaves the target with neither the old nor the new state on disk
+def replace_dir(path: str, write) -> None:
+    """Replace directory `path` with what `write(staging)` writes into
+    a sibling: leftovers of a crashed earlier swap are resolved first,
+    `path` stays readable while `write` runs (a lazy plan may still be
+    reading it), and the live dir is renamed ASIDE, not rmtree'd,
+    before the staged one takes its name — so no crash window ever
+    leaves `path` with neither the old nor the new state on disk
     (`recover_dir_swap` resolves every intermediate state)."""
-    retired = ddir + ".old"
-    if os.path.exists(ddir):
-        os.replace(ddir, retired)
-    os.replace(ddir + ".staging", ddir)
+    recover_dir_swap(path)
+    staging, retired = path + ".staging", path + ".old"
+    write(staging)
+    if os.path.exists(path):
+        os.replace(path, retired)
+    os.replace(staging, path)
     if os.path.exists(retired):
         shutil.rmtree(retired)
 

@@ -4,14 +4,41 @@ The reference streams Kafka → parse → ES with zero event-time handling
 (no watermark, no window, no stateful op — SURVEY §2.10 T6). The engine
 supplies the full set:
 
-  decode_stream        — P3/F5|F8/P4 (cast → decode → flatten), either wire format
   windowed_rollup      — watermarked tumbling/sliding window aggregation
   session_rollup       — session windows (gap-based)
   latest_value_view    — keyed last-write-wins (T5: the ES doc-id=room
                          upsert semantics, expressed in the engine itself)
+  dedup_within_watermark — state-evicting at-least-once source dedup
   stream_static_enrich — T7: stream ⋈ broadcast static dimension table
+  stream_stream_outer_join — watermarked left outer interval join
+  ewma_view, running_totals_view — custom stateful operators
   throttled_replay     — principled version of the producer throttle (O2):
                          source-bounded intake + ProcessingTime trigger
+  run_to_memory, drain_to_sink — bounded availableNow drivers
+  foreachBatch sinks   — one directory of state each: sketch_rollup (HLL),
+                         cms/kmv/logbucket/stats/bloom_refresh; output in
+                         several directories: rollup_refresh, quality_gate,
+                         dedup_ingest, semantic_dedup_ingest, pq_ingest,
+                         ann_serving, dhash_ingest, token_budget — with
+                         compact_batch_dirs/read_batch_dirs and the
+                         *_view readers over their output
+
+Replay protocol: foreachBatch is at-least-once — a restarted query
+replays its last uncommitted batch under the same id, and ids rise
+monotonically per checkpoint (so a sink root serves one checkpoint).
+Every sink therefore keeps one ledger, an `_APPLIED` file holding the
+highest batch id it applied, and skips any id at or below it (Spark's
+FileStreamSink skips `batchId <= latest` on the same reasoning). Every rewrite of a live directory goes through
+`fsutil.replace_dir` (recover a crash's leftovers, stage, rename aside,
+swap). The one-directory sinks (`_state_sink`) write the mark into the
+staged state, so one rename commits state and mark together; the
+multi-directory sinks (`_once_per_batch`) mark after their last write.
+The one remaining limit: a multi-directory sink that crashes after some
+of its directories committed, but before its mark, re-applies them on
+replay — harmless where the batch rewrites its own `ingest=N` directory
+or re-folds the same component edges, double-counted in the rollup's
+committed days and the appended output of ann_serving, dhash_ingest and
+token_budget. Atomicity across directories needs a table format.
 
 Scale notes: watermarks bound state; for 100 TB streams use the RocksDB
 state store (`spark.sql.streaming.stateStore.providerClass`) and
@@ -20,27 +47,80 @@ per-query checkpoint dirs (the reference shared one dir — T2 bug).
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.codecs import decode_kafka_value
+from ..fsutil import recover_dir_swap, recover_partition_swaps, replace_dir
 
-# stage-then-swap commit protocol — implementation shared with the
-# reader side (operators.rollup) via the package-level fsutil module
-from ..fsutil import commit_dir_swap as _commit_dir_swap
-from ..fsutil import recover_dir_swap as _recover_dir_swap
-from ..fsutil import recover_partition_swaps as _recover_partition_swaps
+#: the applied-batch ledger file of every foreachBatch sink
+_APPLIED = "_APPLIED"
 
 
-def decode_stream(
-    raw: DataFrame,
-    schema: T.StructType | str,
-    wire_format: str = "json",
-    sep: str = ",",
-) -> DataFrame:
-    """Kafka-shaped stream (key/value binary) → typed record stream."""
-    return decode_kafka_value(raw, schema, wire_format, sep)
+def _applied(root: str, batch_id: int) -> bool:
+    """True when `batch_id` is at or below the ledger mark in `root`."""
+    try:
+        with open(os.path.join(root, _APPLIED)) as f:
+            return batch_id <= int(f.read())
+    except FileNotFoundError:
+        return False
+
+
+def _mark(root: str, batch_id: int) -> None:
+    """Set the ledger mark: write-then-rename, so a crash leaves the old
+    mark or the new one, never a torn file."""
+    tmp = os.path.join(root, _APPLIED + ".tmp")
+    with open(tmp, "w") as f:
+        f.write(str(batch_id))
+    os.replace(tmp, os.path.join(root, _APPLIED))
+
+
+def _once_per_batch(root: str, apply):
+    """foreachBatch sink for output that spans several directories:
+    `apply(batch_df, batch_id)` runs unless the id is at or below the
+    mark in `root`, and the mark follows its last write."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        os.makedirs(root, exist_ok=True)
+        if _applied(root, batch_id):
+            return
+        apply(batch_df, batch_id)
+        _mark(root, batch_id)
+
+    return sink
+
+
+def _swap_merged(path: str, fresh: DataFrame, merge, batch_id=None) -> None:
+    """Replace `path` with `merge(stored, fresh)`, or with `fresh` while
+    it holds no state yet; a `batch_id` is marked inside the staged
+    directory, so the swap commits state and mark together."""
+
+    def write(staging: str) -> None:
+        out = fresh
+        if os.path.exists(path):
+            out = merge(fresh.sparkSession.read.parquet(path), fresh)
+        out.write.mode("overwrite").parquet(staging)
+        if batch_id is not None:
+            _mark(staging, batch_id)
+
+    replace_dir(path, write)
+
+
+def _state_sink(path: str, build, merge):
+    """foreachBatch sink whose whole state is the one directory `path`:
+    `build(batch_df)` summarizes a non-empty batch and `merge(stored,
+    fresh)` folds it into the stored state."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        recover_dir_swap(path)
+        if _applied(path, batch_id) or batch_df.isEmpty():
+            return
+        _swap_merged(path, build(batch_df), merge, batch_id)
+
+    return sink
 
 
 def windowed_rollup(
@@ -205,22 +285,14 @@ def rollup_refresh_sink(
     keeps history current at 100 TB without ever rescanning it."""
     from ..operators.rollup import minute_rollup_frame
 
+    def merge(stored: DataFrame, fresh: DataFrame) -> DataFrame:
+        return (
+            stored.unionByName(fresh)
+            .groupBy("minute", *keys)
+            .agg(F.sum("n").alias("n"), F.sum("value_cents").alias("value_cents"))
+        )
+
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
-        # foreachBatch is at-least-once: a crash between the last day
-        # swap and the checkpoint commit replays this batch_id — without
-        # this ledger the replayed delta would double-merge into the
-        # already-updated partitions. (A replay of a PARTIALLY-applied
-        # batch still double-merges the days that committed; full
-        # cross-day atomicity needs a table format — documented limit.)
-        ledger = os.path.join(path, "_APPLIED_BATCHES")
-        applied = _ledger_applied(ledger)
-        if batch_id in applied:
-            return
-
-        spark = batch_df.sparkSession
         delta = minute_rollup_frame(batch_df, ts_col, keys, value_col)
         delta = delta.withColumn("dt", F.to_date("minute"))
         # the rolled-up partials are tiny; persist so isEmpty, the day
@@ -234,61 +306,16 @@ def rollup_refresh_sink(
         # round-trip, like a refresh job reading its invalidation log
         days = [r[0] for r in delta.select("dt").distinct().collect()]
         for day in days:
-            ddir = os.path.join(path, f"dt={day.isoformat()}")
-            _recover_dir_swap(ddir)
-            merged = delta.filter(F.col("dt") == F.lit(day)).drop("dt")
-            if os.path.exists(ddir):
-                merged = (
-                    spark.read.parquet(ddir)
-                    .unionByName(merged)
-                    .groupBy("minute", *keys)
-                    .agg(
-                        F.sum("n").alias("n"),
-                        F.sum("value_cents").alias("value_cents"),
-                    )
-                )
-            # stage-then-swap: never overwrite the directory a lazy plan
-            # is still reading from (on HDFS/S3 this step is a commit
-            # protocol / table format; locally rename is the commit).
-            merged.write.mode("overwrite").parquet(ddir + ".staging")
-            _commit_dir_swap(ddir)
+            _swap_merged(
+                os.path.join(path, f"dt={day.isoformat()}"),
+                delta.filter(F.col("dt") == F.lit(day)).drop("dt"),
+                merge,
+            )
         delta.unpersist()
         # root marker: partition dirs are discoverable from here on
         open(os.path.join(path, "_SUCCESS"), "a").close()
-        _ledger_mark(ledger, applied, batch_id)
 
-    return _apply
-
-
-
-
-def _ledger_applied(path: str) -> list[int]:
-    """Read the applied-batch ledger (shared by the idempotent
-    foreachBatch sinks); tolerate a truncated file from a crash mid-
-    rewrite — worst case the batch re-applies, which the sinks' write
-    modes make safe."""
-    import json
-    import os
-
-    if not os.path.exists(path):
-        return []
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except ValueError:
-        return []
-
-
-def _ledger_mark(path: str, applied: list[int], batch_id: int) -> None:
-    """Atomic ledger update: write-temp-then-rename so a crash never
-    leaves truncated JSON that would fail every restart."""
-    import json
-    import os
-
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(applied + [batch_id], f)
-    os.replace(tmp, path)
+    return _once_per_batch(path, _apply)
 
 
 def quality_gate_sink(
@@ -303,23 +330,16 @@ def quality_gate_sink(
     the list of failed checks so triage never has to re-derive WHY a row
     was rejected. Both sides land in per-batch directories with
     overwrite, so foreachBatch's at-least-once replay rewrites rather
-    than duplicates; the applied-batch ledger additionally fast-path
-    skips replays — REQUIRED once `compact_batch_dirs` runs, because a
-    replay after compaction deleted `ingest=N` would otherwise resurrect
-    the batch next to its compacted copy.
+    than duplicates; the ledger's skip is REQUIRED once
+    `compact_batch_dirs` runs, because a replay after compaction deleted
+    `ingest=N` would otherwise resurrect the batch next to its compacted
+    copy.
 
     `violations`: list of (name, Column predicate TRUE-where-violated) —
     the same predicate convention operators.quality.violation wraps into
     aggregate counters, applied here row-wise instead."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        os.makedirs(good_path, exist_ok=True)
-        ledger = os.path.join(good_path, "_APPLIED_BATCHES")
-        applied = _ledger_applied(ledger)
-        if batch_id in applied:
-            return
         if batch_df.isEmpty():
             return
         from ..operators.quality import tag_failures
@@ -336,9 +356,8 @@ def quality_gate_sink(
             .parquet(f"{quarantine_path}/ingest={batch_id}")
         )
         tagged.unpersist()
-        _ledger_mark(ledger, applied, batch_id)
 
-    return _apply
+    return _once_per_batch(good_path, _apply)
 
 
 #: partition value holding compacted rows (real batch ids are >= 0)
@@ -365,12 +384,8 @@ def compact_batch_dirs(
     Returns the number of batch dirs folded (0 = below `min_batches`,
     nothing touched). Run it from a scheduled maintenance job or every
     K-th micro-batch; reading N small batch dirs is the only cost."""
-    import json
-    import os
-    import shutil
-
     cdir = os.path.join(root, f"ingest={_COMPACTED}")
-    _recover_dir_swap(cdir)
+    recover_dir_swap(cdir)
     included = _compacted_ids(root)
     victims = []
     for name in sorted(os.listdir(root) if os.path.exists(root) else []):
@@ -389,20 +404,19 @@ def compact_batch_dirs(
     if os.path.exists(cdir):
         paths.append(cdir)
     merged = spark.read.parquet(*paths).coalesce(target_files)
-    staging = cdir + ".staging"
-    merged.write.mode("overwrite").parquet(staging)
-    with open(os.path.join(staging, "_INCLUDED"), "w") as f:
-        json.dump(sorted(included + victims), f)
-    _commit_dir_swap(cdir)
+
+    def write(staging: str) -> None:
+        merged.write.mode("overwrite").parquet(staging)
+        with open(os.path.join(staging, "_INCLUDED"), "w") as f:
+            json.dump(sorted(included + victims), f)
+
+    replace_dir(cdir, write)
     for b in victims:
         shutil.rmtree(os.path.join(root, f"ingest={b}"))
     return len(victims)
 
 
 def _compacted_ids(root: str) -> list[int]:
-    import json
-    import os
-
     marker = os.path.join(root, f"ingest={_COMPACTED}", "_INCLUDED")
     if not os.path.exists(marker):
         return []
@@ -419,9 +433,7 @@ def read_batch_dirs(spark, root: str) -> DataFrame:
     compacted partition are excluded even if a crashed cleanup left
     their directory behind. The id filter is on the partition column,
     so it prunes directories, not rows."""
-    import os
-
-    _recover_partition_swaps(root)
+    recover_partition_swaps(root)
     df = spark.read.parquet(root)
     leftovers = [
         b
@@ -447,32 +459,18 @@ def dedup_ingest_sink(
     to a per-batch subdirectory of `verdicts_path`, and the index
     extended with the batch — new data is deduplicated against the WHOLE
     corpus seen so far while only ever paying batch-sized signature work.
-
-    Replay safety (foreachBatch is at-least-once): the ledger fast-path
-    skips already-applied batches, and a replay that DOES re-run (crash
-    before the ledger commit) is harmless — index extension and verdicts
-    both land in per-batch directories with overwrite, and the probe
-    excludes same-id matches, so the rerun rewrites exactly the state
-    the crashed attempt left.
+    A rerun of a batch rewrites the per-batch index and verdict
+    directories it left, and the probe excludes same-id matches.
 
     With `maintain_components` the sink also keeps the CLUSTER state
     current: each batch's (new_id, dup_of) verdict edges fold into the
     persisted (id, component) table via incremental_components — the
     affected-component relabel, batch-sized work — so the keep-list
     never needs a from-scratch corpus re-cluster (incremental == batch
-    recompute, pinned in tests/test_dedup.py). Re-folding the same
-    edges on replay is a no-op (merging merged components), so the
-    at-least-once contract holds without extra bookkeeping."""
-    from ..operators.dedup import dedup_index_probe_and_extend, incremental_components
+    recompute, pinned in tests/test_dedup.py)."""
+    from ..operators.dedup import dedup_index_probe_and_extend
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        os.makedirs(index_path, exist_ok=True)
-        ledger = os.path.join(index_path, "_APPLIED_BATCHES")
-        applied = _ledger_applied(ledger)
-        if batch_id in applied:
-            return
         if batch_df.isEmpty():
             return
         verdicts = dedup_index_probe_and_extend(
@@ -484,37 +482,46 @@ def dedup_ingest_sink(
             threshold=threshold,
             batch_tag=str(batch_id),
         )
-        verdicts.write.mode("overwrite").parquet(
-            os.path.join(verdicts_path, f"ingest={batch_id}")
-        )
+        vdir = os.path.join(verdicts_path, f"ingest={batch_id}")
+        verdicts.write.mode("overwrite").parquet(vdir)
         if maintain_components:
-            spark = batch_df.sparkSession
             edges = (
-                spark.read.parquet(
-                    os.path.join(verdicts_path, f"ingest={batch_id}")
-                )
+                batch_df.sparkSession.read.parquet(vdir)
                 .filter(F.col("is_dup"))
                 .select(
                     F.col(id_col).alias("id_a"), F.col("dup_of").alias("id_b")
                 )
             )
-            comp_dir = os.path.join(index_path, "components")
-            _recover_dir_swap(comp_dir)
-            id_type = dict(batch_df.dtypes)[id_col]
-            labels = (
-                spark.read.parquet(comp_dir)
-                if os.path.exists(comp_dir)
-                else spark.createDataFrame(
-                    [], f"id {id_type}, component {id_type}"
-                )
+            _fold_components(
+                os.path.join(index_path, "components"),
+                edges,
+                dict(batch_df.dtypes)[id_col],
             )
-            incremental_components(labels, edges).write.mode(
-                "overwrite"
-            ).parquet(comp_dir + ".staging")
-            _commit_dir_swap(comp_dir)
-        _ledger_mark(ledger, applied, batch_id)
 
-    return _apply
+    return _once_per_batch(index_path, _apply)
+
+
+def _components(spark, comp_dir: str, id_type: str = "bigint") -> DataFrame:
+    """The persisted (id, component) table, empty before the first fold."""
+    recover_dir_swap(comp_dir)
+    if os.path.exists(comp_dir):
+        return spark.read.parquet(comp_dir)
+    return spark.createDataFrame([], f"id {id_type}, component {id_type}")
+
+
+def _fold_components(comp_dir: str, edges: DataFrame, id_type: str = "bigint") -> None:
+    """Fold `edges` into the persisted (id, component) table through
+    incremental_components — the affected-component relabel, batch-sized
+    work; re-folding edges it already holds changes nothing."""
+    from ..operators.dedup import incremental_components
+
+    labels = _components(edges.sparkSession, comp_dir, id_type)
+    replace_dir(
+        comp_dir,
+        lambda staging: incremental_components(labels, edges)
+        .write.mode("overwrite")
+        .parquet(staging),
+    )
 
 
 def semantic_dedup_ingest_sink(
@@ -539,14 +546,9 @@ def semantic_dedup_ingest_sink(
     re-cluster. semantic_dedup_state_view reconstructs the EXACT batch
     output contract (component, n_members, keep_id, keep_cos_micro)
     from the persisted state; streamed == batch is pinned in
-    tests/test_streaming.py.
-
-    Replay safety (foreachBatch is at-least-once): the ledger fast-path
-    skips applied batches; a replay that does re-run rewrites its
-    per-batch vector directory with overwrite and re-derives the SAME
-    edges (matching against state that already includes its prior
-    write is harmless — self-pairs are excluded by id inequality, and
-    re-folding known edges into components is a no-op merge).
+    tests/test_streaming.py. A rerun of a batch rewrites its per-batch
+    vector directory and re-derives the SAME edges (self-pairs are
+    excluded by id inequality).
 
     Why components here need the GENERAL incremental machinery while
     the batch path's union-find is cluster-local: the batch kernel sees
@@ -557,19 +559,11 @@ def semantic_dedup_ingest_sink(
     import numpy as np
     import pandas as pd
 
-    from ..operators.dedup import incremental_components
     from ..operators.similarity import semantic_assign_scored
 
     thr = float(threshold)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        os.makedirs(index_path, exist_ok=True)
-        ledger = os.path.join(index_path, "_APPLIED_BATCHES")
-        applied = _ledger_applied(ledger)
-        if batch_id in applied:
-            return
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
@@ -624,20 +618,9 @@ def semantic_dedup_ingest_sink(
             .applyInPandas(_cell_edges, "id_a long, id_b long")
             .dropDuplicates(["id_a", "id_b"])
         )
-        comp_dir = os.path.join(index_path, "components")
-        _recover_dir_swap(comp_dir)
-        labels = (
-            spark.read.parquet(comp_dir)
-            if os.path.exists(comp_dir)
-            else spark.createDataFrame([], "id long, component long")
-        )
-        incremental_components(labels, edges).write.mode(
-            "overwrite"
-        ).parquet(comp_dir + ".staging")
-        _commit_dir_swap(comp_dir)
-        _ledger_mark(ledger, applied, batch_id)
+        _fold_components(os.path.join(index_path, "components"), edges)
 
-    return _apply
+    return _once_per_batch(index_path, _apply)
 
 
 def semantic_dedup_state_view(spark, index_path: str) -> DataFrame:
@@ -647,18 +630,10 @@ def semantic_dedup_state_view(spark, index_path: str) -> DataFrame:
     prototypical member per component — identical columns and
     semantics to semantic_dedup_keep (component, n_members, keep_id,
     keep_cos_micro); equality is pinned in tests/test_streaming.py."""
-    import os
-
     vecs = spark.read.parquet(os.path.join(index_path, "vectors")).select(
         "vec_id", "cent_cos_micro"
     )
-    comp_dir = os.path.join(index_path, "components")
-    _recover_dir_swap(comp_dir)
-    labels = (
-        spark.read.parquet(comp_dir)
-        if os.path.exists(comp_dir)
-        else spark.createDataFrame([], "id long, component long")
-    )
+    labels = _components(spark, os.path.join(index_path, "components"))
     m = vecs.join(
         labels.withColumnRenamed("id", "vec_id"), "vec_id", "left"
     ).select(
@@ -867,21 +842,13 @@ def pq_ingest_sink(
     directory, so ANN serving reads a fresh index (read_batch_dirs →
     pq_multi_query_topk) without ever re-encoding the corpus. Per-batch
     encode work is batch-sized regardless of index size — the 100 TB
-    shape. At-least-once safe like the other per-batch sinks: overwrite
-    per directory + the applied-batch ledger (REQUIRED once
-    compact_batch_dirs folds batch dirs). Codebooks are train-once
+    shape. Like quality_gate_sink, the ledger's skip is REQUIRED once
+    compact_batch_dirs folds batch dirs. Codebooks are train-once
     bounded-sample artifacts; retraining means re-encoding into a NEW
     index root offline, never mutating the live one mid-stream."""
     from ..operators.similarity import pq_encode_arrow
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        os.makedirs(index_path, exist_ok=True)
-        ledger = os.path.join(index_path, "_APPLIED_BATCHES")
-        applied = _ledger_applied(ledger)
-        if batch_id in applied:
-            return
         if batch_df.isEmpty():
             return
         (
@@ -890,9 +857,8 @@ def pq_ingest_sink(
             .write.mode("overwrite")
             .parquet(f"{index_path}/ingest={batch_id}")
         )
-        _ledger_mark(ledger, applied, batch_id)
 
-    return _apply
+    return _once_per_batch(index_path, _apply)
 
 
 def sketch_rollup_sink(
@@ -902,54 +868,29 @@ def sketch_rollup_sink(
 ):
     """foreachBatch sink maintaining per-day HLL distinct-user sketches
     over an unbounded stream: each micro-batch is sketched in one
-    aggregation, merged with the stored binary sketches via hll_union
-    (FULL OUTER on day), and committed with the crash-safe stage-swap.
-    State is ONE fixed-size sketch per day regardless of stream length
-    or cardinality — the bounded-memory answer to "daily active users"
-    where storing raw ids grows without bound and dropDuplicates state
-    grows with cardinality.
+    aggregation and union-merged with the stored binary sketches per
+    day. State is ONE fixed-size sketch per day regardless of stream
+    length or cardinality — the bounded-memory answer to "daily active
+    users" where storing raw ids grows without bound and dropDuplicates
+    state grows with cardinality. Serving: hll_sketch_estimate over the
+    stored rows; estimates equal the batch q_sketch_distinct_rollup over
+    everything ingested because same-lgK union is lossless (pinned in
+    tests)."""
 
-    No applied-batch ledger, deliberately: HLL union is a max-merge, so
-    re-merging a replayed batch's sketch is a mathematical no-op —
-    at-least-once replay is safe by ALGEBRA here, where the sum-based
-    rollup_refresh_sink needs bookkeeping. (The stage-swap still guards
-    torn writes.) Serving: hll_sketch_estimate over the stored rows;
-    estimates equal the batch q_sketch_distinct_rollup over everything
-    ingested because same-lgK union is lossless (pinned in tests)."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        day = F.date_trunc("day", F.col(ts_col).cast("timestamp")).alias(
-            "day"
+    def build(batch_df: DataFrame) -> DataFrame:
+        day = F.date_trunc("day", F.col(ts_col).cast("timestamp"))
+        return batch_df.groupBy(day.alias("day")).agg(
+            F.hll_sketch_agg(id_col).alias("sk")
         )
-        fresh = batch_df.groupBy(day).agg(
-            F.hll_sketch_agg(id_col).alias("sk_new")
-        )
-        _recover_dir_swap(path)
-        if os.path.exists(path):
-            stored = spark.read.parquet(path).withColumnRenamed(
-                "sk", "sk_old"
-            )
-            merged = (
-                stored.join(fresh, "day", "full_outer")
-                .select(
-                    "day",
-                    F.when(F.col("sk_old").isNull(), F.col("sk_new"))
-                    .when(F.col("sk_new").isNull(), F.col("sk_old"))
-                    .otherwise(F.hll_union("sk_old", "sk_new"))
-                    .alias("sk"),
-                )
-            )
-        else:
-            merged = fresh.select("day", F.col("sk_new").alias("sk"))
-        merged.write.mode("overwrite").parquet(path + ".staging")
-        _commit_dir_swap(path)
 
-    return _apply
+    def merge(stored: DataFrame, fresh: DataFrame) -> DataFrame:
+        return (
+            stored.unionByName(fresh)
+            .groupBy("day")
+            .agg(F.hll_union_agg("sk").alias("sk"))
+        )
+
+    return _state_sink(path, build, merge)
 
 
 def cms_refresh_sink(
@@ -960,55 +901,23 @@ def cms_refresh_sink(
 ):
     """foreachBatch sink maintaining ONE count-min sketch grid over an
     unbounded stream: each micro-batch builds its own depth×width grid
-    (operators.sketches.cms_build — bounded shuffle, map-side combined),
-    cell-wise sums it into the stored grid, and commits with the
-    crash-safe stage-swap. Serving state is <= depth×width rows forever,
-    regardless of stream length or key cardinality — the streaming
-    answer to "how often has key X occurred, ever" without an unbounded
-    exact count table.
-
-    WITH an applied-batch ledger, deliberately — the mirror image of
-    sketch_rollup_sink's analysis: HLL union is max-based, so replays
-    are algebraically harmless there; CMS merge is SUM-based, so an
-    at-least-once replay would double-count a batch into the grid.
-    The ledger lives INSIDE the grid directory (written into the
-    staging dir before the swap), so state and ledger commit in the
-    same atomic rename — a crash between a separate swap and ledger
-    write would otherwise replay the batch into a grid that already
-    holds it. Estimates from the maintained grid equal a cms_build
-    over everything ingested (merge == whole, pinned in
-    tests/test_streaming.py), so downstream cms_estimate answers are
-    identical to batch recomputation."""
+    (operators.sketches.cms_build — bounded shuffle, map-side combined)
+    and cell-wise sums it into the stored grid. Serving state is
+    <= depth×width rows forever, regardless of stream length or key
+    cardinality — the streaming answer to "how often has key X
+    occurred, ever" without an unbounded exact count table. Estimates
+    from the maintained grid equal a cms_build over everything ingested
+    (merge == whole, pinned in tests/test_streaming.py), so downstream
+    cms_estimate answers are identical to batch recomputation."""
     from ..operators.sketches import cms_build, cms_merge
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import json
-        import os
-
-        _recover_dir_swap(path)
-        ledger = os.path.join(path, "_APPLIED")
-        applied = _ledger_applied(ledger)
-        if batch_id in applied:
-            return
-        if batch_df.isEmpty():
-            # nothing to merge; an empty replay is harmless, so no
-            # state swap is needed just to record the id
-            return
-        spark = batch_df.sparkSession
-        fresh = cms_build(batch_df, key_col, depth=depth, width=width)
-        if os.path.exists(path):
-            # cms_merge (not a raw cell sum): the parameter sentinel
-            # must dedup, not double
-            merged = cms_merge(spark.read.parquet(path), fresh)
-        else:
-            merged = fresh
-        merged.write.mode("overwrite").parquet(path + ".staging")
-        # ledger travels with the state: same rename commits both
-        with open(os.path.join(path + ".staging", "_APPLIED"), "w") as f:
-            json.dump(applied + [batch_id], f)
-        _commit_dir_swap(path)
-
-    return _apply
+    return _state_sink(
+        path,
+        lambda batch_df: cms_build(batch_df, key_col, depth=depth, width=width),
+        # cms_merge (not a raw cell sum): the parameter sentinel must
+        # dedup, not double
+        cms_merge,
+    )
 
 
 def kmv_refresh_sink(
@@ -1019,38 +928,19 @@ def kmv_refresh_sink(
 ):
     """foreachBatch sink maintaining per-group KMV distinct sketches
     over an unbounded stream: each micro-batch's bottom-k hash set
-    merges into the stored one (operators.sketches.kmv_merge) under the
-    crash-safe stage-swap. State is k longs per group forever.
-
-    This completes the sketch-sink replay-algebra triptych:
-    sketch_rollup_sink (HLL) is ledger-FREE because union is a
-    max-merge; cms_refresh_sink is LEDGERED because its merge is a sum;
-    KMV is ledger-free again — bottom-k over sets is a semilattice
-    (idempotent, commutative, associative), so re-merging a replayed
-    batch changes nothing. Unlike the HLL sink, the maintained state
-    here is fully deterministic (md5 family), so the batch
-    kmv_distinct_rollup oracle doubles as a check on the streamed
-    state: streamed == batch-built is pinned in tests."""
+    merges into the stored one (operators.sketches.kmv_merge). State is
+    k longs per group forever, and fully deterministic (md5 family), so
+    the batch kmv_distinct_rollup oracle doubles as a check on the
+    streamed state: streamed == batch-built is pinned in tests."""
     from ..operators.sketches import kmv_build, kmv_merge
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        fresh = kmv_build(batch_df, list(group_cols), key_col, k=k)
-        _recover_dir_swap(path)
-        if os.path.exists(path):
-            fresh = kmv_merge(
-                spark.read.parquet(path).unionByName(fresh),
-                list(group_cols),
-                k=k,
-            )
-        fresh.write.mode("overwrite").parquet(path + ".staging")
-        _commit_dir_swap(path)
-
-    return _apply
+    return _state_sink(
+        path,
+        lambda batch_df: kmv_build(batch_df, list(group_cols), key_col, k=k),
+        lambda stored, fresh: kmv_merge(
+            stored.unionByName(fresh), list(group_cols), k=k
+        ),
+    )
 
 
 def logbucket_refresh_sink(
@@ -1062,40 +952,18 @@ def logbucket_refresh_sink(
     sketches over an unbounded stream — streaming percentiles with
     bounded state (≤512 bucket rows per group forever) and a relative-
     error guarantee, where exact streaming percentiles would need the
-    full value history.
-
-    Replay algebra: LEDGERED, like cms_refresh_sink — bucket-count
-    merge is a SUM, so an at-least-once replay would double-count; the
-    ledger commits inside the staging dir so state and bookkeeping
-    swap atomically. Streamed state == batch logbucket_build over
+    full value history. Streamed state == batch logbucket_build over
     everything ingested (pinned in tests), so logbucket_quantile
     serves identical answers from the maintained directory."""
     from ..operators.sketches import logbucket_build, logbucket_merge
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import json
-        import os
-
-        _recover_dir_swap(path)
-        ledger = os.path.join(path, "_APPLIED")
-        applied = _ledger_applied(ledger)
-        if batch_id in applied:
-            return
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        fresh = logbucket_build(batch_df, list(group_cols), value_col)
-        if os.path.exists(path):
-            fresh = logbucket_merge(
-                spark.read.parquet(path).unionByName(fresh),
-                list(group_cols),
-            )
-        fresh.write.mode("overwrite").parquet(path + ".staging")
-        with open(os.path.join(path + ".staging", "_APPLIED"), "w") as f:
-            json.dump(applied + [batch_id], f)
-        _commit_dir_swap(path)
-
-    return _apply
+    return _state_sink(
+        path,
+        lambda batch_df: logbucket_build(batch_df, list(group_cols), value_col),
+        lambda stored, fresh: logbucket_merge(
+            stored.unionByName(fresh), list(group_cols)
+        ),
+    )
 
 
 def stats_refresh_sink(
@@ -1111,31 +979,14 @@ def stats_refresh_sink(
     bounded at one row per group forever. Completes the maintained-
     model family: CMS (frequency), KMV (cardinality), Bloom
     (membership), log-bucket (quantiles), moments (mean/variance).
-
-    Replay algebra: LEDGERED, like cms/logbucket — moment merge is a
-    SUM, so an at-least-once replay would double-count; the ledger
-    commits inside the staging dir so state and bookkeeping swap
-    atomically. Streamed state == the batch aggregate over everything
-    ingested (pinned in tests), so the outlier inequality
+    Streamed state == the batch aggregate over everything ingested
+    (pinned in tests), so the outlier inequality
     n·(n·v − S)² > 9·n·(n·Σv² − S²) answers identically from the
     maintained directory."""
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import json
-        import os
-
-        from pyspark.sql import functions as F
-
-        _recover_dir_swap(path)
-        ledger = os.path.join(path, "_APPLIED")
-        applied = _ledger_applied(ledger)
-        if batch_id in applied:
-            return
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def build(batch_df: DataFrame) -> DataFrame:
         v = F.round(F.col(value_col) * 100).cast("long")
-        fresh = (
+        return (
             batch_df.filter(F.col(value_col).isNotNull())
             .select(*group_cols, v.alias("__v"))
             .groupBy(*group_cols)
@@ -1145,23 +996,14 @@ def stats_refresh_sink(
                 F.sum(F.col("__v") * F.col("__v")).alias("s2"),
             )
         )
-        if os.path.exists(path):
-            fresh = (
-                spark.read.parquet(path)
-                .unionByName(fresh)
-                .groupBy(*group_cols)
-                .agg(
-                    F.sum("n").alias("n"),
-                    F.sum("s").alias("s"),
-                    F.sum("s2").alias("s2"),
-                )
-            )
-        fresh.write.mode("overwrite").parquet(path + ".staging")
-        with open(os.path.join(path + ".staging", "_APPLIED"), "w") as f:
-            json.dump(applied + [batch_id], f)
-        _commit_dir_swap(path)
 
-    return _apply
+    return _state_sink(
+        path,
+        build,
+        lambda stored, fresh: stored.unionByName(fresh)
+        .groupBy(*group_cols)
+        .agg(*[F.sum(c).alias(c) for c in ("n", "s", "s2")]),
+    )
 
 
 def bloom_refresh_sink(
@@ -1177,32 +1019,19 @@ def bloom_refresh_sink(
     dropDuplicatesWithinWatermark forgets past the horizon; the Bloom
     answers forever in ≤ n_bits rows, trading exactness for a bounded
     false-positive rate and keeping the no-false-negative guarantee).
-
-    Replay algebra: ledger-FREE, like the HLL and KMV sinks — bit-set
-    union is a semilattice (idempotent OR), so re-merging a replayed
-    batch is a no-op; the stage-swap alone guards torn writes. The md5
-    bit family keeps the maintained state fully deterministic, so
-    streamed state == bloom_build over everything ingested (pinned in
-    tests), and batch bloom_probe serves directly from the maintained
-    directory."""
+    The md5 bit family keeps the maintained state fully deterministic,
+    so streamed state == bloom_build over everything ingested (pinned
+    in tests), and batch bloom_probe serves directly from the
+    maintained directory."""
     from ..operators.sketches import bloom_build, bloom_merge
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        fresh = bloom_build(
+    return _state_sink(
+        path,
+        lambda batch_df: bloom_build(
             batch_df, key_col, n_hashes=n_hashes, n_bits=n_bits
-        )
-        _recover_dir_swap(path)
-        if os.path.exists(path):
-            fresh = bloom_merge(spark.read.parquet(path), fresh)
-        fresh.write.mode("overwrite").parquet(path + ".staging")
-        _commit_dir_swap(path)
-
-    return _apply
+        ),
+        bloom_merge,
+    )
 
 
 def dedup_within_watermark(
@@ -1286,7 +1115,7 @@ def ann_serving_sink(
         )
         out.write.mode("append").parquet(out_path)
 
-    return sink
+    return _once_per_batch(out_path, sink)
 
 
 def dhash_ingest_sink(
@@ -1317,8 +1146,6 @@ def dhash_ingest_sink(
     one driver hash pins stream ≡ batch ≡ SQL replay (the gated
     catalog entry reuses the batch DuckDB twin verbatim), and
     stream-vs-batch equality is pinned in tests/test_streaming.py."""
-    import os
-
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators import (  # noqa: E501
         multimodal,
     )
@@ -1404,14 +1231,12 @@ def dhash_ingest_sink(
         finally:
             sigs_b.unpersist()
 
-    return sink
+    return _once_per_batch(state_path, sink)
 
 
 def _mih_append(sigs, state_path: str, shift: int) -> None:
     """Append a batch's signatures to the four MIH state tables (same
     layout as `multimodal.build_mih_index`, append mode)."""
-    import os
-
     for k in range(4):
         (
             sigs.withColumn("cb", F.shiftright(F.col(f"c{k}"), shift))
@@ -1469,7 +1294,7 @@ def token_budget_sink(dict_path: str, out_path: str):
             out_path
         )
 
-    return sink
+    return _once_per_batch(out_path, sink)
 
 
 def token_budget_view(spark, out_path: str) -> DataFrame:

@@ -129,3 +129,47 @@ def test_entry_caches_go_through_the_artifact_store():
     assert "tempfile.gettempdir(" not in src
     stamps = re.findall(r"""open\([^)]*["']_SUCCESS["']""", src)
     assert not stamps, stamps
+
+
+def test_swap_names_live_only_in_fsutil():
+    """`fsutil.replace_dir` is the one writer that knows the `.staging`
+    and `.old` siblings of a swapped directory. A path literal naming
+    them anywhere else in the package or the entry module is a second
+    commit protocol, with its own crash windows."""
+    import ast
+    import re
+
+    import data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    files = [entrymod.__file__] + [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(root)
+        for f in fs
+        if f.endswith(".py") and f != "fsutil.py"
+    ]
+    swap_name = re.compile(r"\.(staging|old)\b")
+    found = []
+    for path in files:
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        docs = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(
+                node,
+                (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+            )
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+        }
+        found += [
+            f"{os.path.relpath(path, root)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docs
+            and swap_name.search(node.value)
+        ]
+    assert not found, found

@@ -12,6 +12,7 @@ from __future__ import annotations
 import time
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.sources.readers import (
@@ -949,8 +950,7 @@ def test_sketch_rollup_sink_converges_and_replay_is_algebraic_noop(
     """Streaming HLL rollup: after a 3-batch ingest the stored per-day
     sketch estimates must equal the batch sketch over everything
     ingested (same-lgK union is lossless), and re-applying a batch must
-    change nothing — replay safety comes from union's idempotence, not
-    a ledger."""
+    change nothing."""
     import datetime
 
     rows = [
@@ -1003,7 +1003,7 @@ def test_sketch_rollup_sink_converges_and_replay_is_algebraic_noop(
     }
     assert got == exact
 
-    # replaying an already-merged batch is a no-op by union idempotence
+    # replaying an already-merged batch is a no-op
     sink(spark.createDataFrame(rows[0:100], schema), 0)
     assert estimates() == got
 
@@ -1097,8 +1097,8 @@ def test_cms_refresh_sink_merge_equals_whole_and_ledger_blocks_replay(
     """Streaming CMS maintenance: after a 3-batch ingest the stored
     grid must equal cms_build over everything ingested (cell-wise sum
     merge is lossless), and replaying an applied batch must change
-    nothing — here safety comes from the LEDGER, because sum-merge is
-    not idempotent (the algebraic mirror of the HLL sink's analysis)."""
+    nothing — here the LEDGER is what blocks it, because sum-merge is
+    not idempotent."""
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators.sketches import (
         cms_build,
     )
@@ -1162,10 +1162,7 @@ def test_kmv_refresh_sink_streamed_equals_batch_and_replay_is_noop(
 ):
     """Streaming KMV maintenance: after a 3-batch ingest the stored
     per-group sketches must equal kmv_build over everything ingested,
-    and re-applying a batch must change nothing WITHOUT a ledger —
-    bottom-k set union is idempotent (the third point of the sketch
-    replay-algebra triptych: HLL max-merge, CMS sum-merge, KMV
-    set-merge)."""
+    and re-applying a batch must change nothing."""
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators.sketches import (
         kmv_build,
     )
@@ -1206,7 +1203,7 @@ def test_kmv_refresh_sink_streamed_equals_batch_and_replay_is_noop(
         )
     )
     assert got == whole
-    # replay with no ledger: set-merge idempotence makes it a no-op
+    # replaying an applied batch id is a no-op
     sink(spark.createDataFrame(rows[0:100], schema), 0)
     assert state() == got
 
@@ -1216,9 +1213,7 @@ def test_bloom_refresh_sink_streamed_equals_batch_and_serves_probes(
 ):
     """Streaming Bloom maintenance: after a 3-batch ingest the stored
     bit-set equals bloom_build over everything ingested (deterministic
-    md5 family), an un-ledgered replay is a no-op (bit-set OR is
-    idempotent — fourth point of the sketch replay-algebra family),
-    and batch bloom_probe over the maintained state honors the
+    md5 family), a replay is a no-op, and batch bloom_probe over the maintained state honors the
     no-false-negative contract for every ingested key."""
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators.sketches import (
         bloom_build,
@@ -1256,7 +1251,7 @@ def test_bloom_refresh_sink_streamed_equals_batch_and_serves_probes(
         ).collect()
     )
     assert got == whole
-    # replay with no ledger: OR idempotence makes it a no-op
+    # replaying an applied batch id is a no-op
     sink(spark.createDataFrame(rows[0:100], schema), 0)
     assert state() == got
     # serving: every ingested key must pass the probe
@@ -1428,6 +1423,119 @@ def test_stats_refresh_sink_streamed_equals_batch_and_serves_outliers(
         .collect()
     )
     assert any(r.v == 500000 for r in flagged)  # the planted outlier
+
+
+#: the six sinks whose whole state is one directory, each with a reader
+#: of its stored rows (HLL by estimate: sketch bytes need not be
+#: canonical)
+_ONE_DIR_SINKS = {
+    "hll": (
+        lambda p: pipeline.sketch_rollup_sink(p),
+        lambda df: df.select("day", F.hll_sketch_estimate("sk")),
+    ),
+    "cms": (
+        lambda p: pipeline.cms_refresh_sink(p, "user_id", depth=4, width=64),
+        lambda df: df,
+    ),
+    "kmv": (
+        lambda p: pipeline.kmv_refresh_sink(p, ("event_type",), "user_id", k=64),
+        lambda df: df,
+    ),
+    "logbucket": (
+        lambda p: pipeline.logbucket_refresh_sink(p, ("event_type",), "value"),
+        lambda df: df,
+    ),
+    "moments": (
+        lambda p: pipeline.stats_refresh_sink(p, ("event_type",), "value"),
+        lambda df: df,
+    ),
+    "bloom": (
+        lambda p: pipeline.bloom_refresh_sink(p, "user_id", 4, 256),
+        lambda df: df,
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_ONE_DIR_SINKS))
+def test_one_directory_sink_crash_windows_and_replays(
+    spark, tmp_dir, kind, monkeypatch
+):
+    """Every one-directory sink, through each crash window of its swap:
+    a stale staging dir from a killed writer is discarded; a crash that
+    left only the renamed-aside copy is restored and the replayed batch
+    merges into it; a crash after the swap but before the cleanup kept
+    the mark with the state, so the replay is skipped; and a replay of
+    ANY id at or below the mark — with new rows, so no merge algebra
+    can hide an applied replay — leaves the stored rows identical."""
+    import datetime
+    import os
+    import shutil
+
+    make_sink, view = _ONE_DIR_SINKS[kind]
+    schema = "ts timestamp, user_id long, event_type string, value double"
+
+    def batch(lo, hi):
+        return spark.createDataFrame(
+            [
+                (
+                    datetime.datetime(2024, 1, 1 + i % 2, 8),
+                    i,
+                    f"t{i % 2}",
+                    float(i * 7 % 97 + 1),
+                )
+                for i in range(lo, hi)
+            ],
+            schema,
+        )
+
+    store = f"{tmp_dir}/state"
+    sink = make_sink(store)
+
+    def stored():
+        return sorted(
+            map(tuple, view(spark.read.parquet(store)).collect()), key=repr
+        )
+
+    os.makedirs(store + ".staging")
+    with open(f"{store}.staging/part-0.parquet", "wb") as f:
+        f.write(b"torn")
+    sink(batch(0, 20), 0)
+    assert not os.path.exists(store + ".staging")
+    assert stored()
+
+    # batch 1 crashed after renaming the state aside: only .old is left
+    stash = f"{tmp_dir}/stash"
+    shutil.copytree(store, stash)
+    sink(batch(20, 40), 1)
+    after_1 = stored()
+    shutil.rmtree(store)
+    shutil.copytree(stash, store + ".old")
+    sink(batch(20, 40), 1)
+    assert stored() == after_1
+    assert not os.path.exists(store + ".old")
+
+    # batch 2 crashed after the swap, before removing the old copy
+    rmtree = shutil.rmtree
+
+    def crash(path, *args, **kwargs):
+        if str(path).endswith(".old"):
+            raise RuntimeError("crash")
+        rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(shutil, "rmtree", crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        sink(batch(40, 60), 2)
+    monkeypatch.undo()
+    assert os.path.exists(store + ".old")
+    after_2 = stored()
+    assert after_2 != after_1
+    sink(batch(40, 60), 2)
+    assert stored() == after_2
+    assert not os.path.exists(store + ".old")
+
+    for bid in (0, 1, 2):
+        sink(batch(100, 130), bid)
+        assert stored() == after_2, bid
 
 
 def test_streaming_left_outer_join_flushes_tail_nulls(spark):
@@ -1602,7 +1710,8 @@ def test_ann_serving_stream_matches_batch(spark, tmp_dir):
     """Streamed ANN query serving must equal the batch
     ivf_multi_query_topk on the same query set, whatever the batching:
     each query probes the same cells and appends its exact top-k once,
-    so the accumulated output is batching-independent."""
+    so the accumulated output is batching-independent — and a replay
+    of an applied batch id appends nothing."""
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators import (
         similarity,
     )
@@ -1637,10 +1746,9 @@ def test_ann_serving_stream_matches_batch(spark, tmp_dir):
         spark, src, "query_id LONG, qvec ARRAY<FLOAT>",
         max_files_per_trigger=1,
     )
+    sink = pipeline.ann_serving_sink(index, cents, out, cnorms_sq=cn, k=5)
     q = (
-        stream.writeStream.foreachBatch(
-            pipeline.ann_serving_sink(index, cents, out, cnorms_sq=cn, k=5)
-        )
+        stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", f"{tmp_dir}/annckpt")
         .trigger(availableNow=True)
         .start()
@@ -1668,12 +1776,20 @@ def test_ann_serving_stream_matches_batch(spark, tmp_dir):
     assert len({(a, b) for a, b, _ in streamed}) == len(streamed)
     assert {a for a, _, _ in streamed} == {qid for qid, _ in queries}
 
+    def answers():
+        return sorted(map(tuple, spark.read.parquet(out).collect()))
+
+    drained = answers()
+    sink(spark.read.parquet(src).filter(F.col("query_id") % 3 == 0), 0)
+    assert answers() == drained
+
 
 def test_dhash_ingest_stream_matches_batch(spark, tmp_dir):
     """Perceptual media ingest streamed in three interleaved slices
     must accumulate EXACTLY the batch dhash_near_dup_pairs pair set —
     including cross-batch pairs whose smaller id arrives LATER (the
-    id-order bug class the semantic ingest test caught)."""
+    id-order bug class the semantic ingest test caught). A replay of an
+    applied batch id adds no pair and no MIH state row."""
     import numpy as np
 
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators import (
@@ -1706,10 +1822,9 @@ def test_dhash_ingest_stream_matches_batch(spark, tmp_dir):
         spark, src, "media_id LONG, content BINARY",
         max_files_per_trigger=1,
     )
+    sink = pipeline.dhash_ingest_sink(state, pairs, cb_bits=4)
     q = (
-        stream.writeStream.foreachBatch(
-            pipeline.dhash_ingest_sink(state, pairs, cb_bits=4)
-        )
+        stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", f"{tmp_dir}/mihckpt")
         .trigger(availableNow=True)
         .start()
@@ -1732,11 +1847,21 @@ def test_dhash_ingest_stream_matches_batch(spark, tmp_dir):
     for i in range(0, 30, 5):
         assert (i, 100 + i, 0) in streamed
 
+    def stored():
+        return sorted(map(tuple, spark.read.parquet(pairs).collect())), [
+            spark.read.parquet(f"{state}/table{t}").count() for t in range(4)
+        ]
+
+    drained = stored()
+    sink(media.filter(F.col("media_id") % 3 == 0), 0)
+    assert stored() == drained
+
 
 def test_token_budget_stream_matches_batch(spark, tmp_dir):
     """Streamed token metering must sum to the batch per-source
     aggregation whatever the batching (associative partials), with the
-    character-count fallback for words absent from the dictionary."""
+    character-count fallback for words absent from the dictionary; a
+    replay of an applied batch id leaves the totals unchanged."""
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators import (
         tokenizer,
     )
@@ -1766,10 +1891,9 @@ def test_token_budget_stream_matches_batch(spark, tmp_dir):
         spark, src, "doc_id LONG, text STRING, source STRING",
         max_files_per_trigger=1,
     )
+    sink = pipeline.token_budget_sink(dict_path, out)
     q = (
-        stream.writeStream.foreachBatch(
-            pipeline.token_budget_sink(dict_path, out)
-        )
+        stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", f"{tmp_dir}/tbckpt")
         .trigger(availableNow=True)
         .start()
@@ -1793,3 +1917,9 @@ def test_token_budget_stream_matches_batch(spark, tmp_dir):
         ).collect()
     }
     assert sum(batch.values()) == sum(v[0] for v in got.values())
+
+    sink(docs.filter(F.col("doc_id") % 3 == 0), 0)
+    assert {
+        r["source"]: (r["n_tokens"], r["n_words"], r["n_docs"])
+        for r in pipeline.token_budget_view(spark, out).collect()
+    } == got
