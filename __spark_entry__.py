@@ -3751,13 +3751,12 @@ def q_data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_quality_gate_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of streaming.pipeline.quality_gate_sink's row routing,
-    through the SAME production tagging path (quality.tag_failures):
-    each event is annotated with the array of violated checks
+    """Row-level quality gate through the production tagging path
+    (quality.tag_failures): each event is annotated with the array of violated checks
     (null-safe — an unknown predicate is a violation, not a pass), then
     routed accepted/quarantined and rolled up per reason-combination.
     The oracle recomputes every predicate and the array-compact fold in
-    DuckDB, so the sink's routing semantics — including multi-reason
+    DuckDB, so the routing semantics — including multi-reason
     rows — are hash-gated, not just unit-tested. Counts only (no float
     sums), so the match is exact. Ref parity: the reference ships rows
     to ES with no validation at all (kafka_to_es.py:55-69); this is the
@@ -3990,9 +3989,8 @@ def q_streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     (including it would change the semantics to per-timestamp dedup).
     That state is bounded by key cardinality, not stream length, which
     is the correct contract for this query; when re-emission beyond a
-    horizon is acceptable, `pipeline.dedup_within_watermark`
-    (dropDuplicatesWithinWatermark) is the state-EVICTING variant —
-    demonstrated with an eviction test in tests/test_streaming.py."""
+    horizon is acceptable, Spark's dropDuplicatesWithinWatermark is the
+    state-EVICTING variant."""
 
     def build(stream):
         return (
@@ -6220,8 +6218,7 @@ def q_burst_detection_minutes(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay far under 2⁶³ at any minute-grain rate), evaluated only where
     the trailing window is fully populated and c > mean (spikes, not
     droughts). One minute-grain aggregate + one window pass, both
-    keyed on event_type — the streaming-adjacent shape (the same
-    verdict serves from stats_refresh_sink state at ingest time)."""
+    keyed on event_type."""
     ev = _t(spark, sf_dir, "events")
     per_min = ev.groupBy(
         "event_type",

@@ -1,11 +1,9 @@
 """Stage-then-swap directory commits — `replace_dir`, the one writer
-of a live directory the streaming sinks rewrite (sketch state, rollup
-day partitions, component tables, batch compaction), and the readers'
-`recover_partition_swaps`, which resolves a mid-swap crash's leftovers
-before Spark's partition discovery sees a `<dir>.old` / `<dir>.staging`
-as a bogus partition value — and the artifact store (`materialize`)
-every cached index, format copy and memoized streaming run of the
-query catalog is built through.
+of a live directory the streaming sinks rewrite (the persisted
+component table of the semantic-dedup sink), with `recover_dir_swap`
+resolving a crashed swap's leftovers — and the artifact store
+(`materialize`) every cached index, format copy and memoized streaming
+run of the query catalog is built through.
 
 Local-FS commit protocol by design: on HDFS/S3 this role is played by
 a table format's transaction log (Delta/Iceberg) — the call sites are
@@ -58,24 +56,6 @@ def replace_dir(path: str, write) -> None:
     os.replace(staging, path)
     if os.path.exists(retired):
         shutil.rmtree(retired)
-
-
-def recover_partition_swaps(root: str) -> None:
-    """Reader-side sweep: resolve EVERY `*.old` / `*.staging` leftover
-    under `root` before a parquet read — partition discovery would
-    otherwise surface `dt=2024-01-01.old` as a (double-counting,
-    type-degrading) partition value in the window between a mid-swap
-    crash and the next writer run."""
-    if not os.path.isdir(root):
-        return
-    for name in sorted(os.listdir(root)):
-        base = None
-        if name.endswith(".old"):
-            base = name[: -len(".old")]
-        elif name.endswith(".staging"):
-            base = name[: -len(".staging")]
-        if base is not None:
-            recover_dir_swap(os.path.join(root, base))
 
 
 #: id(code object) → (code object, digest): each build callable is

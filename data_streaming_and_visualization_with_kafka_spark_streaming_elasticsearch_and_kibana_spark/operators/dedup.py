@@ -597,145 +597,6 @@ def contamination_hits(
     )
 
 
-# ------------------------------------------------- incremental dedup index
-def dedup_index_probe_and_extend(
-    spark,
-    batch_docs: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k_shingle: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    batch_tag: str | None = None,
-) -> DataFrame:
-    """Incremental near-dedup for INGEST: probe a persisted MinHash index
-    with a batch of new documents, then extend the index with them.
-
-    The production LLM-ingest shape: the corpus index is built once and
-    only ever EXTENDED; each arriving batch pays signature cost for its
-    own rows plus a banded join against the index — never a corpus
-    self-join. Layout under `index_path`:
-      sigs/  (id, sig)           — for est-Jaccard verification
-      bands/ (id, band, bucket)  — the probe side of the banded join
-    (at 100 TB, bands/ is bucketed by (band, bucket) so the probe is a
-    co-located join; batch signatures are tiny and broadcast).
-
-    Replay safety: with `batch_tag` set (the streaming sink passes the
-    micro-batch id), the extension writes land in per-batch
-    subdirectories `sigs/ingest=<tag>/` with OVERWRITE — re-running the
-    same batch rewrites its own subdirectories instead of appending
-    duplicates, and a crash that left only one of sigs/bands written is
-    healed by the replay. The probe also excludes same-id matches, so a
-    replayed batch probing an index that already contains itself does
-    not report every doc as its own duplicate. `_INDEX_READY` at the
-    index root marks that at least one batch committed BOTH tables.
-
-    Returns one verdict row per batch doc:
-      (id, is_dup, dup_of, est_jaccard) — dup_of = best matching index
-    doc at est_jaccard >= threshold, else NULL (typed like the id
-    column). Within-batch duplicates are caught on the NEXT probe —
-    callers needing intra-batch dedup run minhash_lsh_candidates on the
-    batch before probing.
-    """
-    import os
-
-    sigs_path = os.path.join(index_path, "sigs")
-    bands_path = os.path.join(index_path, "bands")
-    sig_b = minhash_signatures(
-        batch_docs, text_col, id_col, k_shingle, num_hashes, persist=True
-    )
-    bands_b = banded_buckets(sig_b, id_col, num_hashes, bands)
-    id_type = dict(batch_docs.dtypes)[id_col]
-
-    has_index = os.path.exists(os.path.join(index_path, "_INDEX_READY"))
-    if has_index:
-        bands_i = spark.read.parquet(bands_path)
-        cand = (
-            bands_b.alias("n")
-            .join(
-                bands_i.alias("o"),
-                (F.col("n.band") == F.col("o.band"))
-                & (F.col("n.bucket") == F.col("o.bucket"))
-                # self-match exclusion: on replay the index already
-                # contains this batch — a doc must not duplicate itself
-                & (F.col(f"n.{id_col}") != F.col(f"o.{id_col}")),
-            )
-            .select(
-                F.col(f"n.{id_col}").alias("__new_id"),
-                F.col(f"o.{id_col}").alias("__old_id"),
-            )
-            .dropDuplicates(["__new_id", "__old_id"])
-        )
-        sig_o = spark.read.parquet(sigs_path).select(
-            F.col(id_col).alias("__old_id"), F.col("sig").alias("sig_o")
-        )
-        sig_n = sig_b.select(
-            F.col(id_col).alias("__new_id"), F.col("sig").alias("sig_n")
-        )
-        agree = F.size(
-            F.filter(
-                F.zip_with("sig_n", "sig_o", lambda x, y: x == y), lambda v: v
-            )
-        )
-        scored = (
-            cand.join(F.broadcast(sig_n), "__new_id")
-            .join(sig_o, "__old_id")
-            .select(
-                "__new_id",
-                "__old_id",
-                (agree.cast("double") / F.lit(float(num_hashes))).alias(
-                    "est_jaccard"
-                ),
-            )
-            .filter(F.col("est_jaccard") >= threshold)
-        )
-        w = Window.partitionBy("__new_id").orderBy(
-            F.desc("est_jaccard"), F.asc("__old_id")
-        )
-        best = (
-            scored.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1)
-            .drop("__rk")
-        )
-        verdicts = (
-            sig_b.select(id_col)
-            .join(best, F.col(id_col) == F.col("__new_id"), "left")
-            .select(
-                id_col,
-                F.col("__old_id").isNotNull().alias("is_dup"),
-                F.col("__old_id").alias("dup_of"),
-                "est_jaccard",
-            )
-        )
-    else:
-        verdicts = sig_b.select(
-            F.col(id_col),
-            F.lit(False).alias("is_dup"),
-            F.lit(None).cast(id_type).alias("dup_of"),
-            F.lit(None).cast("double").alias("est_jaccard"),
-        )
-    # verdicts must materialize BEFORE the index extension below rewrites
-    # what their lazy plans would read
-    verdicts = verdicts.localCheckpoint()
-
-    if batch_tag is not None:
-        # idempotent per-batch subdirectories (replay = rewrite in place)
-        sig_b.select(id_col, "sig").write.mode("overwrite").parquet(
-            os.path.join(sigs_path, f"ingest={batch_tag}")
-        )
-        bands_b.write.mode("overwrite").parquet(
-            os.path.join(bands_path, f"ingest={batch_tag}")
-        )
-    else:
-        sig_b.select(id_col, "sig").write.mode("append").parquet(sigs_path)
-        bands_b.write.mode("append").parquet(bands_path)
-    open(os.path.join(index_path, "_INDEX_READY"), "a").close()
-    sig_b.unpersist()
-    return verdicts
-
-
 # ---------------------------------------------- prefix-filtered set-sim join
 def setsim_prefix_join(
     docs: DataFrame,

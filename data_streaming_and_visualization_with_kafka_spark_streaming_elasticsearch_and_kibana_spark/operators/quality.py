@@ -35,9 +35,8 @@ def tag_failures(
     of check names it violates, same null-safe semantics (a NULL
     predicate IS a violation — unknown is not a pass). Pure Column
     expressions, so the tagging is map-side and whole-stage-codegen'd;
-    this is the exact production path `streaming.pipeline.
-    quality_gate_sink` routes micro-batches through, exposed for batch
-    use and for the oracle twin (`q_quality_gate_routing`)."""
+    `q_quality_gate_routing` routes rows through it under the DuckDB
+    gate."""
     failed = F.array_compact(
         F.array(
             *[

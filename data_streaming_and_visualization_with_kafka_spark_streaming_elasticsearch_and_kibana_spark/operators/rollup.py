@@ -24,8 +24,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import recover_partition_swaps
-
 
 def minute_rollup_frame(
     df: DataFrame,
@@ -105,10 +103,6 @@ def continuous_aggregate(
         tail_src.filter(ts >= F.lit(watermark)), ts_col, keys, value_col
     ).select(*cols)
     try:
-        # resolve any `dt=<day>.old`/.staging leftovers from a writer
-        # that crashed mid-swap — partition discovery would read the
-        # retired copy as a second partition and double-count the day
-        recover_partition_swaps(path)
         hist = spark.read.parquet(path).select(*cols)
     except Exception:
         # empty materialization (single-day corpus: everything is tail) —
@@ -156,55 +150,3 @@ def ensure_materialized(
         spark, raw, path, watermark, ts_col, keys, value_col, partition_col
     )
 
-
-def backfill_days(
-    spark: SparkSession,
-    raw: DataFrame,
-    path: str,
-    days: list,
-    ts_col: str = "ts",
-    keys: tuple[str, ...] = ("event_type",),
-    value_col: str = "value",
-    partition_col: str | None = None,
-) -> None:
-    """Repair/backfill: recompute the materialized rollup for exactly
-    `days` (a list of dates) from the raw facts and overwrite ONLY those
-    day partitions — dynamic partition overwrite, so untouched day
-    directories are neither rewritten nor read. This is the ops answer
-    to the cases the incremental refresh sink can't cover: late data
-    arriving beyond its replay window, a corrupted partition, or a
-    logic fix that invalidates specific days. The frozen watermark and
-    `_CAGG_META` are untouched, and the function ENFORCES that every
-    requested day lies below the frozen watermark (the tail day is
-    served from raw by design — materializing it would double-count it
-    in continuous_aggregate's history ∪ tail). Cost is
-    O(selected days' raw rows): with a day-partitioned landing table
-    (`partition_col`) the raw scan prunes to exactly those directories."""
-    import datetime
-    import json
-
-    meta_path = os.path.join(path, "_CAGG_META")
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            wm = datetime.datetime.fromisoformat(json.load(f)["watermark"])
-        bad = [d for d in days if d >= wm.date()]
-        if bad:
-            raise ValueError(
-                f"backfill_days: {bad} not below the frozen watermark "
-                f"{wm.date()} — those days are tail-only; materializing "
-                "them would double-count in the served aggregate"
-            )
-    ts = F.col(ts_col).cast("timestamp")
-    src = raw
-    if partition_col is not None:
-        src = src.filter(F.col(partition_col).isin(days))
-    sel = src.filter(F.to_date(ts).isin(days))
-    part = minute_rollup_frame(sel, ts_col, keys, value_col).withColumn(
-        "dt", F.to_date("minute")
-    )
-    (
-        part.write.mode("overwrite")
-        .partitionBy("dt")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    )

@@ -2456,9 +2456,7 @@ def build_pq_index(
 
 
 def _as_index_df(spark, index) -> DataFrame:
-    """Accept a code index as either a parquet path or a DataFrame (the
-    latter lets streaming callers serve straight off read_batch_dirs
-    over a live pq_ingest_sink root)."""
+    """Accept a code index as either a parquet path or a DataFrame."""
     return index if isinstance(index, DataFrame) else spark.read.parquet(index)
 
 

@@ -135,17 +135,10 @@ def cms_estimate(
     broadcast scalar of the sentinel is checked lazily inside the plan
     and raise_error()s when it disagrees with the probe parameters,
     when it is missing (grid not built by cms_build), or when a
-    mixed-parameter merge left more than one sentinel.
-
-    STATE-FORMAT NOTE: the sentinel row was introduced after the first
-    persisted-state format (grids written by early cms_refresh_sink
-    runs carry counter cells only). Those legacy grids are rejected
-    here BY DESIGN — a sentinel-less grid is indistinguishable from a
-    frame that was never built by cms_build, and accepting it would
-    reopen the silent-zero failure mode this guard exists to close.
-    Migrate legacy state once with `cms_add_sentinel(grid, depth,
-    width)` (below), asserting the parameters you know it was built
-    with."""
+    mixed-parameter merge left more than one sentinel. A sentinel-less
+    grid is rejected because it is indistinguishable from a frame that
+    was never built by cms_build; accepting it would reopen the
+    silent-zero failure mode this guard exists to close."""
     key = F.col(key_col).cast("string")
     # materialize the bounded grid ONCE: the sentinel guard is a second
     # plan branch over `sketch`, and without this the whole upstream
@@ -212,40 +205,6 @@ def cms_estimate(
             F.coalesce(shape_ok, F.col("cms_est")).alias("cms_est"),
         )
     )
-
-
-def cms_add_sentinel(sketch: DataFrame, depth: int, width: int) -> DataFrame:
-    """One-line migration for legacy persisted grids (pre-sentinel
-    state format): append the r = -1 parameter sentinel cms_build now
-    writes, asserting the (depth, width) the grid is KNOWN to have been
-    built with. Refuses a grid that already carries any sentinel —
-    re-stamping an already-stamped (or mixed-merge) grid would paper
-    over exactly the mismatch the sentinel detects."""
-    spark = sketch.sparkSession
-    stamped = F.broadcast(
-        sketch.agg(
-            F.sum(F.when(F.col("r") < 0, 1).otherwise(0)).alias("_n_sent")
-        )
-    )
-    sentinel = (
-        spark.range(1)
-        .crossJoin(stamped)
-        .select(
-            F.when(
-                F.col("_n_sent") > 0,
-                F.raise_error(
-                    F.lit(
-                        "cms_add_sentinel: grid already carries a parameter "
-                        "sentinel — migration is for legacy sentinel-less "
-                        "state only"
-                    ),
-                ),
-            ).otherwise(F.lit(-1)).cast("int").alias("r"),
-            F.lit(width).cast("long").alias("bucket"),
-            F.lit(depth).cast("long").alias("n"),
-        )
-    )
-    return sketch.unionByName(sentinel)
 
 
 #: hash space of the 15-hex-char md5 prefix: 16^15 == 2^60 (exactly
@@ -402,45 +361,6 @@ def _bloom_sentinel(n_hashes: int, n_bits: int) -> int:
     return -(n_bits * 1024 + n_hashes)
 
 
-def bloom_add_sentinel(
-    sketch: DataFrame, n_hashes: int, n_bits: int
-) -> DataFrame:
-    """One-line migration for legacy persisted bit tables (pre-sentinel
-    state format, e.g. dirs written by early bloom_refresh_sink runs):
-    append the parameter sentinel, asserting the (n_hashes, n_bits) the
-    table is KNOWN to have been built with. A table that already has
-    any sentinel is refused — re-stamping would mask the mismatch the
-    sentinel detects. (A legacy dir merged via bloom_merge with any
-    freshly-built sketch of the same parameters is migrated for free:
-    the fresh side contributes the sentinel.)"""
-    spark = sketch.sparkSession
-    stamped = F.broadcast(
-        sketch.agg(
-            F.sum(F.when(F.col("bit") < 0, 1).otherwise(0)).alias("_n_sent")
-        )
-    )
-    sentinel = (
-        spark.range(1)
-        .crossJoin(stamped)
-        .select(
-            F.when(
-                F.col("_n_sent") > 0,
-                F.raise_error(
-                    F.lit(
-                        "bloom_add_sentinel: bit table already carries a "
-                        "parameter sentinel — migration is for legacy "
-                        "sentinel-less state only"
-                    ),
-                ),
-            )
-            .otherwise(F.lit(_bloom_sentinel(n_hashes, n_bits)))
-            .cast("long")
-            .alias("bit")
-        )
-    )
-    return sketch.unionByName(sentinel)
-
-
 def bloom_merge(*sketches: DataFrame) -> DataFrame:
     """OR together bloom bit-sets built with the same (n_hashes, n_bits,
     family): union + distinct. Same semilattice argument as kmv_merge —
@@ -481,8 +401,7 @@ def bloom_probe(
     agree with (n_hashes, n_bits) here, else the probe would hash into
     the wrong bit positions and answer false for true members; the
     check raise_error()s on mismatch, on a missing sentinel (table not
-    built by bloom_build — migrate legacy state with
-    bloom_add_sentinel), and on >1 sentinel (mixed-parameter merge)."""
+    built by bloom_build), and on >1 sentinel (mixed-parameter merge)."""
     key = F.col(key_col).cast("string")
     expect = _bloom_sentinel(n_hashes, n_bits)
     # materialize the bounded bit table ONCE — the sentinel guard and
@@ -508,8 +427,7 @@ def bloom_probe(
                 F.lit(" (count "),
                 F.col("_n_sent").cast("string"),
                 F.lit("; 1 expected — 0 means the table was not built by "
-                      "bloom_build (bloom_add_sentinel migrates legacy "
-                      "state), >1 means a mixed-parameter merge)"),
+                      "bloom_build, >1 means a mixed-parameter merge)"),
             )
         ),
     )

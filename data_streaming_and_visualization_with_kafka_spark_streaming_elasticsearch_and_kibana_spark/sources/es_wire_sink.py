@@ -154,9 +154,7 @@ class EsBulkWireStreamWriter(DataSourceStreamWriter):
     every task succeeded, abort removes strays). At-least-once replay
     of a batch rewrites its own epoch dir — with per-key `_id`s the ES
     `_bulk` POST of a replayed payload converges to the same documents,
-    the same idempotence the keyed S8 sink relies on. The epoch layout
-    is the same per-batch-dir convention as the foreachBatch sinks, so
-    `compact_batch_dirs`-style maintenance applies."""
+    the same idempotence the keyed S8 sink relies on."""
 
     def __init__(self, path: str, index: str, mapping_id: str | None):
         self.path = path

@@ -108,105 +108,3 @@ def test_frozen_watermark_covers_late_arriving_days(spark, tmp_dir):
     ev2 = _events(spark, 500)
     got2 = rollup.ensure_materialized(spark, ev2, path)
     assert got2.agg(F.sum("n")).head()[0] == 500  # nothing dropped
-
-
-def test_backfill_days_repairs_corrupted_partition(spark, tmp_dir):
-    """backfill_days must restore exactly the named day partitions from
-    raw facts: after corrupting one materialized day (dropping half its
-    rows and garbling the rest), backfilling that single day makes the
-    served continuous aggregate equal the full recompute again — and
-    the other day directories' files are untouched (mtime-identical),
-    proving dynamic partition overwrite rewrote only the repair set."""
-    ev = _events(spark)
-    path = os.path.join(tmp_dir, "cagg_bf")
-    rollup.ensure_materialized(spark, ev, path).count()
-
-    days = sorted(
-        d
-        for d in os.listdir(path)
-        if d.startswith("dt=") and os.path.isdir(os.path.join(path, d))
-    )
-    assert len(days) >= 2
-    victim = days[0]
-    victim_date = datetime.date.fromisoformat(victim.split("=", 1)[1])
-    other_files = {
-        (f, os.path.getmtime(os.path.join(path, days[1], f)))
-        for f in os.listdir(os.path.join(path, days[1]))
-    }
-
-    # corrupt the victim: halve and garble its rows
-    vdir = os.path.join(path, victim)
-    broken = (
-        spark.read.parquet(vdir)
-        .limit(3)
-        .withColumn("value_cents", F.col("value_cents") * 999)
-    )
-    broken.write.mode("overwrite").parquet(vdir + ".tmp")
-    import shutil
-
-    shutil.rmtree(vdir)
-    os.replace(vdir + ".tmp", vdir)
-
-    import json
-
-    meta = json.load(open(os.path.join(path, "_CAGG_META")))
-    wm = datetime.datetime.fromisoformat(meta["watermark"])
-    before = rollup.continuous_aggregate(spark, ev, path, wm)
-    full = rollup.minute_rollup_frame(ev)
-    assert before.exceptAll(full).count() > 0  # corruption is visible
-
-    rollup.backfill_days(spark, ev, path, [victim_date])
-    after = rollup.continuous_aggregate(spark, ev, path, wm)
-    assert (
-        after.exceptAll(full).count() == 0
-        and full.exceptAll(after).count() == 0
-    )
-    # untouched day partition: same files, same mtimes
-    assert other_files == {
-        (f, os.path.getmtime(os.path.join(path, days[1], f)))
-        for f in os.listdir(os.path.join(path, days[1]))
-    }
-
-
-def test_backfill_rejects_days_at_or_above_the_watermark(spark, tmp_dir):
-    """Materializing the tail day would double-count it in history ∪
-    tail; backfill_days must refuse."""
-    import pytest
-
-    ev = _events(spark)
-    path = os.path.join(tmp_dir, "cagg_guard")
-    rollup.ensure_materialized(spark, ev, path).count()
-    import json
-
-    wm = datetime.datetime.fromisoformat(
-        json.load(open(os.path.join(path, "_CAGG_META")))["watermark"]
-    )
-    with pytest.raises(ValueError, match="not below the frozen watermark"):
-        rollup.backfill_days(spark, ev, path, [wm.date()])
-
-
-def test_continuous_aggregate_resolves_mid_swap_leftovers(spark, tmp_dir):
-    """A refresh writer crash between os.replace and .old cleanup
-    leaves dt=<day>.old beside the live partition; partition discovery
-    would double-count the retired copy. The serving read must resolve
-    the leftover first and return the exact rollup."""
-    import json
-    import shutil
-
-    ev = _events(spark)
-    path = os.path.join(tmp_dir, "cagg_swap")
-    rollup.ensure_materialized(spark, ev, path).count()
-    days = [d for d in os.listdir(path) if d.startswith("dt=")]
-    victim = os.path.join(path, days[0])
-    shutil.copytree(victim, victim + ".old")  # simulate the crash window
-
-    wm = datetime.datetime.fromisoformat(
-        json.load(open(os.path.join(path, "_CAGG_META")))["watermark"]
-    )
-    got = rollup.continuous_aggregate(spark, ev, path, wm)
-    full = rollup.minute_rollup_frame(ev)
-    assert (
-        got.exceptAll(full).count() == 0
-        and full.exceptAll(got).count() == 0
-    )
-    assert not os.path.exists(victim + ".old")  # leftover resolved

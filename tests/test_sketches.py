@@ -228,34 +228,11 @@ def test_bloom_probe_rejects_mismatched_parameters(spark):
     legacy = sk.filter(F.col("bit") >= 0)
     with pytest.raises(Exception, match="parameter mismatch"):
         sketches.bloom_probe(legacy, probe, "k", 4, 2048).collect()
-    # ... and bloom_add_sentinel migrates it back into service
-    migrated = sketches.bloom_add_sentinel(legacy, 4, 2048)
-    ok = sketches.bloom_probe(migrated, probe, "k", 4, 2048).collect()
-    assert ok[0].might_contain is True
-    # re-stamping an already-stamped table is refused
-    with pytest.raises(Exception, match="already carries"):
-        sketches.bloom_add_sentinel(sk, 4, 2048).collect()
     # mixed-parameter merge leaves two sentinels -> rejected
     other = sketches.bloom_build(members, "k", n_hashes=4, n_bits=4096)
     mixed = sketches.bloom_merge(sk, other)
     with pytest.raises(Exception, match="parameter mismatch"):
         sketches.bloom_probe(mixed, probe, "k", 4, 2048).collect()
-
-
-def test_cms_add_sentinel_migrates_legacy_grid(spark):
-    import pytest
-
-    df = _keyed(spark, [f"k{i}" for i in range(100)])
-    sk = sketches.cms_build(df, "k", depth=4, width=64)
-    legacy = sk.filter(F.col("r") >= 0)  # pre-sentinel state format
-    probe = _keyed(spark, ["k0"])
-    with pytest.raises(Exception, match="parameter mismatch"):
-        sketches.cms_estimate(legacy, probe, "k", 4, 64).collect()
-    migrated = sketches.cms_add_sentinel(legacy, depth=4, width=64)
-    est = sketches.cms_estimate(migrated, probe, "k", 4, 64).collect()
-    assert est[0].cms_est >= 1
-    with pytest.raises(Exception, match="already carries"):
-        sketches.cms_add_sentinel(sk, depth=4, width=64).collect()
 
 
 def test_logbucket_exact_below_8_and_relative_error_guarantee(spark):

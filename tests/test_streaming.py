@@ -1,10 +1,11 @@
 """Structured-Streaming semantics tests (SURVEY §5.3), driven through
 bounded file streams + the memory sink — no broker required.
 
-Covers: windowed rollup == batch twin, session windows, keyed
-first-arrival dedup (T5), stream-static enrichment (T7), watermark
-late-data drop across a checkpointed restart (T2), and the bounded
-throttled replay (O2).
+Covers: windowed rollup == batch twin, keyed first-arrival dedup (T5),
+stream-static enrichment (T7), watermark late-data drop across a
+checkpointed restart (T2), the bounded throttled replay (O2), and the
+foreachBatch sinks the catalog runs, each against its batch twin and
+under a replayed batch.
 """
 
 from __future__ import annotations
@@ -12,7 +13,6 @@ from __future__ import annotations
 import time
 import uuid
 
-import pytest
 from pyspark.sql import functions as F
 
 from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.sources.readers import (
@@ -62,23 +62,6 @@ def test_windowed_rollup_equals_batch_groupby(spark, tmp_dir):
     assert got[("2024-01-01T10:00:00", "a")] == (2.0, 1.0, 3.0, 2)
     assert got[("2024-01-01T10:01:00", "a")] == (5.0, 5.0, 5.0, 1)
     assert got[("2024-01-01T10:00:00", "b")] == (7.0, 7.0, 7.0, 1)
-
-
-def test_session_rollup_gap_splits_sessions(spark, tmp_dir):
-    src = f"{tmp_dir}/src"
-    rows = _rows(
-        ("2024-01-01T10:00:00", "a", 1.0),
-        ("2024-01-01T10:01:00", "a", 1.0),   # within 2-min gap → same session
-        ("2024-01-01T10:07:00", "a", 1.0),   # 6 min silence → new session
-    )
-    _write_events(spark, src, rows)
-    stream = file_stream(spark, src, SCHEMA)
-    sess = pipeline.session_rollup(stream, "ts", ["room"], gap="2 minutes")
-    got = sorted(
-        (r.session_start.isoformat(), r.n)
-        for r in _drain(spark, sess, f"s_{uuid.uuid4().hex[:6]}", "complete").collect()
-    )
-    assert got == [("2024-01-01T10:00:00", 2), ("2024-01-01T10:07:00", 1)]
 
 
 def test_latest_value_view_first_arrival_dedup(spark, tmp_dir):
@@ -230,333 +213,6 @@ def test_throttled_replay_bounded_intake(spark, tmp_dir):
         assert sum(1 for n in per_batch if n > 0) >= 3
     finally:
         q.stop()
-
-
-def test_stream_stream_left_outer_join_emits_nulls_after_watermark(spark, tmp_dir):
-    """Unmatched left rows must surface as null-extended rows once the
-    watermark passes their join window — fed one file per micro-batch
-    so the eviction actually happens across batches."""
-    src = f"{tmp_dir}/souter"
-    # batch 1: an observation with no calibration in its 10-min lookback
-    _write_events(spark, src, _rows(("2024-01-01T10:00:00", "a", 1.0)))
-    # batch 2: matched pair far in the future -> advances BOTH watermarks
-    _write_events(
-        spark,
-        src,
-        _rows(("2024-01-01T11:30:00", "x", 2.0), ("2024-01-01T11:30:00", "x", 200.0)),
-    )
-    # batch 3: another pair; processing it evicts 'a' (watermark 11:25)
-    _write_events(
-        spark,
-        src,
-        _rows(("2024-01-01T11:40:00", "y", 3.0), ("2024-01-01T11:40:00", "y", 300.0)),
-    )
-
-    stream = file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-    obs = stream.filter(F.col("temp") < 100).select(
-        F.col("room").alias("o_room"),
-        F.col("ts").alias("o_ts"),
-        F.col("temp").alias("o_temp"),
-    )
-    cal = stream.filter(F.col("temp") >= 100).select(
-        F.col("room").alias("c_room"),
-        F.col("ts").alias("c_ts"),
-        F.col("temp").alias("c_temp"),
-    )
-    joined = pipeline.stream_stream_outer_join(
-        obs,
-        cal,
-        F.expr(
-            "o_room = c_room AND "
-            "c_ts BETWEEN o_ts - INTERVAL 10 MINUTES AND o_ts"
-        ),
-        "o_ts",
-        "c_ts",
-        watermark="5 minutes",
-    )
-    name = f"souter_{uuid.uuid4().hex[:6]}"
-    got = {
-        r.o_room: r.c_temp
-        for r in _drain(spark, joined.select("o_room", "c_temp"), name, "append").collect()
-    }
-    assert got["x"] == 200.0 and got["y"] == 300.0       # inner matches
-    assert "a" in got and got["a"] is None               # evicted -> null row
-
-
-def test_stream_stream_left_outer_late_match_no_null_row(spark, tmp_dir):
-    """A right-side match arriving in a LATER micro-batch (but inside
-    the watermark) must join its buffered left row — and that left row
-    must NOT also surface as a null-extended row afterwards."""
-    src = f"{tmp_dir}/slate"
-    # batch 1: observation alone
-    _write_events(spark, src, _rows(("2024-01-01T10:00:00", "a", 1.0)))
-    # batch 2: its calibration arrives late (same minute, next batch)
-    _write_events(spark, src, _rows(("2024-01-01T10:00:30", "a", 150.0)))
-    # batches 3-4: advance watermark far past a's window, then evict
-    _write_events(
-        spark,
-        src,
-        _rows(("2024-01-01T11:30:00", "x", 2.0), ("2024-01-01T11:30:00", "x", 200.0)),
-    )
-    _write_events(
-        spark,
-        src,
-        _rows(("2024-01-01T11:40:00", "y", 3.0), ("2024-01-01T11:40:00", "y", 300.0)),
-    )
-
-    stream = file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-    obs = stream.filter(F.col("temp") < 100).select(
-        F.col("room").alias("o_room"), F.col("ts").alias("o_ts")
-    )
-    cal = stream.filter(F.col("temp") >= 100).select(
-        F.col("room").alias("c_room"),
-        F.col("ts").alias("c_ts"),
-        F.col("temp").alias("c_temp"),
-    )
-    joined = pipeline.stream_stream_outer_join(
-        obs,
-        cal,
-        F.expr(
-            "o_room = c_room AND "
-            "c_ts BETWEEN o_ts AND o_ts + INTERVAL 10 MINUTES"
-        ),
-        "o_ts",
-        "c_ts",
-        watermark="5 minutes",
-    )
-    name = f"slate_{uuid.uuid4().hex[:6]}"
-    rows = _drain(
-        spark, joined.select("o_room", "c_temp"), name, "append"
-    ).collect()
-    a_rows = [r.c_temp for r in rows if r.o_room == "a"]
-    # exactly one 'a' result: the late match — never a null companion
-    assert a_rows == [150.0], rows
-
-
-def test_rollup_refresh_sink_converges_to_batch_rollup(spark, tmp_dir):
-    """Streaming half of the hypertable pattern: three files → three
-    micro-batches (maxFilesPerTrigger=1) through the foreachBatch
-    incremental refresh; the materialized day-partitioned rollup must
-    equal the batch rollup of everything ingested — including the
-    cross-batch merge of partials for the SAME minute."""
-    from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators.rollup import (
-        minute_rollup_frame,
-    )
-
-    src = f"{tmp_dir}/src"
-    mat = f"{tmp_dir}/mat"
-    ckpt = f"{tmp_dir}/ckpt"
-    batches = [
-        _rows(("2024-01-01T10:00:05", "a", 1.0), ("2024-01-01T10:00:40", "b", 2.0)),
-        # same minute as batch 1 → must MERGE with stored partials
-        _rows(("2024-01-01T10:00:50", "a", 3.0), ("2024-01-02T09:00:00", "a", 4.0)),
-        _rows(("2024-01-02T09:00:30", "b", 5.0)),
-    ]
-    for rows in batches:
-        _write_events(spark, src, rows)
-
-    stream = file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-    q = (
-        stream.writeStream.foreachBatch(
-            pipeline.rollup_refresh_sink(
-                mat, ts_col="ts", keys=("room",), value_col="temp"
-            )
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-
-    got = spark.read.parquet(mat).select("minute", "room", "n", "value_cents")
-    want = minute_rollup_frame(
-        spark.read.parquet(src), "ts", ("room",), "temp"
-    )
-    assert got.count() == want.count()
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-    # day partitioning held: one directory per affected day
-    import os
-
-    assert sorted(
-        d for d in os.listdir(mat) if d.startswith("dt=")
-    ) == ["dt=2024-01-01", "dt=2024-01-02"]
-
-
-def test_transform_with_state_running_totals(spark, tmp_dir):
-    """transformWithStateInPandas (Spark 4.x typed-state API): per-key
-    running totals must converge to the batch aggregate across micro-
-    batch boundaries — including a key that appears in both batches.
-    Skips where `protobuf` (the TWS state-client wire format) is absent;
-    the import gate in running_totals_view is itself exercised below."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = f"{tmp_dir}/src"
-        batches = [
-            _rows(("2024-01-01T10:00:05", "a", 1.5), ("2024-01-01T10:00:40", "b", 2.0)),
-            _rows(("2024-01-01T10:01:50", "a", 3.25), ("2024-01-01T10:02:00", "c", 4.0)),
-        ]
-        for rows in batches:
-            _write_events(spark, src, rows)
-        stream = file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-        view = pipeline.running_totals_view(stream, "room", "temp")
-        name = f"tws_{uuid.uuid4().hex[:6]}"
-        rows = _drain(spark, view, name, "update").collect()
-        # update mode emits one row per key per batch: latest = max n_seen
-        latest = {}
-        for r in rows:
-            if r.room not in latest or r.n_seen > latest[r.room].n_seen:
-                latest[r.room] = r
-        got = {k: (r.n_seen, r.total_cents, r.max_value) for k, r in latest.items()}
-        assert got == {
-            "a": (2, 475, 3.25),
-            "b": (1, 200, 2.0),
-            "c": (1, 400, 4.0),
-        }, got
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prior
-            )
-
-
-def test_running_totals_view_gates_missing_protobuf(spark):
-    """Without protobuf the operator must fail fast with a clear message,
-    not crash an opaque TWS worker mid-query."""
-    try:
-        import google.protobuf  # noqa: F401
-        import pytest
-
-        pytest.skip("protobuf present; gate not reachable")
-    except ImportError:
-        pass
-    import pytest
-
-    stream = spark.readStream.format("rate").load().selectExpr(
-        "CAST(value % 3 AS STRING) AS room", "CAST(value AS DOUBLE) AS temp"
-    )
-    with pytest.raises(RuntimeError, match="protobuf"):
-        pipeline.running_totals_view(stream, "room", "temp")
-
-
-def test_rollup_refresh_sink_replay_is_idempotent(spark, tmp_dir):
-    """foreachBatch is at-least-once: re-applying the same batch_id must
-    not double-merge the partials into the day partitions."""
-    from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators.rollup import (
-        minute_rollup_frame,
-    )
-
-    mat = f"{tmp_dir}/mat"
-    batch = spark.createDataFrame(
-        _rows(("2024-01-01T10:00:05", "a", 1.0), ("2024-01-01T10:00:40", "b", 2.0)),
-        SCHEMA,
-    )
-    sink = pipeline.rollup_refresh_sink(mat, ts_col="ts", keys=("room",), value_col="temp")
-    sink(batch, 0)
-    sink(batch, 0)  # replay of the SAME batch id → no-op
-    got = spark.read.parquet(mat)
-    assert got.agg(F.sum("n")).head()[0] == 2
-    sink(batch, 1)  # a new batch id DOES merge
-    assert spark.read.parquet(mat).agg(F.sum("n")).head()[0] == 4
-
-
-def test_rollup_refresh_sink_recovers_from_mid_swap_crash(spark, tmp_dir):
-    """The day-partition swap renames the old dir ASIDE before the
-    commit; if a crash lands between that rename and os.replace, the day
-    exists only as `<ddir>.old`. On replay (the ledger was never marked)
-    the sink must restore it as the committed state and merge into it —
-    not treat the day as empty and silently drop the prior partials."""
-    import os
-    import shutil
-
-    mat = f"{tmp_dir}/mat"
-    b0 = spark.createDataFrame(
-        _rows(("2024-01-01T10:00:05", "a", 1.0), ("2024-01-01T10:00:40", "b", 2.0)),
-        SCHEMA,
-    )
-    b1 = spark.createDataFrame(_rows(("2024-01-01T10:01:10", "a", 3.0)), SCHEMA)
-    sink = pipeline.rollup_refresh_sink(mat, ts_col="ts", keys=("room",), value_col="temp")
-    sink(b0, 0)
-    ddir = os.path.join(mat, "dt=2024-01-01")
-    # simulate batch 1 crashing mid-swap: the day dir was renamed aside
-    # (it holds the pre-batch-1 state), the swap never ran, and the
-    # ledger never marked batch 1 — so the stream replays it
-    os.replace(ddir, ddir + ".old")
-    sink(b1, 1)  # replay: recovery restores .old, then merges batch 1
-    got = spark.read.parquet(mat)
-    assert got.agg(F.sum("n")).head()[0] == 3
-    assert not os.path.exists(ddir + ".old")
-    # the OTHER window: swap completed but .old cleanup was lost — the
-    # stale copy must be dropped, not restored over the live dir
-    shutil.copytree(ddir, ddir + ".old")
-    sink(spark.createDataFrame(_rows(("2024-01-01T10:02:00", "b", 1.0)), SCHEMA), 2)
-    assert spark.read.parquet(mat).agg(F.sum("n")).head()[0] == 4
-    assert not os.path.exists(ddir + ".old")
-
-
-def test_dedup_ingest_sink_flags_cross_batch_near_dup(spark, tmp_dir):
-    """Streaming ingest dedup: a batch-2 document that near-duplicates a
-    batch-1 document must be flagged against the INDEX (cross-batch),
-    with batch-sized work only; distinct docs pass clean."""
-    base = (
-        "the quick brown fox jumps over the lazy dog and then runs far "
-        "away into the deep green forest to find some tasty food for "
-        "its hungry little cubs waiting at home"
-    )
-    tweaked = base.replace("tasty", "delicious")
-    other = (
-        "completely unrelated text about spark structured streaming "
-        "state stores checkpoints and watermarks nothing shared with "
-        "the fox sentence at all in any shingle of three words"
-    )
-    src = f"{tmp_dir}/docs"
-    schema = "doc_id LONG, text STRING"
-    spark.createDataFrame([(1, base), (2, other)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    spark.createDataFrame([(3, tweaked), (4, other + " totally new tail")],
-                          schema).coalesce(1).write.mode("append").parquet(src)
-
-    index = f"{tmp_dir}/index"
-    verdicts = f"{tmp_dir}/verdicts"
-    stream = file_stream(spark, src, schema, max_files_per_trigger=1)
-    q = (
-        stream.writeStream.foreachBatch(
-            pipeline.dedup_ingest_sink(index, verdicts, threshold=0.35)
-        )
-        .option("checkpointLocation", f"{tmp_dir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-
-    got = {r.doc_id: r for r in spark.read.parquet(verdicts).collect()}
-    assert len(got) == 4
-    assert not got[1].is_dup and not got[2].is_dup  # first batch: empty index
-    assert got[3].is_dup and got[3].dup_of == 1 and got[3].est_jaccard >= 0.35
-    # doc 4 shares most shingles with doc 2 (same text + a tail) → also
-    # flagged, against the batch-1 doc; the genuinely-new doc is only 3's
-    # near-dup flag target check above. Verify 4's match target is doc 2.
-    assert got[4].is_dup and got[4].dup_of == 2
-    # index now holds all four docs' signatures
-    assert spark.read.parquet(f"{index}/sigs").count() == 4
-    # and the incrementally-maintained cluster table equals the batch
-    # clustering of all flagged edges: {1,3} and {2,4}
-    comp = {
-        r.id: r.component
-        for r in spark.read.parquet(f"{index}/components").collect()
-    }
-    assert comp == {1: 1, 3: 1, 2: 2, 4: 2}
 
 
 def test_progress_recorder_captures_micro_batch_metrics(spark, tmp_dir):
@@ -744,798 +400,6 @@ def test_streaming_sketch_quantiles_on_rocksdb_state_store(spark, tmp_dir):
         assert served == batch_q
     finally:
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-
-
-def test_quality_gate_sink_routes_rows_with_reasons(spark, tmp_dir):
-    """Row-level quality gate: violating rows land in quarantine with the
-    list of failed checks; clean rows pass; NULL predicates quarantine
-    (unknown is not a pass); replay of a batch id rewrites, not appends."""
-    good, bad = f"{tmp_dir}/good", f"{tmp_dir}/bad"
-    batch = spark.createDataFrame(
-        _rows(
-            ("2024-01-01T10:00:05", "a", 1.0),     # clean
-            ("2024-01-01T10:00:10", "z", -3.0),    # bad temp AND bad room
-            ("2024-01-01T10:00:20", "b", 2.0),     # clean
-        )
-        + [(None, "a", None)],                     # NULL ts and temp
-        SCHEMA,
-    )
-    sink = pipeline.quality_gate_sink(
-        good,
-        bad,
-        [
-            ("temp_nonneg", F.col("temp") < 0),
-            ("room_known", ~F.col("room").isin("a", "b")),
-            ("ts_not_null", F.col("ts").isNull()),
-        ],
-    )
-    sink(batch, 0)
-    sink(batch, 0)  # replay must rewrite, not duplicate
-    ok = spark.read.parquet(good)
-    qr = spark.read.parquet(bad)
-    assert ok.count() == 2 and set(r.room for r in ok.collect()) == {"a", "b"}
-    reasons = {tuple(sorted(r.failed_checks)) for r in qr.collect()}
-    assert reasons == {
-        ("room_known", "temp_nonneg"),
-        ("temp_nonneg", "ts_not_null"),  # NULL temp -> violation too
-    }, reasons
-
-
-def _gate_batches(spark):
-    mk = lambda *rows: spark.createDataFrame(_rows(*rows), SCHEMA)
-    return [
-        mk(("2024-01-01T10:00:05", "a", 1.0), ("2024-01-01T10:00:10", "x", -2.0)),
-        mk(("2024-01-01T10:01:05", "b", 2.0), ("2024-01-01T10:01:10", "a", 3.0)),
-        mk(("2024-01-01T10:02:05", "b", -1.0), ("2024-01-01T10:02:10", "a", 4.0)),
-    ]
-
-
-def _gate_sink(spark, good, bad):
-    return pipeline.quality_gate_sink(
-        good,
-        bad,
-        [
-            ("temp_nonneg", F.col("temp") < 0),
-            ("room_known", ~F.col("room").isin("a", "b")),
-        ],
-    )
-
-
-def test_compact_batch_dirs_preserves_rows_and_drops_files(spark, tmp_dir):
-    """Compaction must be invisible to readers (same rows before/after)
-    while collapsing per-batch directories into one partition with
-    fewer files; a later batch then compacts incrementally into the
-    same consolidated dir."""
-    import os
-
-    good, bad = f"{tmp_dir}/good", f"{tmp_dir}/bad"
-    sink = _gate_sink(spark, good, bad)
-    batches = _gate_batches(spark)
-    sink(batches[0], 0)
-    sink(batches[1], 1)
-
-    def rows(df):
-        return sorted((r.room, r.temp) for r in df.collect())
-
-    def pq_files(root):
-        return [
-            os.path.join(d, f)
-            for d, _, fs in os.walk(root)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-
-    before = rows(spark.read.parquet(good))
-    files_before = len(pq_files(good))
-    assert pipeline.compact_batch_dirs(spark, good) == 2
-    after = rows(pipeline.read_batch_dirs(spark, good))
-    assert after == before
-    assert len(pq_files(good)) < files_before
-    assert not os.path.exists(f"{good}/ingest=0")
-    # incremental: a third batch folds into the existing consolidated dir
-    sink(batches[2], 2)
-    assert pipeline.compact_batch_dirs(spark, good, min_batches=1) == 1
-    got = rows(pipeline.read_batch_dirs(spark, good))
-    assert got == sorted(before + [("a", 4.0)])
-    # idempotent: nothing left to fold
-    assert pipeline.compact_batch_dirs(spark, good, min_batches=1) == 0
-
-
-def test_compaction_replay_and_crash_windows_are_safe(spark, tmp_dir):
-    """(1) A foreachBatch replay of a batch id that compaction already
-    consumed must be skipped by the sink ledger, not resurrected as a
-    duplicate directory. (2) A crash between swap and cleanup leaves a
-    consumed ingest dir on disk: read_batch_dirs must exclude it and
-    the next compaction must delete it."""
-    import os
-    import shutil
-
-    good, bad = f"{tmp_dir}/good", f"{tmp_dir}/bad"
-    sink = _gate_sink(spark, good, bad)
-    batches = _gate_batches(spark)
-    sink(batches[0], 0)
-    sink(batches[1], 1)
-    baseline = sorted(
-        (r.room, r.temp) for r in spark.read.parquet(good).collect()
-    )
-    # stash a copy of ingest=1 to fake the crash leftover later
-    stash = f"{tmp_dir}/stash"
-    shutil.copytree(f"{good}/ingest=1", stash)
-    assert pipeline.compact_batch_dirs(spark, good) == 2
-    # (1) replay after compaction: ledger skips, no dir reappears
-    sink(batches[0], 0)
-    assert not os.path.exists(f"{good}/ingest=0")
-    # (2) crash leftover: consumed dir back on disk next to its
-    # compacted copy — naive root read double-counts, helper must not
-    shutil.copytree(stash, f"{good}/ingest=1")
-    naive = spark.read.parquet(good).count()
-    assert naive == len(baseline) + 2  # proves the hazard is real
-    got = sorted(
-        (r.room, r.temp)
-        for r in pipeline.read_batch_dirs(spark, good).collect()
-    )
-    assert got == baseline
-    # next compaction sweeps the leftover instead of re-folding it
-    assert pipeline.compact_batch_dirs(spark, good, min_batches=5) == 0
-    assert not os.path.exists(f"{good}/ingest=1")
-    assert sorted(
-        (r.room, r.temp)
-        for r in pipeline.read_batch_dirs(spark, good).collect()
-    ) == baseline
-
-
-def test_pq_ingest_sink_converges_to_batch_index(spark, tmp_dir):
-    """Streaming PQ index maintenance: after ingesting embedding batches
-    through pq_ingest_sink, the per-batch code index must hold exactly
-    the codes a from-scratch batch pq_encode of the full corpus
-    produces, serving must work straight off the live root
-    (read_batch_dirs → pq_multi_query_topk), and a replayed batch must
-    not duplicate rows (ledger fast-path)."""
-    import numpy as np
-
-    from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators import (
-        similarity,
-    )
-
-    rng = np.random.RandomState(3)
-    vecs = rng.randn(60, 16)
-    schema = "vec_id long, embedding array<double>"
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    src = f"{tmp_dir}/emb"
-    for lo, hi in ((0, 20), (20, 40), (40, 60)):
-        spark.createDataFrame(rows[lo:hi], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    corpus = spark.createDataFrame(rows, schema)
-    cb = similarity.train_pq_codebooks(corpus, m=4, k=8, sample=60, seed=5)
-    index = f"{tmp_dir}/pq_live"
-    sink = pipeline.pq_ingest_sink(index, cb)
-    q = (
-        file_stream(spark, src, schema, max_files_per_trigger=1)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{tmp_dir}/ckpt_pq")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-
-    live = pipeline.read_batch_dirs(spark, index)
-    got = {r.vec_id: list(r.pq_code) for r in live.collect()}
-    want = {
-        r.vec_id: list(r.pq_code)
-        for r in similarity.pq_encode(corpus, cb)
-        .select("vec_id", "pq_code")
-        .collect()
-    }
-    assert got == want
-
-    # replaying an applied batch is a no-op (ledger fast-path)
-    sink(spark.createDataFrame(rows[0:20], schema), 0)
-    assert pipeline.read_batch_dirs(spark, index).count() == 60
-
-    # serving straight off the live per-batch root
-    qv = rows[0][1]
-    served = similarity.pq_multi_query_topk(
-        spark, live, corpus, [(0, qv)], cb, k=5, shortlist=20
-    ).collect()
-    assert len(served) == 5
-    assert served[0].vec_id == 0 or any(r.vec_id == 0 for r in served)
-
-
-def test_sketch_rollup_sink_converges_and_replay_is_algebraic_noop(
-    spark, tmp_dir
-):
-    """Streaming HLL rollup: after a 3-batch ingest the stored per-day
-    sketch estimates must equal the batch sketch over everything
-    ingested (same-lgK union is lossless), and re-applying a batch must
-    change nothing."""
-    import datetime
-
-    rows = [
-        (datetime.datetime(2024, 1, 1 + (i % 3), 8, 0, 0), i % 37)
-        for i in range(300)
-    ]
-    schema = "ts timestamp, user_id long"
-    src = f"{tmp_dir}/sk_src"
-    for lo, hi in ((0, 100), (100, 200), (200, 300)):
-        spark.createDataFrame(rows[lo:hi], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    store = f"{tmp_dir}/sk_store"
-    sink = pipeline.sketch_rollup_sink(store)
-    q = (
-        file_stream(spark, src, schema, max_files_per_trigger=1)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{tmp_dir}/ckpt_sk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-
-    def estimates():
-        return {
-            r.day: r.est
-            for r in spark.read.parquet(store)
-            .select("day", F.hll_sketch_estimate("sk").alias("est"))
-            .collect()
-        }
-
-    got = estimates()
-    want = {
-        r.day: r.est
-        for r in spark.createDataFrame(rows, schema)
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("est"))
-        .collect()
-    }
-    assert got == want and len(got) == 3
-    # low cardinality (37 users across 3 days) → estimates exact
-    exact = {
-        r.day: r.n
-        for r in spark.createDataFrame(rows, schema)
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count_distinct("user_id").alias("n"))
-        .collect()
-    }
-    assert got == exact
-
-    # replaying an already-merged batch is a no-op
-    sink(spark.createDataFrame(rows[0:100], schema), 0)
-    assert estimates() == got
-
-
-def test_dedup_within_watermark_evicts_and_reemits(spark, tmp_dir):
-    """dropDuplicatesWithinWatermark semantics pinned: duplicates
-    inside the horizon are suppressed; the SAME key recurring far
-    beyond the watermark emits again (state was evicted) — exactly the
-    at-least-once-source contract, and exactly what global
-    dropDuplicates would NOT do."""
-    import datetime
-
-    schema = "ts timestamp, k string"
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-
-    def at(minutes):
-        return t0 + datetime.timedelta(minutes=minutes)
-
-    src = f"{tmp_dir}/dwsrc"
-
-    def write_batch(rows, order):
-        import glob
-        import os
-
-        before = set(glob.glob(f"{src}/part-*.parquet"))
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        # the file source orders by modification time; writes land within
-        # the same mtime tick, so pin distinct mtimes to pin batch order
-        for p in set(glob.glob(f"{src}/part-*.parquet")) - before:
-            os.utime(p, (1_000_000 + order, 1_000_000 + order))
-
-    # batch 1: key A twice within minutes (dup), key B once
-    write_batch([(at(0), "A"), (at(1), "A"), (at(2), "B")], 1)
-    # batch 2 advances the watermark far past A's expiry; batch 3 runs
-    # with that watermark so its END evicts A's state (watermark
-    # propagation and eviction each lag one micro-batch); batch 4's A
-    # then finds no state and re-emits
-    write_batch([(at(600), "C")], 2)
-    write_batch([(at(605), "D")], 3)
-    write_batch([(at(610), "A")], 4)
-
-    stream = file_stream(spark, src, schema, max_files_per_trigger=1)
-    out = pipeline.dedup_within_watermark(
-        stream, ["k"], "ts", watermark="10 minutes"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dw_mem")
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmp_dir}/dw_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    rows = [(r.k, r.ts) for r in spark.table("dw_mem").collect()]
-    ks = sorted(k for k, _ in rows)
-    # A emitted TWICE (once per horizon), B/C/D once each
-    assert ks == ["A", "A", "B", "C", "D"], rows
-
-
-def test_read_batch_dirs_resolves_mid_swap_crash_leftovers(spark, tmp_dir):
-    """A compaction crash between os.replace and the .old cleanup
-    leaves `ingest=-1.old` beside `ingest=-1`; partition discovery
-    would read the retired copy as a second partition (double-counting
-    every compacted row and degrading the partition type to string).
-    read_batch_dirs must resolve the leftover first and return the
-    exact row set."""
-    import shutil
-
-    root = f"{tmp_dir}/qroot"
-    sink = pipeline.quality_gate_sink(root, f"{tmp_dir}/qquar", [])
-    df = spark.range(10).select(F.col("id").alias("v"))
-    sink(df.filter("v < 5"), 0)
-    sink(df.filter("v >= 5"), 1)
-    assert pipeline.compact_batch_dirs(spark, root, min_batches=2) == 2
-    # simulate the crash window: retired copy still on disk
-    shutil.copytree(f"{root}/ingest=-1", f"{root}/ingest=-1.old")
-    got = sorted(r.v for r in pipeline.read_batch_dirs(spark, root).collect())
-    assert got == list(range(10))
-    import os
-
-    assert not os.path.exists(f"{root}/ingest=-1.old")
-
-
-def test_cms_refresh_sink_merge_equals_whole_and_ledger_blocks_replay(
-    spark, tmp_dir
-):
-    """Streaming CMS maintenance: after a 3-batch ingest the stored
-    grid must equal cms_build over everything ingested (cell-wise sum
-    merge is lossless), and replaying an applied batch must change
-    nothing — here the LEDGER is what blocks it, because sum-merge is
-    not idempotent."""
-    from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators.sketches import (
-        cms_build,
-    )
-
-    rows = [(i % 53,) for i in range(300)]
-    schema = "user_id long"
-    src = f"{tmp_dir}/cms_src"
-    for lo, hi in ((0, 100), (100, 200), (200, 300)):
-        spark.createDataFrame(rows[lo:hi], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    store = f"{tmp_dir}/cms_store/grid"
-    sink = pipeline.cms_refresh_sink(store, "user_id", depth=4, width=64)
-    q = (
-        file_stream(spark, src, schema, max_files_per_trigger=1)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{tmp_dir}/ckpt_cms")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-
-    def grid():
-        return sorted(
-            map(tuple, spark.read.parquet(store).collect())
-        )
-
-    got = grid()
-    whole = sorted(
-        map(
-            tuple,
-            cms_build(
-                spark.createDataFrame(rows, schema), "user_id", 4, 64
-            ).collect(),
-        )
-    )
-    assert got == whole
-    # mass check: each of the 4 COUNTER rows sums to the 300 ingested
-    # rows (r = -1 is the parameter sentinel, not mass)
-    per_row = (
-        spark.read.parquet(store)
-        .filter(F.col("r") >= 0)
-        .groupBy("r")
-        .agg(F.sum("n").alias("s"))
-    ).collect()
-    assert {r.s for r in per_row} == {300}
-
-    # replaying batch 0 must be blocked by the ledger (sum-merge would
-    # otherwise double-count it)
-    sink(spark.createDataFrame(rows[0:100], schema), 0)
-    assert grid() == got
-    # a genuinely NEW batch id does merge
-    sink(spark.createDataFrame([(999,)], schema), 99)
-    assert grid() != got
-
-
-def test_kmv_refresh_sink_streamed_equals_batch_and_replay_is_noop(
-    spark, tmp_dir
-):
-    """Streaming KMV maintenance: after a 3-batch ingest the stored
-    per-group sketches must equal kmv_build over everything ingested,
-    and re-applying a batch must change nothing."""
-    from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators.sketches import (
-        kmv_build,
-    )
-
-    rows = [(f"t{i % 2}", i % 97) for i in range(300)]
-    schema = "event_type string, user_id long"
-    src = f"{tmp_dir}/kmv_src"
-    for lo, hi in ((0, 100), (100, 200), (200, 300)):
-        spark.createDataFrame(rows[lo:hi], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    store = f"{tmp_dir}/kmv_store/sk"
-    sink = pipeline.kmv_refresh_sink(store, ("event_type",), "user_id", k=32)
-    q = (
-        file_stream(spark, src, schema, max_files_per_trigger=1)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{tmp_dir}/ckpt_kmv")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-
-    def state():
-        return sorted(map(tuple, spark.read.parquet(store).collect()))
-
-    got = state()
-    whole = sorted(
-        map(
-            tuple,
-            kmv_build(
-                spark.createDataFrame(rows, schema),
-                ["event_type"],
-                "user_id",
-                k=32,
-            ).collect(),
-        )
-    )
-    assert got == whole
-    # replaying an applied batch id is a no-op
-    sink(spark.createDataFrame(rows[0:100], schema), 0)
-    assert state() == got
-
-
-def test_bloom_refresh_sink_streamed_equals_batch_and_serves_probes(
-    spark, tmp_dir
-):
-    """Streaming Bloom maintenance: after a 3-batch ingest the stored
-    bit-set equals bloom_build over everything ingested (deterministic
-    md5 family), a replay is a no-op, and batch bloom_probe over the maintained state honors the
-    no-false-negative contract for every ingested key."""
-    from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators.sketches import (
-        bloom_build,
-        bloom_probe,
-    )
-
-    rows = [(i % 173,) for i in range(300)]
-    schema = "user_id long"
-    src = f"{tmp_dir}/bloom_src"
-    for lo, hi in ((0, 100), (100, 200), (200, 300)):
-        spark.createDataFrame(rows[lo:hi], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    store = f"{tmp_dir}/bloom_store/sk"
-    sink = pipeline.bloom_refresh_sink(store, "user_id", 4, 2048)
-    q = (
-        file_stream(spark, src, schema, max_files_per_trigger=1)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{tmp_dir}/ckpt_bloom")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-
-    def state():
-        return sorted(r.bit for r in spark.read.parquet(store).collect())
-
-    got = state()
-    whole = sorted(
-        r.bit
-        for r in bloom_build(
-            spark.createDataFrame(rows, schema), "user_id", 4, 2048
-        ).collect()
-    )
-    assert got == whole
-    # replaying an applied batch id is a no-op
-    sink(spark.createDataFrame(rows[0:100], schema), 0)
-    assert state() == got
-    # serving: every ingested key must pass the probe
-    verdicts = bloom_probe(
-        spark.read.parquet(store),
-        spark.createDataFrame(rows, schema).distinct(),
-        "user_id",
-        4,
-        2048,
-    ).collect()
-    assert len(verdicts) == 173 and all(r.might_contain for r in verdicts)
-
-
-def test_logbucket_refresh_sink_streamed_equals_batch_ledger_blocks_replay(
-    spark, tmp_dir
-):
-    """Streaming quantile-sketch maintenance: stored per-group buckets
-    equal logbucket_build over everything ingested; a replayed batch id
-    is blocked by the ledger (sum-merge would double-count, same
-    algebra as the CMS sink); quantiles served from the maintained
-    state match the batch sketch's."""
-    from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators.sketches import (
-        logbucket_build,
-        logbucket_quantile,
-    )
-
-    rows = [(f"t{i % 2}", (i * 37) % 5000 + 1) for i in range(300)]
-    schema = "event_type string, value long"
-    src = f"{tmp_dir}/lb_src"
-    for lo, hi in ((0, 100), (100, 200), (200, 300)):
-        spark.createDataFrame(rows[lo:hi], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    store = f"{tmp_dir}/lb_store/sk"
-    sink = pipeline.logbucket_refresh_sink(store, ("event_type",), "value")
-    q = (
-        file_stream(spark, src, schema, max_files_per_trigger=1)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{tmp_dir}/ckpt_lb")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-
-    def state():
-        return sorted(
-            map(
-                tuple,
-                spark.read.parquet(store)
-                .select("event_type", "bucket", "n")
-                .collect(),
-            )
-        )
-
-    got = state()
-    whole = sorted(
-        map(
-            tuple,
-            logbucket_build(
-                spark.createDataFrame(rows, schema), ["event_type"], "value"
-            ).collect(),
-        )
-    )
-    assert got == whole
-    # ledger blocks the replayed batch id
-    sink(spark.createDataFrame(rows[0:100], schema), 0)
-    assert state() == got
-    # serving parity
-    served = sorted(
-        map(
-            tuple,
-            logbucket_quantile(
-                spark.read.parquet(store).select("event_type", "bucket", "n"),
-                ["event_type"],
-                [0.5, 0.9],
-            ).collect(),
-        )
-    )
-    batch = sorted(
-        map(
-            tuple,
-            logbucket_quantile(
-                logbucket_build(
-                    spark.createDataFrame(rows, schema),
-                    ["event_type"],
-                    "value",
-                ),
-                ["event_type"],
-                [0.5, 0.9],
-            ).collect(),
-        )
-    )
-    assert served == batch
-
-
-def test_stats_refresh_sink_streamed_equals_batch_and_serves_outliers(
-    spark, tmp_dir
-):
-    """Maintained moment statistics == one batch aggregate over
-    everything ingested; the ledger blocks a replayed batch id; and the
-    integer-exact z-score inequality served from the maintained state
-    flags exactly the rows the batch two-pass flags."""
-    rows = [("t%d" % (i % 2), float((i * 37) % 500) / 10) for i in range(300)]
-    rows.append(("t0", 5000.0))  # a clear outlier in t0
-    schema = "event_type string, value double"
-    src = f"{tmp_dir}/st_src"
-    for lo, hi in ((0, 100), (100, 200), (200, 301)):
-        spark.createDataFrame(rows[lo:hi], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    store = f"{tmp_dir}/st_store/stats"
-    sink = pipeline.stats_refresh_sink(store, ("event_type",), "value")
-    q = (
-        file_stream(spark, src, schema, max_files_per_trigger=1)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{tmp_dir}/ckpt_st")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-
-    whole = spark.createDataFrame(rows, schema)
-    cents = F.round(F.col("value") * 100).cast("long")
-    batch_stats = sorted(
-        map(
-            tuple,
-            whole.select("event_type", cents.alias("v"))
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("v").alias("s"),
-                F.sum(F.col("v") * F.col("v")).alias("s2"),
-            )
-            .collect(),
-        )
-    )
-    got = sorted(
-        map(
-            tuple,
-            spark.read.parquet(store)
-            .select("event_type", "n", "s", "s2")
-            .collect(),
-        )
-    )
-    assert got == batch_stats
-    # replayed batch id is a no-op
-    sink(spark.createDataFrame(rows[0:100], schema), 0)
-    assert sorted(
-        map(
-            tuple,
-            spark.read.parquet(store)
-            .select("event_type", "n", "s", "s2")
-            .collect(),
-        )
-    ) == batch_stats
-    # serve the outlier gate from the maintained state
-    stats = spark.read.parquet(store)
-    vals = whole.select("event_type", cents.alias("v"))
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    dev = d(F.col("n")) * d(F.col("v")) - d(F.col("s"))
-    nvar = d(F.col("n")) * d(F.col("s2")) - d(F.col("s")) * d(F.col("s"))
-    flagged = (
-        vals.join(F.broadcast(stats), "event_type")
-        .filter(dev * dev > 9 * nvar)
-        .collect()
-    )
-    assert any(r.v == 500000 for r in flagged)  # the planted outlier
-
-
-#: the six sinks whose whole state is one directory, each with a reader
-#: of its stored rows (HLL by estimate: sketch bytes need not be
-#: canonical)
-_ONE_DIR_SINKS = {
-    "hll": (
-        lambda p: pipeline.sketch_rollup_sink(p),
-        lambda df: df.select("day", F.hll_sketch_estimate("sk")),
-    ),
-    "cms": (
-        lambda p: pipeline.cms_refresh_sink(p, "user_id", depth=4, width=64),
-        lambda df: df,
-    ),
-    "kmv": (
-        lambda p: pipeline.kmv_refresh_sink(p, ("event_type",), "user_id", k=64),
-        lambda df: df,
-    ),
-    "logbucket": (
-        lambda p: pipeline.logbucket_refresh_sink(p, ("event_type",), "value"),
-        lambda df: df,
-    ),
-    "moments": (
-        lambda p: pipeline.stats_refresh_sink(p, ("event_type",), "value"),
-        lambda df: df,
-    ),
-    "bloom": (
-        lambda p: pipeline.bloom_refresh_sink(p, "user_id", 4, 256),
-        lambda df: df,
-    ),
-}
-
-
-@pytest.mark.parametrize("kind", sorted(_ONE_DIR_SINKS))
-def test_one_directory_sink_crash_windows_and_replays(
-    spark, tmp_dir, kind, monkeypatch
-):
-    """Every one-directory sink, through each crash window of its swap:
-    a stale staging dir from a killed writer is discarded; a crash that
-    left only the renamed-aside copy is restored and the replayed batch
-    merges into it; a crash after the swap but before the cleanup kept
-    the mark with the state, so the replay is skipped; and a replay of
-    ANY id at or below the mark — with new rows, so no merge algebra
-    can hide an applied replay — leaves the stored rows identical."""
-    import datetime
-    import os
-    import shutil
-
-    make_sink, view = _ONE_DIR_SINKS[kind]
-    schema = "ts timestamp, user_id long, event_type string, value double"
-
-    def batch(lo, hi):
-        return spark.createDataFrame(
-            [
-                (
-                    datetime.datetime(2024, 1, 1 + i % 2, 8),
-                    i,
-                    f"t{i % 2}",
-                    float(i * 7 % 97 + 1),
-                )
-                for i in range(lo, hi)
-            ],
-            schema,
-        )
-
-    store = f"{tmp_dir}/state"
-    sink = make_sink(store)
-
-    def stored():
-        return sorted(
-            map(tuple, view(spark.read.parquet(store)).collect()), key=repr
-        )
-
-    os.makedirs(store + ".staging")
-    with open(f"{store}.staging/part-0.parquet", "wb") as f:
-        f.write(b"torn")
-    sink(batch(0, 20), 0)
-    assert not os.path.exists(store + ".staging")
-    assert stored()
-
-    # batch 1 crashed after renaming the state aside: only .old is left
-    stash = f"{tmp_dir}/stash"
-    shutil.copytree(store, stash)
-    sink(batch(20, 40), 1)
-    after_1 = stored()
-    shutil.rmtree(store)
-    shutil.copytree(stash, store + ".old")
-    sink(batch(20, 40), 1)
-    assert stored() == after_1
-    assert not os.path.exists(store + ".old")
-
-    # batch 2 crashed after the swap, before removing the old copy
-    rmtree = shutil.rmtree
-
-    def crash(path, *args, **kwargs):
-        if str(path).endswith(".old"):
-            raise RuntimeError("crash")
-        rmtree(path, *args, **kwargs)
-
-    monkeypatch.setattr(shutil, "rmtree", crash)
-    with pytest.raises(RuntimeError, match="crash"):
-        sink(batch(40, 60), 2)
-    monkeypatch.undo()
-    assert os.path.exists(store + ".old")
-    after_2 = stored()
-    assert after_2 != after_1
-    sink(batch(40, 60), 2)
-    assert stored() == after_2
-    assert not os.path.exists(store + ".old")
-
-    for bid in (0, 1, 2):
-        sink(batch(100, 130), bid)
-        assert stored() == after_2, bid
 
 
 def test_streaming_left_outer_join_flushes_tail_nulls(spark):
