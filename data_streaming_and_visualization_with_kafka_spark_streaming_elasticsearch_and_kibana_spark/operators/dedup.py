@@ -88,7 +88,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     k_shingle: int = 3,
     num_hashes: int = 32,
-    persist: bool = True,
 ) -> DataFrame:
     """(id, shingles, signature) computed in ONE pass and persisted.
 
@@ -111,9 +110,7 @@ def minhash_signatures(
         )
         .withColumn("sig", minhash_signature(F.col("sh"), num_hashes))
     )
-    if persist:
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    return out
+    return out.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def banded_buckets(
@@ -489,7 +486,6 @@ def simhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist: bool = True,
 ) -> DataFrame:
     """(id, simhash64) computed once and persisted — both sides of the
     pigeonhole self-join reuse it instead of re-folding every document's
@@ -498,9 +494,7 @@ def simhash_signatures(
     out = ensure_min_parallelism(df).select(
         F.col(id_col), simhash64(toks).alias("sig")
     )
-    if persist:
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    return out
+    return out.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def simhash_candidates(

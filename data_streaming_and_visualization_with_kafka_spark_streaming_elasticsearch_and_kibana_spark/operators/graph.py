@@ -60,8 +60,10 @@ def pagerank(
     # e feeds the node mint, the degree table, and every round's join;
     # the per-round rank is consumed TWICE by the next round (contrib
     # join + carry), so the lazy plan DOUBLED per iteration — truncate
-    # lineage with lazy checkpoints (no extra jobs; guide §5 / §3.3
-    # "materialising an intermediate truncates the plan")
+    # lineage with lazy checkpoints (guide §5 / §3.3 "materialising an
+    # intermediate truncates the plan"). Lazy is not free under AQE:
+    # making the checkpoint RDD runs every shuffle stage above it while
+    # the plan is built (22 build-time jobs in pagerank_user_graph)
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).distinct().localCheckpoint(eager=False)
@@ -184,7 +186,9 @@ def resolve_ancestors(
         )
         # a is consumed TWICE per round (probe + ancestor sides), so
         # the lazy plan doubled per round (2^6 copies by round 6) —
-        # truncate lineage, no extra jobs (guide §3.3)
+        # truncate lineage (guide §3.3). Under AQE, making the checkpoint
+        # RDD runs the shuffle stages above it while the plan is built
+        # (22 build-time jobs in pagerank_user_graph)
         a = (
             a.join(nxt, a.anc == nxt.n2)
             .select("n", F.col("anc2").alias("anc"), (F.col("d") + F.col("d2")).alias("d"))

@@ -231,3 +231,13 @@ def test_streaming_and_fsutil_surface_has_callers():
             if node.name not in seen and node.name not in _KEPT_WITHOUT_CALLER:
                 orphans.append(f"{mod}:{node.name}")
     assert not orphans, orphans
+
+
+def test_queries_md_matches_the_generator():
+    """QUERIES.md is generated (`python tools/gen_catalog.py`); a catalog
+    edit that does not regenerate it leaves the committed table stale."""
+    from tools.gen_catalog import OUT, render
+
+    with open(OUT) as fh:
+        committed = fh.read()
+    assert committed == render(), "QUERIES.md is stale: run python tools/gen_catalog.py"

@@ -27,7 +27,8 @@ def summary(fn) -> str:
     return first.replace("|", "\\|")  # keep markdown table cells intact
 
 
-def main() -> None:
+def render() -> str:
+    """The text of QUERIES.md for the current catalog."""
     oracles = entrymod.oracle_sql()
     lines = [
         "# QUERIES — the full driver-gated surface",
@@ -289,9 +290,15 @@ def main() -> None:
         f"**{n} queries, {no} oracle-checked, {n - no} rows-only.**",
         "",
     ]
+    return "\n".join(lines)
+
+
+def main() -> None:
+    text = render()
     with open(OUT, "w") as f:
-        f.write("\n".join(lines))
-    print(f"wrote {OUT} ({n} queries, {no} oracle)")
+        f.write(text)
+    totals = text.rstrip().splitlines()[-1]
+    print(f"wrote {OUT}: {totals}")
 
 
 if __name__ == "__main__":
