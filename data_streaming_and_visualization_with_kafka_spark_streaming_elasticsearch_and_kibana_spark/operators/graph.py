@@ -6,13 +6,19 @@ clusters. PageRank adds the other workhorse: importance scores over an
 edge list, used in training-data pipelines to weight documents by
 link/citation authority and to rank users/pages for sampling.
 
-Spark shape: the classic iterate-as-join loop. Each iteration is
-  contribs = edges ⋈ rank (shuffle on src) → groupBy dst (one shuffle)
-  rank'    = teleport + damping · Σ contribs
-Both shuffles key on node ids; the edge list never changes, so at
-cluster scale you'd persist it partitioned by src and every iteration
-reuses that layout (locally AQE handles it). Iterations are a fixed
-small count — each round is one job, no driver-side graph state.
+Spark shape: the classic iterate-as-join loop. What does not change
+across rounds is made once, before the loop: each edge joined with its
+source's out-weight (eo), the node set, and N from one count(), so the
+teleport term and the initial rank are integer literals. Each round is
+  inflow = eo ⋈ rank (on src) ∪ one zero row per node → groupBy node
+  rank'  = teleport + damping · inflow
+one join and one aggregate, both keyed on node ids; the zero rows make
+the aggregate emit every node, so no join carries the node table.
+Iterations are a fixed small count and the only driver-side state is
+N. Each round's rank is checkpointed so the next round's plan starts
+from it; under AQE, making that checkpoint runs the round's shuffle
+stages while the plan is built (4 jobs a round, 13 of the 14 jobs of
+pagerank_user_graph).
 
 Determinism contract (the interesting part): ranks are carried as
 BIGINT units (1e9 = rank 1.0) and EVERY step is integer arithmetic —
@@ -54,65 +60,12 @@ def pagerank(
 
     Returns (node, rank_units, rank): rank_units is the exact BIGINT
     fixed-point score, rank its 1e-9-scaled double view. Multi-edges
-    are collapsed first (an edge is a link, not a count).
-    """
-    num = int(round(damping * 100))  # damping as the rational num/100
-    # e feeds the node mint, the degree table, and every round's join;
-    # the per-round rank is consumed TWICE by the next round (contrib
-    # join + carry), so the lazy plan DOUBLED per iteration — truncate
-    # lineage with lazy checkpoints (guide §5 / §3.3 "materialising an
-    # intermediate truncates the plan"). Lazy is not free under AQE:
-    # making the checkpoint RDD runs every shuffle stage above it while
-    # the plan is built (22 build-time jobs in pagerank_user_graph)
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).distinct().localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    n_total = nodes.agg(F.count("*").alias("n_nodes"))
-
-    # teleport term: (1-d)·units/N as pure integer division
-    teleport = F.expr(f"({(100 - num) * UNITS} DIV (100 * n_nodes))")
-    rank = (
-        nodes.crossJoin(F.broadcast(n_total))
-        .select(
-            "node",
-            "n_nodes",
-            F.expr(f"{UNITS} DIV n_nodes").cast("long").alias("rank_units"),
-        )
-    )
-    for _ in range(iterations):
-        contribs = (
-            e.join(rank, e.src == rank.node)
-            .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_units DIV outdeg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        rank = (
-            rank.select("node", "n_nodes")
-            .join(contribs, "node", "left")
-            .withColumn("inflow", F.coalesce("inflow", F.lit(0)))
-            .select(
-                "node",
-                "n_nodes",
-                (F.expr(f"({num} * inflow) DIV 100") + teleport)
-                .cast("long")
-                .alias("rank_units"),
-            )
-        )
-        rank = loop_checkpoint(rank)
-    return rank.select(
-        "node",
-        "rank_units",
-        (F.col("rank_units") / float(UNITS)).alias("rank"),
+    are collapsed first (an edge is a link, not a count): this is
+    pagerank_weighted over the distinct edges with every weight 1,
+    where (rank·1) DIV Σ1 is rank DIV outdeg."""
+    links = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    return pagerank_weighted(
+        links.distinct().withColumn("w", F.lit(1)), iterations, damping
     )
 
 
@@ -188,7 +141,6 @@ def resolve_ancestors(
         # the lazy plan doubled per round (2^6 copies by round 6) —
         # truncate lineage (guide §3.3). Under AQE, making the checkpoint
         # RDD runs the shuffle stages above it while the plan is built
-        # (22 build-time jobs in pagerank_user_graph)
         a = (
             a.join(nxt, a.anc == nxt.n2)
             .select("n", F.col("anc2").alias("anc"), (F.col("d") + F.col("d2")).alias("d"))
@@ -639,51 +591,60 @@ def pagerank_weighted(
     divergent failure behavior. Filtering w > 0 pins one semantic
     (zero-weight edges carry no mass and define no denominator) that
     both engines agree on."""
-    num = int(round(damping * 100))
-    # same lineage-truncation shape as pagerank(): e reused per round,
-    # rank consumed twice by the next round
+    num = int(round(damping * 100))  # damping as the rational num/100
     e = edges.select(
         F.col(src).alias("src"),
         F.col(dst).alias("dst"),
         F.col(weight).alias("w"),
-    ).filter(F.col("w") > 0).localCheckpoint(eager=False)
+    ).filter(F.col("w") > 0)
+    # the loop invariants, joined once: each edge with its source's
+    # out-weight, and the node set. eo feeds every round's join and
+    # nodes every round's union, so both are checkpointed; the count
+    # below makes nodes' blocks
+    eo = e.join(
+        e.groupBy("src").agg(F.sum("w").alias("wsum")), "src"
+    ).localCheckpoint(eager=False)
     nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
+        eo.select(F.col("src").alias("node"))
+        .unionByName(eo.select(F.col("dst").alias("node")))
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    wsum = e.groupBy("src").agg(F.sum("w").alias("wsum"))
-    n_total = nodes.agg(F.count("*").alias("n_nodes"))
-    teleport = F.expr(f"({(100 - num) * UNITS} DIV (100 * n_nodes))")
-    rank = nodes.crossJoin(F.broadcast(n_total)).select(
-        "node",
-        "n_nodes",
-        F.expr(f"{UNITS} DIV n_nodes").cast("long").alias("rank_units"),
-    )
+    n = nodes.count()
+    if n == 0:  # no edges: nothing to rank, and 1/N is undefined
+        return nodes.select(
+            "node",
+            F.lit(0).cast("long").alias("rank_units"),
+            F.lit(0.0).alias("rank"),
+        )
+    # teleport (1-d)·units/N and the initial rank units/N, as exact
+    # integer literals (Python // is SQL DIV on non-negative operands)
+    teleport = (100 - num) * UNITS // (100 * n)
+    rank = nodes.select("node", F.lit(UNITS // n).cast("long").alias("rank_units"))
+    # every node gets a zero inflow row, so the one aggregate below
+    # emits every node: no left join against the node table per round
+    zero = nodes.select("node", F.lit(0).cast("long").alias("c"))
     for _ in range(iterations):
-        contribs = (
-            e.join(rank, e.src == rank.node)
-            .join(wsum, "src")
+        inflow = (
+            eo.join(rank, eo.src == rank.node)
             .select(
                 F.col("dst").alias("node"),
                 F.expr("(rank_units * w) DIV wsum").alias("c"),
             )
+            .unionByName(zero)
             .groupBy("node")
             .agg(F.sum("c").alias("inflow"))
         )
-        rank = (
-            rank.select("node", "n_nodes")
-            .join(contribs, "node", "left")
-            .withColumn("inflow", F.coalesce("inflow", F.lit(0)))
-            .select(
+        # the checkpoint keeps each round's plan one round deep; a plan
+        # with no per-round checkpoints measured slower
+        rank = loop_checkpoint(
+            inflow.select(
                 "node",
-                "n_nodes",
-                (F.expr(f"({num} * inflow) DIV 100") + teleport)
+                (F.expr(f"({num} * inflow) DIV 100") + F.lit(teleport))
                 .cast("long")
                 .alias("rank_units"),
             )
         )
-        rank = loop_checkpoint(rank)
     return rank.select(
         "node",
         "rank_units",
@@ -736,9 +697,8 @@ def label_propagation(
             .agg(F.count("*").alias("cnt"))
         )
         # NOTE: no per-round checkpoint on lbl — measured SLOWER (the
-        # per-round block write outweighs the 3-round linear plan,
-        # which, unlike pagerank's, does not double per round); nbr's
-        # checkpoint above is the one that pays
+        # per-round block write outweighs the 3-round linear plan);
+        # nbr's checkpoint above is the one that pays
         lbl = (
             counts.withColumn("__rk", F.row_number().over(w))
             .filter(F.col("__rk") == 1)
@@ -803,9 +763,8 @@ def label_propagation_weighted(
             .agg(F.sum("wt").alias("cnt"))
         )
         # NOTE: no per-round checkpoint on lbl — measured SLOWER (the
-        # per-round block write outweighs the 3-round linear plan,
-        # which, unlike pagerank's, does not double per round); nbr's
-        # checkpoint above is the one that pays
+        # per-round block write outweighs the 3-round linear plan);
+        # nbr's checkpoint above is the one that pays
         lbl = (
             counts.withColumn("__rk", F.row_number().over(w))
             .filter(F.col("__rk") == 1)

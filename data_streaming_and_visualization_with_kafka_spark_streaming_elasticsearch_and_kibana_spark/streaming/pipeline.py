@@ -39,6 +39,8 @@ per-query checkpoint dirs (the reference shared one dir — T2 bug).
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -388,16 +390,25 @@ def ewma_view(
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
     """Test/dev harness: drive a streaming DataFrame to completion
     synchronously into an in-memory table; returns the StreamingQuery
-    (caller reads `spark.table(name)`)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    (caller reads `spark.table(name)`). The query checkpoints to a fresh
+    directory under the temp directory (``TMPDIR``), removed when the
+    run ends, whether it returns or raises; without one Spark makes a
+    ``temporary-<uuid>`` directory in the JVM's temp directory and keeps
+    it when the query fails."""
+    checkpoint = tempfile.mkdtemp(prefix="run_to_memory_")
+    try:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 def drain_to_sink(spark, src: str, schema: str, sink, checkpoint: str) -> None:

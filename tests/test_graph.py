@@ -176,6 +176,35 @@ def test_weighted_pagerank_uniform_weights_equal_unweighted(spark):
     assert a == b
 
 
+def _jobs(spark, build) -> int:
+    """Spark jobs started while `build()` makes a plan and collects it;
+    the DAG scheduler hands out job ids in sequence, so the ids consumed
+    count every job (lazy checkpoints run some while the plan is built)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    build().collect()
+    return dag.nextJobId() - before
+
+
+def test_pagerank_rounds_cost_at_most_four_jobs(spark):
+    # the loop invariants (edge ⋈ out-weight, node set, N) are made once,
+    # so each extra round is one checkpointed join → union → aggregate:
+    # two extra rounds add at most 8 jobs
+    e = _edges(spark, [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (2, 4)])
+    ew = e.withColumn("w", F.lit(2))
+    for run in (
+        lambda it: graph.pagerank(e, iterations=it),
+        lambda it: graph.pagerank_weighted(ew, iterations=it),
+    ):
+        assert _jobs(spark, lambda: run(5)) - _jobs(spark, lambda: run(3)) <= 8
+
+
+def test_pagerank_of_no_edges_is_empty(spark):
+    e = _edges(spark, [])
+    assert graph.pagerank(e).collect() == []
+    assert graph.pagerank_weighted(e.withColumn("w", F.lit(1))).collect() == []
+
+
 def test_clustering_coefficients_weighted_known_graph(spark):
     """Triangle {1,2,3} with w12=2, w13=4, w23=6 plus pendant 1-4 w=8:
     c_w(1) = (2+4)/(14·2), c_w(2) = (2+6)/8, c_w(3) = (4+6)/10,

@@ -64,6 +64,35 @@ def test_windowed_rollup_equals_batch_groupby(spark, tmp_dir):
     assert got[("2024-01-01T10:00:00", "b")] == (7.0, 7.0, 7.0, 1)
 
 
+def test_run_to_memory_removes_its_checkpoint(spark, tmp_path, monkeypatch):
+    import tempfile
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    src = str(tmp_path / "src")
+    _write_events(spark, src, _rows(("2024-01-01T10:00:05", "a", 1.0)))
+    root = tmp_path / "tmp"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    stream = file_stream(spark, src, SCHEMA)
+    assert _drain(spark, stream, f"r_{uuid.uuid4().hex[:6]}", "append").count() == 1
+    assert len(made) == 1 and list(root.iterdir()) == []
+
+    failing = stream.select(F.raise_error(F.lit("boom")).alias("x"))
+    with pytest.raises(StreamingQueryException):
+        pipeline.run_to_memory(failing, f"f_{uuid.uuid4().hex[:6]}")
+    assert len(made) == 2 and list(root.iterdir()) == []
+
+
 def test_latest_value_view_first_arrival_dedup(spark, tmp_dir):
     src = f"{tmp_dir}/src"
     rows = _rows(
