@@ -68,9 +68,11 @@ _KEY = re.compile(r"[0-9a-f]{16}")
 
 def _code_digest(fn) -> str:
     """Digest of the code that builds an artifact: the source of `fn`
-    and of every function of its own module it reaches through globals,
-    closures and nested code, plus the whole source file of every
-    package module those functions call into."""
+    and of every function it reaches through globals, closures and
+    nested code within its own top-level package (a catalog build
+    reaches the helpers of every `catalog.*` module), plus the whole
+    source file of every engine-package module those functions call
+    into."""
     hit = _CODE_DIGESTS.get(id(fn.__code__))
     if hit is None:
         parts: set[str] = set()
@@ -98,6 +100,7 @@ def _walk_code(fn, parts: set, seen: set) -> None:
         stack.extend(c for c in code.co_consts if inspect.iscode(c))
     refs = [fn.__globals__[n] for n in names if n in fn.__globals__]
     refs += [c.cell_contents for c in fn.__closure__ or ()]
+    top = (fn.__module__ or "").partition(".")[0]
     for ref in refs:
         mod = ref.__name__ if inspect.ismodule(ref) else getattr(
             ref, "__module__", None
@@ -105,7 +108,7 @@ def _walk_code(fn, parts: set, seen: set) -> None:
         if isinstance(mod, str) and mod.startswith(_PACKAGE + "."):
             with open(sys.modules[mod].__file__, "rb") as f:
                 parts.add(mod + ":" + hashlib.sha256(f.read()).hexdigest())
-        elif inspect.isfunction(ref) and mod == fn.__module__:
+        elif inspect.isfunction(ref) and mod and mod.partition(".")[0] == top:
             _walk_code(ref, parts, seen)
 
 

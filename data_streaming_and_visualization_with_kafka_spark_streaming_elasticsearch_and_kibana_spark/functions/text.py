@@ -44,14 +44,6 @@ def punct_ratio(col: Column | str) -> Column:
     )
 
 
-def alpha_ratio(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n = F.length(c)
-    return F.when(n == 0, F.lit(0.0)).otherwise(
-        F.regexp_count(c, F.lit(r"[A-Za-z]")).cast("double") / n
-    )
-
-
 def mean_word_len(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     nw = whitespace_token_count(c)
@@ -274,26 +266,6 @@ def winnow_mins(grams: Column, window: int = 6) -> Column:
     return F.array_distinct(mins)
 
 
-def winnow_selected(grams: Column, window: int = 6) -> Column:
-    """Winnowing with provenance: distinct (pos, fp) structs where pos
-    is the LEFTMOST minimal gram position selected by each window
-    (1-based). The positions are what local-similarity tools align on;
-    tests pin them against an independent reference."""
-    def pick(j):
-        win = F.slice(grams, j, window)
-        mn = F.array_min(win)
-        return F.struct(
-            (F.array_position(win, mn) + j.cast("long") - 1).alias("pos"),
-            mn.alias("fp"),
-        )
-
-    sel = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(grams) - (window - 1), F.lit(1))),
-        pick,
-    )
-    return F.array_distinct(sel)
-
-
 #: host part of a URL: scheme '//' then everything up to /, :, ?, # or space
 DOMAIN_RE = r"https?://([^/:?#\s]+)"
 
@@ -317,36 +289,3 @@ def registered_domain(host: Column) -> Column:
     dependency-free baseline and is stated as such."""
     return F.regexp_extract(host, r"([^.]+\.[^.]+)$", 1)
 
-
-def char_trigrams(col: Column | str, pre_normalized: bool = False) -> Column:
-    """All overlapping character 3-grams of lower(trim(text)) as an
-    array — the fastText-style language-ID feature (char n-grams beat
-    word lists on short/noisy text). Pure Column expression:
-    Column.substr accepts Column offsets, so the gram walk is a
-    transform over 1..len-2 with no UDF. DuckDB twin:
-    list_transform(generate_series(1, length(t) - 2),
-    i -> substring(t, i, 3)).
-
-    PERFORMANCE: an expression captured inside a higher-order-function
-    lambda is re-evaluated per element, so naively embedding
-    lower(trim(text)) in the per-position substr makes the walk O(n²)
-    per document (measured 7.2s → 4.7s at sf0.1 fixed; the rest is the
-    linear explode). Both paths here are O(n): `pre_normalized=True`
-    skips normalization entirely (the caller projected it once), and
-    the default binds the normalized text as a lambda variable via the
-    single-element-array transform — the same once-per-row guarantee
-    `shingles()` uses."""
-    c = F.col(col) if isinstance(col, str) else col
-
-    def walk(t: Column) -> Column:
-        n = F.length(t)
-        return F.when(n < 3, F.array().cast("array<string>")).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), n - 2),
-                lambda i: t.substr(i, F.lit(3)),
-            )
-        )
-
-    if pre_normalized:
-        return walk(c)
-    return F.element_at(F.transform(F.array(F.lower(F.trim(c))), walk), 1)

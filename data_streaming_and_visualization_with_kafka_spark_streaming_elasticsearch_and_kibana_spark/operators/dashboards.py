@@ -34,9 +34,3 @@ def build_panel(df: DataFrame, spec: dict) -> DataFrame:
         return df.agg(*spec["metrics"].values())
     raise ValueError(f"unknown panel kind: {kind!r}")
 
-
-def build_dashboard(df: DataFrame, panels: dict[str, dict]) -> dict[str, DataFrame]:
-    """Compile a whole dashboard: {panel_name: spec} → {panel_name: plan}.
-    Plans stay lazy — callers trigger only the panels they render, and
-    Spark can share the scan across panels it does run."""
-    return {name: build_panel(df, spec) for name, spec in panels.items()}

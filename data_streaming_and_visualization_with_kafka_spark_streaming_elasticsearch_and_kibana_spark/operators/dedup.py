@@ -358,27 +358,6 @@ def connected_components(
     return labels.select(F.col("id"), F.col("label").alias("component"))
 
 
-def dedup_keep_list(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Cluster the near-dup pairs and decide survivors: every document
-    gets (id, component, keep) where keep = the lowest id of its
-    component (isolated docs keep themselves). This is the artifact a
-    training-data pipeline actually consumes — filter `keep` to
-    materialize the deduplicated corpus."""
-    cc = connected_components(pairs)
-    out = (
-        df.select(F.col(id_col))
-        .join(cc.withColumnRenamed("id", id_col), id_col, "left")
-        .withColumn("component", F.coalesce("component", F.col(id_col)))
-    )
-    # the component label IS the min id of the component (min-label CC),
-    # so the survivor test needs no extra shuffle
-    return out.withColumn("keep", F.col(id_col) == F.col("component"))
-
-
 def incremental_components(
     labels: DataFrame,
     new_pairs: DataFrame,

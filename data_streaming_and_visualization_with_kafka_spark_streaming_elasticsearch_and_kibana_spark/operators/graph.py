@@ -249,8 +249,8 @@ def triangle_count(
     edges. Join volume is Σ outdeg(v)² with outdeg ≤ O(√m) — the
     compact-forward bound — vs the Σ deg(v)² an id-oriented wedge
     join pays (a single 10⁶-degree hub: 10¹² wedge rows from one key
-    there, ~0 here; measured in tools/graph_sketch_scaling.py's
-    hub-graph row). Every join keys on node ids and the output is a
+    there, ~0 here; measured in the hub-graph rows of
+    tools/scaling.py wedge_hub). Every join keys on node ids and the output is a
     constant-size row."""
     e = _canonical_edges(edges, src, dst)
     nodes = (
@@ -376,7 +376,7 @@ def _cn_pair_stream(
     """The block-decomposed wedge ENUMERATION stage of
     common_neighbor_counts: one (pa, pb) row per wedge, each unordered
     pair emitted exactly once per shared neighbor. Split out so the
-    skew-isolation tooling (tools/wedge_hub_scaling.py) can time the
+    skew-isolation tooling (tools/scaling.py wedge_hub) can time the
     stage the blocking actually fixes — the downstream (pa, pb) count
     has diverse keys and is output-bound by definition."""
     sym_a = _canonical_edges(edges, src, dst)

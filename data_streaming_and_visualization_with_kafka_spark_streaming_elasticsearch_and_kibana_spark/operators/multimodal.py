@@ -60,18 +60,6 @@ IMAGE_FEATURES_DDL = (
 )
 
 
-def attach_meta(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Fill the metadata struct from the binary column itself."""
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.lit("application/octet-stream").alias("mime"),
-            F.length(F.col(content_col)).cast("long").alias("bytes"),
-            F.lit(None).cast("string").alias("source_uri"),
-        ),
-    )
-
-
 # ------------------------------------------------------ real decoders
 def decode_image(content: bytes) -> np.ndarray:
     """(H, W, 3) uint8 from the formats a pure-stdlib decoder can

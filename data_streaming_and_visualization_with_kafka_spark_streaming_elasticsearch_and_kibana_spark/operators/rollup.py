@@ -91,7 +91,7 @@ def continuous_aggregate(
     reads ONLY the post-watermark day directories instead of row-group-
     filtering the whole history. A bare timestamp predicate cannot prune
     directories; the redundant-looking date predicate is what makes the
-    tail O(tail) at 100 TB (measured in tools/cagg_experiment.py)."""
+    tail O(tail) at 100 TB (measured by tools/scaling.py cagg)."""
     ts = F.col(ts_col).cast("timestamp")
     cols = ["minute", *keys, "n", "value_cents"]
     tail_src = raw

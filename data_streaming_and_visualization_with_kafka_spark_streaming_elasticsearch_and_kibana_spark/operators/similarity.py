@@ -1269,7 +1269,7 @@ def ivf_bulk_topk(
     centroid table.
 
     `salt > 1` splits each cid's candidate work `salt` ways for HOT
-    cells (tools/ann_bulk_scaling.py --skew: one cell holding half the
+    cells (tools/scaling.py ann_skew: one cell holding half the
     corpus turns the cid join into a single-task straggler — the hot
     key's index-side shuffle blocks are far below AQE's skew-split
     byte threshold while its JOIN OUTPUT explodes, so AQE never

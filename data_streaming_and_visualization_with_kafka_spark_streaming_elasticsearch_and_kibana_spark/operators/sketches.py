@@ -361,20 +361,6 @@ def _bloom_sentinel(n_hashes: int, n_bits: int) -> int:
     return -(n_bits * 1024 + n_hashes)
 
 
-def bloom_merge(*sketches: DataFrame) -> DataFrame:
-    """OR together bloom bit-sets built with the same (n_hashes, n_bits,
-    family): union + distinct. Same semilattice argument as kmv_merge —
-    merge of sketches == sketch of the union (pinned in tests).
-    Identical parameter sentinels dedup to one; a mixed-parameter merge
-    leaves TWO distinct sentinels, which bloom_probe rejects — the
-    merge cannot silently produce an answerable-but-wrong table."""
-    it = iter(sketches)
-    acc = next(it)
-    for s in it:
-        acc = acc.unionByName(s)
-    return acc.distinct()
-
-
 def bloom_probe(
     sketch: DataFrame,
     candidates: DataFrame,

@@ -139,7 +139,7 @@ def train_bpe_merges(
     iteration i re-executes ALL i prior replaces from the persisted
     base (O(n_merges² · vocab) string work — invisible at 12 merges,
     dominant at the production 256–512; measured in
-    tools/bpe_scaling.py). Every C merges the encoded state
+    tools/scaling.py bpe_chain). Every C merges the encoded state
     re-materializes via localCheckpoint, so total replace work is
     O(n_merges · C · vocab) and per-iteration cost stays flat in the
     merge index — the fix that keeps the loop vocabulary-bound, not

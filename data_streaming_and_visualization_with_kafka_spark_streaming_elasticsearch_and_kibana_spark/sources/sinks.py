@@ -115,27 +115,6 @@ def es_bulk_foreach_batch(
 
 
 # ------------------------------------------------------------------ parquet
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Hash-bucketed table (saveAsTable) — joins/aggregations on the
-    bucket columns between co-bucketed tables run WITHOUT a shuffle
-    (Catalyst sees the matching output partitioning). This is the 100 TB
-    co-located-join layout: pay one write-time shuffle, skip it on every
-    subsequent join. Bucket count should be sized so one bucket of the
-    big fact table fits an executor core's working set."""
-    w = df.write.mode("overwrite").format("parquet").bucketBy(
-        num_buckets, *bucket_cols
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table_name)
-
-
 def write_partitioned_parquet(
     df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
 ) -> None:

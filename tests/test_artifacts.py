@@ -142,6 +142,55 @@ def test_code_of_called_helpers_is_in_the_key(store, tmp_path, monkeypatch):
     assert open(os.path.join(p2, "out.txt")).read() == "two!"
 
 
+def test_code_of_helpers_in_sibling_modules_is_in_the_key(
+    store, tmp_path, monkeypatch
+):
+    """A build in one module of a package (a catalog family) that calls
+    a helper of a sibling module (the catalog's shared helpers) keys on
+    that helper too: editing only the helper's body gives a new key."""
+    _, sf = store
+    pkg = tmp_path / "mods" / "artifact_catalog_pkg"
+    pkg.mkdir(parents=True)
+    monkeypatch.syspath_prepend(str(tmp_path / "mods"))
+    (pkg / "__init__.py").write_text("")
+    common = textwrap.dedent(
+        """
+        def helper(path):
+            open(path + "/out.txt", "w").write("{v}")
+        """
+    )
+    (pkg / "_common.py").write_text(common.format(v="one"))
+    (pkg / "ann.py").write_text(
+        textwrap.dedent(
+            """
+            from artifact_catalog_pkg._common import helper
+
+            def build(path):
+                helper(path)
+            """
+        )
+    )
+    names = [
+        "artifact_catalog_pkg",
+        "artifact_catalog_pkg._common",
+        "artifact_catalog_pkg.ann",
+    ]
+    try:
+        ann = importlib.import_module("artifact_catalog_pkg.ann")
+        p1 = fsutil.materialize("c", sf, [], {}, ann.build)
+        (pkg / "_common.py").write_text(common.format(v="two!"))
+        importlib.invalidate_caches()
+        for name in names:
+            sys.modules.pop(name, None)
+        ann = importlib.import_module("artifact_catalog_pkg.ann")
+        p2 = fsutil.materialize("c", sf, [], {}, ann.build)
+    finally:
+        for name in names:
+            sys.modules.pop(name, None)
+    assert p1 != p2
+    assert open(os.path.join(p2, "out.txt")).read() == "two!"
+
+
 def test_failed_build_leaves_nothing_servable(store):
     root, sf = store
 

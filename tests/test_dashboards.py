@@ -46,15 +46,14 @@ def test_date_histogram_panel_with_split(readings):
 
 
 def test_terms_and_metric_panels(readings):
-    dash = dashboards.build_dashboard(
-        readings,
-        {
-            "top_rooms": {"kind": "terms", "key": "room", "k": 1},
-            "totals": {"kind": "metric", "metrics": {"n": F.count("*").alias("n")}},
-        },
+    top_rooms = dashboards.build_panel(
+        readings, {"kind": "terms", "key": "room", "k": 1}
     )
-    assert [(r.room, r.doc_count) for r in dash["top_rooms"].collect()] == [("r1", 3)]
-    assert dash["totals"].first().n == 4
+    totals = dashboards.build_panel(
+        readings, {"kind": "metric", "metrics": {"n": F.count("*").alias("n")}}
+    )
+    assert [(r.room, r.doc_count) for r in top_rooms.collect()] == [("r1", 3)]
+    assert totals.first().n == 4
 
 
 def test_unknown_panel_kind_raises(readings):

@@ -121,15 +121,6 @@ def test_connected_components_long_chain_pointer_jumping(spark):
     assert set(got.values()) == {0} and len(got) == 41
 
 
-def test_dedup_keep_list_survivors(spark):
-    docs = _docs(spark)
-    pairs = spark.createDataFrame([(1, 2), (4, 5)], "id_a BIGINT, id_b BIGINT")
-    out = {r.doc_id: (r.component, r.keep) for r in dedup.dedup_keep_list(docs, pairs).collect()}
-    assert out[1] == (1, True) and out[2] == (1, False)
-    assert out[4] == (4, True) and out[5] == (4, False)
-    assert out[3] == (3, True) and out[6] == (6, True)  # isolated keep themselves
-
-
 def test_simhash_candidates_identical_docs_hamming_zero(spark):
     out = {
         (r.id_a, r.id_b): r.hamming
@@ -447,9 +438,10 @@ def test_dedup_cluster_size_profile_consistent_with_keep_best(spark):
     from collections import Counter
 
     import __spark_entry__ as entrymod
+    from catalog.dedup import q_dedup_keep_best
 
     sf_dir = "/root/testdata/sf0.001"
-    clusters = entrymod.q_dedup_keep_best(spark, sf_dir).collect()
+    clusters = q_dedup_keep_best(spark, sf_dir).collect()
     sizes = Counter(r.n_members for r in clusters)
     total = sum(s * c for s, c in sizes.items())
 

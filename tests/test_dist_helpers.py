@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-import __spark_entry__ as entrymod
+from catalog.stats import _cut_bucket, _dist_cumsum, _dist_rank
 
 
 def _naive_rank(df, key, tie, out):
@@ -39,7 +39,7 @@ def test_dist_rank_matches_naive_window(spark):
     for cuts in ([5.0], [0.0, 5.0, 9.0, 9.0], [2.5, 7.5], [100.0]):
         got = {
             (r.k, r.t): r.rk
-            for r in entrymod._dist_rank(df, "k", "t", "rk", cuts).collect()
+            for r in _dist_rank(df, "k", "t", "rk", cuts).collect()
         }
         want = {
             (r.k, r.t): r.rk
@@ -51,14 +51,14 @@ def test_dist_rank_matches_naive_window(spark):
 def test_dist_rank_precomputed_counts_path(spark):
     df = spark.createDataFrame(ROWS, "k long, t long, v long")
     cuts = [4.0, 8.0]
-    part = df.withColumn("__pid", entrymod._cut_bucket("k", cuts))
+    part = df.withColumn("__pid", _cut_bucket("k", cuts))
     counts = {
         r["__pid"]: r["n"]
         for r in part.groupBy("__pid").agg(F.count("*").alias("n")).collect()
     }
     got = {
         (r.k, r.t): r.rk
-        for r in entrymod._dist_rank(
+        for r in _dist_rank(
             df, "k", "t", "rk", cuts, counts
         ).collect()
     }
@@ -81,7 +81,7 @@ def test_dist_cumsum_matches_naive_window(spark):
     for cuts in ([5.0], [0.0, 5.0, 9.0], [3.0, 6.0, 100.0]):
         got = {
             (r.k, r.t): r.cum_v
-            for r in entrymod._dist_cumsum(
+            for r in _dist_cumsum(
                 df, "k", "t", ["v"], cuts
             ).collect()
         }
@@ -102,7 +102,7 @@ def test_dist_cumsum_multiple_columns(spark):
     want = {(r.k, r.t): (r.cv, r.cw) for r in naive.collect()}
     got = {
         (r.k, r.t): (r.cum_v, r.cum_w)
-        for r in entrymod._dist_cumsum(
+        for r in _dist_cumsum(
             df, "k", "t", ["v", "w"], [4.0, 9.0]
         ).collect()
     }

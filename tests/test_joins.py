@@ -11,12 +11,6 @@ from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_a
     relational,
     temporal,
 )
-from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.plans.explain import (
-    formatted_plan,
-)
-from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.sources.sinks import (
-    write_bucketed_table,
-)
 
 
 def _ts(s):
@@ -87,30 +81,6 @@ def test_salted_join_equivalent_to_plain_join(spark):
         (r.k, r.v, r.tag) for r in left.join(right, ["k"], "left").collect()
     )
     assert left_out == plain_left
-
-
-def test_bucketed_join_is_shuffle_free(spark):
-    facts = spark.createDataFrame(
-        [(i % 10, float(i)) for i in range(1000)], "k BIGINT, v DOUBLE"
-    )
-    dims = spark.createDataFrame(
-        [(i, f"d{i}") for i in range(10)], "k BIGINT, name STRING"
-    )
-    write_bucketed_table(facts, "t_facts", ["k"], 4, sort_cols=["k"])
-    write_bucketed_table(dims, "t_dims", ["k"], 4, sort_cols=["k"])
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        joined = spark.table("t_facts").join(spark.table("t_dims"), "k")
-        plan = formatted_plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "co-bucketed join must not shuffle"
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_facts")
-        spark.sql("DROP TABLE IF EXISTS t_dims")
 
 
 # ----------------------------------------------------- gaps-and-islands

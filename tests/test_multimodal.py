@@ -80,12 +80,6 @@ def test_resize_plan_aspect_preserving_integer_dims(spark):
             assert (r.height, r.width) == (sh, sw)
 
 
-def test_attach_meta_byte_lengths(spark):
-    df = multimodal.attach_meta(_media(spark, [b"12345", None]))
-    got = {r.media_id: r.meta["bytes"] for r in df.collect()}
-    assert got == {0: 5, 1: None}
-
-
 def test_audio_chunk_plan_covers_duration_exactly(spark):
     blobs = [b"clip-a", b"clip-b", b"clip-c"]
     out = multimodal.audio_chunk_plan(_media(spark, blobs), chunk_ms=10_000)

@@ -6,7 +6,30 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-import __spark_entry__ as entrymod
+from catalog.ann import _trained_ivf_index, q_mmr_from_index
+from catalog.inference import (
+    q_bh_fdr_event_shifts,
+    q_changepoint_best_split,
+    q_kaplan_meier_churn,
+    q_spearman_price_date,
+    q_theil_sen_daily_trend,
+)
+from catalog.multimodal import _mih_index, q_image_dhash_search
+from catalog.relational import (
+    q_fusion_minute_avg,
+    q_null_safe_projection,
+    q_order_quartiles,
+    q_pareto_front_orders,
+    q_partition_pruned_scan,
+    q_topk_orders,
+)
+from catalog.sketches import q_bottomk_sample
+from catalog.stats import q_revenue_coverage_counts, q_rfm_segments
+from catalog.tpch import (
+    q_correlated_subquery_q17,
+    q_multiway_join_revenue,
+    q_tpch_q1_pricing_summary,
+)
 from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.plans import (
     explain,
 )
@@ -32,12 +55,12 @@ def test_column_pruning_in_read_schema(spark):
 
 
 def test_multiway_join_broadcasts_dimensions(spark):
-    df = entrymod.q_multiway_join_revenue(spark, SF)
+    df = q_multiway_join_revenue(spark, SF)
     assert explain.has_broadcast_join(df)
 
 
 def test_topk_compiles_to_take_ordered(spark):
-    df = entrymod.q_topk_orders(spark, SF)
+    df = q_topk_orders(spark, SF)
     assert "TakeOrderedAndProject" in explain.formatted_plan(df)
 
 
@@ -46,14 +69,14 @@ def test_fusion_query_is_whole_stage_codegen(spark):
     # codegen annotations until runtime — disable it for the inspection
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        df = entrymod.q_fusion_minute_avg(spark, SF)
+        df = q_fusion_minute_avg(spark, SF)
         assert explain.codegen_stage_count(df) >= 1
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_null_safe_projection_pushes_isnotnull(spark):
-    df = entrymod.q_null_safe_projection(spark, SF)
+    df = q_null_safe_projection(spark, SF)
     plan = explain.formatted_plan(df)
     pushed = plan.split("PushedFilters")[1][:300]
     assert "IsNotNull" in pushed and "GreaterThan" in pushed
@@ -65,7 +88,7 @@ def test_tpch_q1_single_exchange_partial_agg(spark):
     the scan. More exchanges would mean the map-side combine was lost."""
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        df = entrymod.q_tpch_q1_pricing_summary(spark, SF)
+        df = q_tpch_q1_pricing_summary(spark, SF)
         plan = explain.formatted_plan(df)
         # the tree section (before the per-node details) lists each
         # physical node exactly once
@@ -83,7 +106,7 @@ def test_partitioned_scan_prunes_directories(spark):
     become a PartitionFilter on the scan (directory pruning), NOT a
     pushed data filter — at 100 TB that is the difference between
     listing one directory and reading every file."""
-    df = entrymod.q_partition_pruned_scan(spark, SF)
+    df = q_partition_pruned_scan(spark, SF)
     plan = explain.formatted_plan(df)
     part_section = plan.split("PartitionFilters")[1][:200]
     assert "o_orderstatus" in part_section
@@ -97,7 +120,7 @@ def test_correlated_subquery_is_decorrelated(spark):
     """Catalyst must rewrite the scalar subquery into an aggregate+join
     (no per-row subquery execution): the physical plan contains the
     per-partkey aggregate and no Subquery node in the main query path."""
-    df = entrymod.q_correlated_subquery_q17(spark, SF)
+    df = q_correlated_subquery_q17(spark, SF)
     plan = explain.formatted_plan(df)
     assert "avg(l_quantity)" in plan or "avg(l2.l_quantity)" in plan.lower()
     out = df.limit(1).collect()
@@ -131,7 +154,7 @@ def test_order_quartiles_has_no_single_partition_window(spark):
     arithmetic tile) must never funnel the table through a partition-
     less window — the executed plan's Window node is keyed by the range
     bucket and no exchange is SinglePartition."""
-    df = entrymod.q_order_quartiles(spark, SF)
+    df = q_order_quartiles(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan, plan
     window_lines = [l for l in plan.splitlines() if "Window" in l]
@@ -195,7 +218,7 @@ def test_runtime_bloom_filter_prefilters_shuffle_join(spark):
 
 
 def test_bottomk_sample_compiles_to_take_ordered(spark):
-    df = entrymod.q_bottomk_sample(spark, SF)
+    df = q_bottomk_sample(spark, SF)
     assert "TakeOrderedAndProject" in explain.formatted_plan(df)
 
 
@@ -237,7 +260,7 @@ def test_cms_estimate_broadcasts_grid(spark):
 def test_pareto_front_has_no_single_partition_window(spark):
     # the skyline rewrite must keep its running-max window partitioned
     # by the price bucket — never the whole-table WindowExec
-    df = entrymod.q_pareto_front_orders(spark, SF)
+    df = q_pareto_front_orders(spark, SF)
     plan = explain.formatted_plan(df)
     assert "Window" in plan
     import re
@@ -255,7 +278,7 @@ def test_rfm_segments_has_no_single_partition_window(spark):
     # whole-table "No Partition Defined" WindowExec
     import re
 
-    df = entrymod.q_rfm_segments(spark, SF)
+    df = q_rfm_segments(spark, SF)
     plan = explain.formatted_plan(df)
     specs = re.findall(
         r"windowspecdefinition\(([^)]*)\)", plan
@@ -302,6 +325,7 @@ def test_no_hard_broadcast_on_unbounded_count_tables():
     import re
 
     import __spark_entry__ as em
+    from catalog.stats import q_market_basket_rules
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators import (
         dedup,
     )
@@ -314,7 +338,7 @@ def test_no_hard_broadcast_on_unbounded_count_tables():
         hit = forbidden.search(src)
         assert hit is None, f"hard broadcast on count table: {hit.group(0)}"
     # and market_basket's only hint is the 1-row n_orders aggregate
-    src = inspect.getsource(em.q_market_basket_rules)
+    src = inspect.getsource(q_market_basket_rules)
     hints = re.findall(r"F\.broadcast\((\w+)", src)
     assert hints == ["n"], hints
 
@@ -328,11 +352,11 @@ def test_r8_rank_machinery_queries_have_no_global_window(spark):
     import re
 
     for q in (
-        entrymod.q_spearman_price_date,
-        entrymod.q_kaplan_meier_churn,
-        entrymod.q_revenue_coverage_counts,
-        entrymod.q_theil_sen_daily_trend,
-        entrymod.q_changepoint_best_split,
+        q_spearman_price_date,
+        q_kaplan_meier_churn,
+        q_revenue_coverage_counts,
+        q_theil_sen_daily_trend,
+        q_changepoint_best_split,
     ):
         plan = explain.formatted_plan(q(spark, SF))
         for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", plan):
@@ -375,14 +399,14 @@ def test_bh_fdr_events_scanned_once_behind_checkpoint(spark):
     import re
 
     plan = explain.formatted_plan(
-        entrymod.q_bh_fdr_event_shifts(spark, SF)
+        q_bh_fdr_event_shifts(spark, SF)
     )
     assert len(re.findall(r"Scan parquet", plan)) == 0, plan
     assert "ExistingRDD" in plan
     assert "windowspecdefinition" not in plan, plan
     import inspect
 
-    src = inspect.getsource(entrymod.q_bh_fdr_event_shifts)
+    src = inspect.getsource(q_bh_fdr_event_shifts)
     assert "localCheckpoint" in src
 
 
@@ -397,7 +421,7 @@ def test_wedge_family_is_degree_oriented_or_block_decomposed():
     # same class as the no-hard-broadcast guard above.
     import inspect
 
-    import __spark_entry__ as em
+    from catalog.graph import q_link_prediction_cn
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators import (
         graph,
     )
@@ -415,7 +439,7 @@ def test_wedge_family_is_degree_oriented_or_block_decomposed():
         assert 'join(e2, "w_a")' not in src, (
             f"{fn.__name__} regressed to the id-oriented wedge self-join"
         )
-    src = inspect.getsource(em.q_link_prediction_cn)
+    src = inspect.getsource(q_link_prediction_cn)
     assert "common_neighbor_counts" in src, (
         "link prediction bypasses the block-decomposed CN census"
     )
@@ -432,8 +456,8 @@ def test_mmr_from_index_probe_is_partition_pruned(spark):
     (cid isin(...) over that layout) must prune directories — a
     PartitionFilter on the scan, not a post-scan data filter. At
     100 TB this is the O(n·nprobe/k) vs O(n) difference."""
-    entrymod.q_mmr_from_index(spark, SF).collect()
-    index_path, _, _ = entrymod._trained_ivf_index(spark, SF)
+    q_mmr_from_index(spark, SF).collect()
+    index_path, _, _ = _trained_ivf_index(spark, SF)
     pruned = spark.read.parquet(index_path).filter(F.col("cid").isin([0, 1]))
     plan = explain.formatted_plan(pruned)
     part_section = plan.split("PartitionFilters")[1][:200]
@@ -449,8 +473,8 @@ def test_mih_probe_is_partition_pruned(spark):
     exists for."""
     import os
 
-    entrymod.q_image_dhash_search(spark, SF).collect()
-    index_path = entrymod._mih_index(spark, SF)
+    q_image_dhash_search(spark, SF).collect()
+    index_path = _mih_index(spark, SF)
     probed = spark.read.parquet(
         os.path.join(index_path, "table0")
     ).filter(F.col("cb") == 3)

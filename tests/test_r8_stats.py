@@ -11,7 +11,13 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-import __spark_entry__ as em
+from catalog.dedup import q_containment_dup_pairs
+from catalog.inference import (
+    q_kaplan_meier_churn,
+    q_spearman_price_date,
+    q_theil_sen_daily_trend,
+    q_welch_t_test,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -25,7 +31,7 @@ def _events() -> pd.DataFrame:
 
 
 def test_spearman_matches_pandas(spark):
-    row = em.q_spearman_price_date(spark, SF).collect()[0]
+    row = q_spearman_price_date(spark, SF).collect()[0]
     o = _orders()
     cents = (o["o_totalprice"] * 100).round().astype("int64")
     dv = (
@@ -45,7 +51,7 @@ def test_spearman_matches_pandas(spark):
 
 
 def test_kaplan_meier_matches_pandas(spark):
-    rows = em.q_kaplan_meier_churn(spark, SF).collect()
+    rows = q_kaplan_meier_churn(spark, SF).collect()
     ev = _events()
     sec = ev["ts"].astype("datetime64[ns]").astype("int64") // 10**9
     days = sec // 86400
@@ -73,7 +79,7 @@ def test_kaplan_meier_matches_pandas(spark):
 
 
 def test_theil_sen_matches_numpy(spark):
-    row = em.q_theil_sen_daily_trend(spark, SF).collect()[0]
+    row = q_theil_sen_daily_trend(spark, SF).collect()[0]
     ev = _events()
     sec = ev["ts"].astype("datetime64[ns]").astype("int64") // 10**9
     days = (sec // 86400).astype("int64")
@@ -96,7 +102,7 @@ def test_theil_sen_matches_numpy(spark):
 
 
 def test_welch_matches_numpy(spark):
-    row = em.q_welch_t_test(spark, SF).collect()[0]
+    row = q_welch_t_test(spark, SF).collect()[0]
     ev = _events()
     p = ev[ev["event_type"] == "purchase"].copy()
     x = (p["value"] * 100).round().astype("int64").to_numpy()
@@ -112,7 +118,7 @@ def test_welch_matches_numpy(spark):
 
 
 def test_containment_pairs_are_all_true_positives(spark):
-    rows = em.q_containment_dup_pairs(spark, SF).collect()
+    rows = q_containment_dup_pairs(spark, SF).collect()
     docs = pd.read_parquet(f"{SF}/documents.parquet").set_index("doc_id")
 
     def shingles(text: str) -> set:

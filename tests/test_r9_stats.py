@@ -13,7 +13,8 @@ import math
 import numpy as np
 import pandas as pd
 
-import __spark_entry__ as em
+from catalog.ann import _SEMDEDUP_K_MAX, _semdedup_k, q_semantic_dedup_keep_best
+from catalog.inference import q_bh_fdr_event_shifts, q_psi_value_drift
 
 SF = "/root/testdata/sf0.001"
 
@@ -36,7 +37,7 @@ def _welch_z(x1: np.ndarray, x2: np.ndarray) -> float:
 
 
 def test_bh_fdr_matches_numpy(spark):
-    rows = em.q_bh_fdr_event_shifts(spark, SF).collect()
+    rows = q_bh_fdr_event_shifts(spark, SF).collect()
     ev = _events()
     ev = ev[ev["value"].notna()]
     sec, mid = _epoch_and_mid(ev)
@@ -75,7 +76,7 @@ def test_bh_fdr_matches_numpy(spark):
 
 
 def test_psi_matches_numpy(spark):
-    rows = em.q_psi_value_drift(spark, SF).collect()
+    rows = q_psi_value_drift(spark, SF).collect()
     ev = _events()
     ev = ev[ev["value"].notna()].copy()
     sec, mid = _epoch_and_mid(ev)
@@ -124,17 +125,17 @@ def test_semantic_dedup_matches_numpy(spark):
         similarity,
     )
 
-    rows = em.q_semantic_dedup_keep_best(spark, SF).collect()
+    rows = q_semantic_dedup_keep_best(spark, SF).collect()
     emb = pd.read_parquet(f"{SF}/embeddings.parquet")
     v = np.asarray(emb["embedding"].tolist(), dtype=np.float64)
     ids = emb["vec_id"].to_numpy()
     # k derives from the TOTAL corpus rowcount (pre-filter), exactly as
     # the query does via emb.count()
-    k = em._semdedup_k(len(emb))
+    k = _semdedup_k(len(emb))
     nz = (v * v).sum(axis=1) > 0
     v, ids = v[nz], ids[nz]
     cents = similarity.make_unit_planes(
-        dim=64, n_planes=em._SEMDEDUP_K_MAX, seed=777
+        dim=64, n_planes=_SEMDEDUP_K_MAX, seed=777
     )[:k]
     cn = (cents**2).sum(axis=1)
     d = cn[None, :] - 2.0 * (v @ cents.T)

@@ -188,9 +188,9 @@ def test_hll_sketch_rollup_merge_and_accuracy(spark):
 
     # the query's global row == direct sketch over all events (merge of
     # the daily sketches is lossless)
-    import __spark_entry__ as entrymod
+    from catalog.sketches import q_sketch_distinct_rollup
 
-    rows = entrymod.q_sketch_distinct_rollup(
+    rows = q_sketch_distinct_rollup(
         spark, "/root/testdata/sf0.001"
     ).collect()
     total = [r.est_users for r in rows if r.day is None]

@@ -220,6 +220,7 @@ def test_mixture_epoch_schedule_laws(spark):
     import math
 
     import __spark_entry__ as entrymod
+    from catalog.tokenizer import _bpe_trained
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.operators import (  # noqa: E501
         tokenizer,
     )
@@ -232,7 +233,7 @@ def test_mixture_epoch_schedule_laws(spark):
         ).collect()
     }
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    _, final_state = entrymod._bpe_trained(spark, sf_dir)
+    _, final_state = _bpe_trained(spark, sf_dir)
     per_doc = tokenizer.doc_token_counts(
         docs, tokenizer.token_dict(final_state)
     )

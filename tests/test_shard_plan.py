@@ -69,7 +69,7 @@ def test_doc_coverage_matches_independent_survivor_set(spark, manifest):
     keep-first → tokenizable)."""
     from pyspark.sql import functions as F
 
-    import __spark_entry__ as entrymod
+    from catalog.tokenizer import _bpe_trained
     from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.functions import (
         text as textf,
     )
@@ -107,7 +107,7 @@ def test_doc_coverage_matches_independent_survivor_set(spark, manifest):
         tokenizer,
     )
 
-    _, final_state = entrymod._bpe_trained(spark, SF_DIR)
+    _, final_state = _bpe_trained(spark, SF_DIR)
     counts = tokenizer.doc_token_counts(
         keep_first.join(scrubbed.select("doc_id", "text"), "doc_id"),
         tokenizer.token_dict(final_state),

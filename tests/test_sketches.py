@@ -180,16 +180,6 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
     assert fp <= 15, fp
 
 
-def test_bloom_merge_equals_whole(spark):
-    rows = [f"k{i}" for i in range(400)]
-    a = sketches.bloom_build(_keyed(spark, rows[:150]), "k", 4, 2048)
-    b = sketches.bloom_build(_keyed(spark, rows[150:]), "k", 4, 2048)
-    merged = sketches.bloom_merge(a, b)
-    whole = sketches.bloom_build(_keyed(spark, rows), "k", 4, 2048)
-    diff = merged.exceptAll(whole).count() + whole.exceptAll(merged).count()
-    assert diff == 0
-
-
 def test_bloom_state_is_bounded(spark):
     df = _keyed(spark, [f"key{i}" for i in range(50000)])
     sk = sketches.bloom_build(df, "k", n_hashes=4, n_bits=1024)
@@ -228,9 +218,10 @@ def test_bloom_probe_rejects_mismatched_parameters(spark):
     legacy = sk.filter(F.col("bit") >= 0)
     with pytest.raises(Exception, match="parameter mismatch"):
         sketches.bloom_probe(legacy, probe, "k", 4, 2048).collect()
-    # mixed-parameter merge leaves two sentinels -> rejected
+    # a union of tables built with different parameters carries two
+    # sentinels -> rejected
     other = sketches.bloom_build(members, "k", n_hashes=4, n_bits=4096)
-    mixed = sketches.bloom_merge(sk, other)
+    mixed = sk.unionByName(other).distinct()
     with pytest.raises(Exception, match="parameter mismatch"):
         sketches.bloom_probe(mixed, probe, "k", 4, 2048).collect()
 

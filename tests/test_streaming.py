@@ -436,10 +436,10 @@ def test_streaming_left_outer_join_flushes_tail_nulls(spark):
     can only emit their NULL row if something later advances the
     watermark — the sentinel mechanism must flush ALL of them, so the
     streaming result equals the batch left interval join exactly."""
-    import __spark_entry__ as em
+    from catalog.streaming import q_streaming_left_outer_join
 
     sf = "/root/testdata/sf0.001"
-    got = em.q_streaming_left_outer_join(spark, sf)
+    got = q_streaming_left_outer_join(spark, sf)
     ev = spark.read.parquet(f"{sf}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
@@ -485,9 +485,9 @@ def test_streaming_left_outer_join_flushes_tail_nulls(spark):
 
 
 def test_kaplan_meier_survival_is_monotone_nonincreasing(spark):
-    import __spark_entry__ as em
+    from catalog.inference import q_kaplan_meier_churn
 
-    rows = em.q_kaplan_meier_churn(spark, "/root/testdata/sf0.001").collect()
+    rows = q_kaplan_meier_churn(spark, "/root/testdata/sf0.001").collect()
     assert rows, "expected at least one lifetime row"
     s = [r.s_micro for r in rows]
     assert all(a >= b for a, b in zip(s, s[1:]))
@@ -504,7 +504,7 @@ def test_stage_stream_files_handles_directory_tables(spark, tmp_path):
     helper links part files flat. A flat single-file table still works."""
     import os
 
-    import __spark_entry__ as em
+    from catalog.streaming import _stage_stream_files
 
     src = str(tmp_path / "tbl.parquet")
     spark.range(100).selectExpr("id", "id * 2 AS v").coalesce(
@@ -513,7 +513,7 @@ def test_stage_stream_files_handles_directory_tables(spark, tmp_path):
     assert os.path.isdir(src)
     stage = str(tmp_path / "stage")
     os.makedirs(stage)
-    em._stage_stream_files(stage, src, "tbl")
+    _stage_stream_files(stage, src, "tbl")
     flat = [f for f in os.listdir(stage) if f.endswith(".parquet")]
     assert len(flat) >= 2 and all(
         not os.path.isdir(os.path.join(stage, f)) or os.path.islink(

@@ -97,44 +97,6 @@ def test_normalize_text_urls_case_whitespace(spark):
     assert out == "see now please"
 
 
-def test_winnow_selected_positions_match_reference(spark):
-    """Winnowing parity: for BOTH hash families (xxhash64 production,
-    md5_prefix oracle) the selected (position, fingerprint) pairs and
-    the distinct min values must equal an independent Python reference
-    computed from the same collected gram hashes — pinning that the
-    fast path selects exactly the positions the verified mechanism
-    selects, regardless of hash family."""
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "abcdefghijklmnopqrstuvwxyz"),
-            (3, "aaaaaaaaaaaaaaaaaaaa"),
-            (4, "short"),
-            (5, "winnowing guarantees shared substrings share fingerprints"),
-        ],
-        "doc_id long, text string",
-    )
-    for family in ("xxhash64", "md5_prefix"):
-        grams = textf.char_gram_hashes("text", 8, family)
-        rows = docs.select(
-            "doc_id",
-            grams.alias("g"),
-            textf.winnow_selected(grams, 6).alias("sel"),
-            textf.winnow_mins(grams, 6).alias("mins"),
-        ).collect()
-        for r in rows:
-            g = list(r.g)
-            ref = []
-            for j in range(max(len(g) - 5, 1)):
-                win = g[j : j + 6]
-                mn = min(win)
-                ref.append((j + win.index(mn) + 1, mn))  # 1-based leftmost
-            ref = list(dict.fromkeys(ref))
-            assert [(s.pos, s.fp) for s in r.sel] == ref, (family, r.doc_id)
-            mins_ref = list(dict.fromkeys(mn for _, mn in ref))
-            assert list(r.mins) == mins_ref, (family, r.doc_id)
-
-
 def test_winnowing_fast_query_same_shape_as_md5_twin(spark):
     """The xxhash64 production query must emit the same docs and a
     comparable fingerprint density as the oracle-green md5 twin (values
@@ -143,8 +105,8 @@ def test_winnowing_fast_query_same_shape_as_md5_twin(spark):
     import __spark_entry__ as entrymod
 
     sf = "/root/testdata/sf0.001"
-    fast = entrymod.QUERIES["winnowing_fingerprints_fast"](spark, sf)
-    slow = entrymod.QUERIES["winnowing_fingerprints"](spark, sf)
+    fast = entrymod.queries()["winnowing_fingerprints_fast"](spark, sf)
+    slow = entrymod.queries()["winnowing_fingerprints"](spark, sf)
     f_docs = {r.doc_id: r.n for r in fast.groupBy("doc_id").count().withColumnRenamed("count", "n").collect()}
     s_docs = {r.doc_id: r.n for r in slow.groupBy("doc_id").count().withColumnRenamed("count", "n").collect()}
     assert set(f_docs) == set(s_docs)
@@ -155,40 +117,6 @@ def test_winnowing_fast_query_same_shape_as_md5_twin(spark):
     assert abs(total_f - total_s) / total_s < 0.10, (total_f, total_s)
     for d in f_docs:
         assert 0.4 <= f_docs[d] / s_docs[d] <= 2.5, (d, f_docs[d], s_docs[d])
-
-
-def test_chunk_udtf_matches_expression_formulation(spark):
-    """The Python UDTF chunker (API-surface demonstration) must produce
-    row-for-row what the production JVM-expression chunking
-    (q_doc_chunks) produces — same windows, same hashes — so the
-    imperative and declarative formulations are interchangeable and
-    the fast one can always be substituted."""
-    import __spark_entry__ as entrymod
-    from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_and_kibana_spark.functions.udtfs import (
-        ChunkTextUdtf,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    expr = sorted(
-        map(tuple, entrymod.q_doc_chunks(spark, sf).collect())
-    )
-    spark.udtf.register("chunk_text_udtf", ChunkTextUdtf)
-    entrymod._t(spark, sf, "documents").createOrReplaceTempView(
-        "v_docs_udtf"
-    )
-    got = sorted(
-        map(
-            tuple,
-            spark.sql(
-                """
-                SELECT d.doc_id, c.chunk_idx, c.chunk_len, c.chunk_hash
-                FROM v_docs_udtf d,
-                     LATERAL chunk_text_udtf(d.text) c
-                """
-            ).collect(),
-        )
-    )
-    assert got == expr and len(got) > 500
 
 
 def test_extract_domains_and_registered_domain(spark):
@@ -220,22 +148,6 @@ def test_extract_domains_and_registered_domain(spark):
         .b
     )
     assert base == ["example.com", "a.org", "co.uk"]
-
-
-def test_char_trigrams_walk_and_short_text(spark):
-    df = spark.createDataFrame(
-        [(1, "Hello ab"), (2, "ab"), (3, "   "), (4, "abc")],
-        "doc_id long, text string",
-    )
-    got = {
-        r.doc_id: r.g
-        for r in df.select(
-            "doc_id", textf.char_trigrams("text").alias("g")
-        ).collect()
-    }
-    assert got[1] == ["hel", "ell", "llo", "lo ", "o a", " ab"]
-    assert got[2] == [] and got[3] == []
-    assert got[4] == ["abc"]
 
 
 def test_vocab_growth_zipf_profile_matches_python_reference(spark, tmp_path):

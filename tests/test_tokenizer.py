@@ -244,19 +244,22 @@ def test_bpe_trained_artifact_invalidates_on_merge_depth_change(
     a tokenizer-source digest: bumping the depth must retrain (deeper
     merge table), and restoring it must retrain AGAIN rather than serve
     the deeper state."""
-    import __spark_entry__ as entrymod
+    from catalog import tokenizer as catalog_tokenizer
+    from catalog.tokenizer import _bpe_trained
 
     sf_dir = "/root/testdata/sf0.001"
-    merges, _ = entrymod._bpe_trained(spark, sf_dir)
-    assert merges.count() == entrymod._BPE_MERGES
+    merges, _ = _bpe_trained(spark, sf_dir)
+    assert merges.count() == catalog_tokenizer._BPE_MERGES
 
-    monkeypatch.setattr(entrymod, "_BPE_MERGES", entrymod._BPE_MERGES + 1)
-    deeper, _ = entrymod._bpe_trained(spark, sf_dir)
-    assert deeper.count() == entrymod._BPE_MERGES  # retrained, not stale
+    monkeypatch.setattr(
+        catalog_tokenizer, "_BPE_MERGES", catalog_tokenizer._BPE_MERGES + 1
+    )
+    deeper, _ = _bpe_trained(spark, sf_dir)
+    assert deeper.count() == catalog_tokenizer._BPE_MERGES  # retrained, not stale
 
     monkeypatch.undo()
-    back, _ = entrymod._bpe_trained(spark, sf_dir)
-    assert back.count() == entrymod._BPE_MERGES
+    back, _ = _bpe_trained(spark, sf_dir)
+    assert back.count() == catalog_tokenizer._BPE_MERGES
 
 
 def test_streaming_token_budget_follows_a_retrained_dictionary(
@@ -271,20 +274,22 @@ def test_streaming_token_budget_follows_a_retrained_dictionary(
     build does not replace the shared ones other processes read."""
     import tempfile
 
-    import __spark_entry__ as entrymod
+    from catalog import tokenizer as catalog_tokenizer
+    from catalog._common import _t
+    from catalog.tokenizer import q_bpe_token_counts, q_streaming_token_budget
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     sf_dir = "/root/testdata/sf0.001"
 
     def stream_totals():
-        rows = entrymod.q_streaming_token_budget(spark, sf_dir).collect()
+        rows = q_streaming_token_budget(spark, sf_dir).collect()
         return {r["source"]: r["n_tokens"] for r in rows}
 
     def batch_totals():
-        docs = entrymod._t(spark, sf_dir, "documents").select(
+        docs = _t(spark, sf_dir, "documents").select(
             "doc_id", "source"
         )
-        counts = entrymod.q_bpe_token_counts(spark, sf_dir)
+        counts = q_bpe_token_counts(spark, sf_dir)
         rows = (
             counts.join(docs, "doc_id")
             .groupBy("source")
@@ -296,7 +301,9 @@ def test_streaming_token_budget_follows_a_retrained_dictionary(
     shallow = stream_totals()  # warms every memoized artifact
     assert shallow == batch_totals()
 
-    monkeypatch.setattr(entrymod, "_BPE_MERGES", entrymod._BPE_MERGES + 1)
+    monkeypatch.setattr(
+        catalog_tokenizer, "_BPE_MERGES", catalog_tokenizer._BPE_MERGES + 1
+    )
     deeper = stream_totals()
     assert deeper == batch_totals()
     assert deeper != shallow  # one merge more: fewer tokens somewhere
@@ -311,6 +318,7 @@ def test_fertility_report_consistent_with_doc_counts(spark):
     chars/token >= 1e6 (every token is >= 1 char); the language token
     shares sum to 1e6 up to |langs| floor-truncations."""
     import __spark_entry__ as entrymod
+    from catalog.tokenizer import _bpe_trained
 
     sf_dir = "/root/testdata/sf0.001"
     got = {
@@ -320,7 +328,7 @@ def test_fertility_report_consistent_with_doc_counts(spark):
         ).collect()
     }
 
-    _, final_state = entrymod._bpe_trained(spark, sf_dir)
+    _, final_state = _bpe_trained(spark, sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     per_doc = tokenizer.doc_token_counts(
         docs, tokenizer.token_dict(final_state)

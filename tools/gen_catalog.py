@@ -279,11 +279,12 @@ def render() -> str:
         "| # | query | oracle | bench | what it does |",
         "|---|---|---|---|---|",
     ]
-    for i, (name, fn) in enumerate(entrymod.QUERIES.items(), 1):
+    qs = entrymod.queries()
+    for i, (name, fn) in enumerate(qs.items(), 1):
         orc = "yes" if name in oracles else "rows-only"
         hb = "yes" if name in bench.HEADLINE else ""
         lines.append(f"| {i} | `{name}` | {orc} | {hb} | {summary(fn)} |")
-    n = len(entrymod.QUERIES)
+    n = len(qs)
     no = len(oracles)
     lines += [
         "",
