@@ -19,10 +19,11 @@ from data_streaming_and_visualization_with_kafka_spark_streaming_elasticsearch_a
     ensure_min_parallelism,
 )
 
+import catalog.tokenizer as catalog_tokenizer
 from catalog import query
 from catalog._common import _NORM_TEXT, _q, _sql_q, _t, _WS_TOKENS
 from catalog.dedup import _DEDUP_KEEP_BEST_SQL, q_dedup_keep_best
-from catalog.tokenizer import _BPE_MERGES, _bpe_train_ctes, _bpe_trained
+from catalog.tokenizer import _bpe_train_ctes, _bpe_trained
 
 
 #: stratified split rates used by q_stratified_split / its oracle twin
@@ -776,7 +777,7 @@ def _pretrain_shard_plan_oracle_sql() -> str:
                         CAST(len(string_split(
                             substring(enc, 2, length(enc) - 2),
                             ')(')) AS BIGINT) AS tok_n
-                 FROM v{_BPE_MERGES}),
+                 FROM v{catalog_tokenizer._BPE_MERGES}),
         scr_w AS (
             SELECT doc_id,
                    string_split_regex(lower(trim(text)), '\\s+') AS words
@@ -1206,7 +1207,7 @@ def _tokenizer_fertility_oracle_sql() -> str:
                         CAST(len(string_split(
                             substring(enc, 2, length(enc) - 2),
                             ')(')) AS BIGINT) AS tok_n
-                 FROM v{_BPE_MERGES}),
+                 FROM v{catalog_tokenizer._BPE_MERGES}),
         lw AS (SELECT lang, word, CAST(COUNT(*) AS BIGINT) AS cnt
                FROM (SELECT lang,
                             unnest(string_split_regex(lower(text),
@@ -1548,7 +1549,7 @@ def _mixture_epoch_oracle_sql() -> str:
                         CAST(len(string_split(
                             substring(enc, 2, length(enc) - 2),
                             ')(')) AS BIGINT) AS tok_n
-                 FROM v{_BPE_MERGES}),
+                 FROM v{catalog_tokenizer._BPE_MERGES}),
         sw AS (SELECT source, word, CAST(COUNT(*) AS BIGINT) AS cnt
                FROM (SELECT source,
                             unnest(string_split_regex(lower(text),

@@ -233,10 +233,14 @@ _KEPT_WITHOUT_CALLER = {
     "logbucket_merge",
     # the streaming-progress listener the per-query profile reads
     "ProgressRecorder",
-    # still to decide (delete, or have a query call it in place of its
-    # own code): the next survey candidates
+    # the reference producer's full shuffle before replay (O1,
+    # `sample(frac=1)` in dataframe_to_kafka.py), beside its throttle
+    # above, and the partition-local form its docstring sends
+    # scale callers to
     "shuffled",
     "shuffled_within_partitions",
+    # the pixel path of `resize_plan` (which multimodal queries call):
+    # its test holds the plan's target shape equal to a real resample
     "resize_images",
 }
 

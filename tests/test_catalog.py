@@ -58,3 +58,25 @@ def test_entry_module_exports_only_the_contract():
     assert leaked == []
     for name in ("entry", "queries", "oracle_sql"):
         assert callable(getattr(entrymod, name))
+
+
+def test_bpe_twins_read_the_view_the_training_ends_on(monkeypatch):
+    """The merge depth is decided in catalog.tokenizer alone: at any
+    depth, a twin that reads the trained BPE state after the shared
+    training CTEs reads their last view, wherever the twin lives."""
+    import re
+
+    import catalog.tokenizer as tok
+
+    registry = catalog.load()
+    monkeypatch.setattr(tok, "_BPE_MERGES", tok._BPE_MERGES + 1)
+    ctes = tok._bpe_train_ctes()
+    readers = {}
+    for name, (_, oracle) in registry.items():
+        sql = oracle() if callable(oracle) else oracle
+        if sql and ctes in sql:
+            readers[name] = re.findall(r"FROM v(\d+)\b", sql.replace(ctes, ""))
+    assert len(readers) >= 9, sorted(readers)
+    stale = {n: v for n, v in readers.items() if set(v) - {str(tok._BPE_MERGES)}}
+    assert stale == {}
+    assert sum(1 for v in readers.values() if v) >= 8

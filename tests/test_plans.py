@@ -320,8 +320,11 @@ def test_no_hard_broadcast_on_unbounded_count_tables():
     # key domain (per-part counts, vocabulary df counts, per-doc counts)
     # must never carry a hard F.broadcast hint — AQE decides while the
     # table is small; a hard hint OOMs once the catalog/vocab grows.
-    # Source-level grep across the engine entry and the dedup operators.
+    # Source-level grep across the entry module, every catalog module
+    # and the dedup operators.
+    import glob
     import inspect
+    import os
     import re
 
     import __spark_entry__ as em
@@ -330,13 +333,20 @@ def test_no_hard_broadcast_on_unbounded_count_tables():
         dedup,
     )
 
+    here = os.path.dirname(os.path.abspath(em.__file__))
+    catalog_files = sorted(glob.glob(os.path.join(here, "catalog", "*.py")))
+    assert len(catalog_files) > 1, "no catalog modules found"
     forbidden = re.compile(
         r"F\.broadcast\(\s*(per_part|per_doc_df|vocab|dfreq_tbl|df_counts)"
     )
-    for mod in (em, dedup):
-        src = inspect.getsource(mod)
+    for path in [em.__file__, dedup.__file__] + catalog_files:
+        with open(path) as f:
+            src = f.read()
         hit = forbidden.search(src)
-        assert hit is None, f"hard broadcast on count table: {hit.group(0)}"
+        assert hit is None, (
+            f"hard broadcast on count table in {os.path.basename(path)}: "
+            f"{hit.group(0)}"
+        )
     # and market_basket's only hint is the 1-row n_orders aggregate
     src = inspect.getsource(q_market_basket_rules)
     hints = re.findall(r"F\.broadcast\((\w+)", src)
